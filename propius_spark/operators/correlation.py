@@ -44,8 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-from ..plans import materialize as _persist  # shared plan-flattening helper
+from ..plans import materialize
 
 
 def context_count(cells: DataFrame) -> DataFrame:
@@ -189,8 +188,8 @@ def corr_pairs(
     orders of magnitude smaller than the event log — makes it one scan.
     """
     if stats is None:
-        cells = _persist(cells, compact=False)
-        stats = _persist(valid_item_stats(cells))
+        cells = materialize(cells, compact=False)
+        stats = materialize(valid_item_stats(cells))
     if g is None:
         g = gram(cells, stats, max_context_degree)
     # n as a plan literal from the one-probe scalar fetch — the old
@@ -245,7 +244,7 @@ def _rank_gap_extremes(
     # materialized: three consumers (rb under taken, the self-rank
     # union, both tmaps) would otherwise each re-sort the item
     # dimension — item-cardinality, so it stores safely at any scale
-    ranked = _persist(
+    ranked = materialize(
         stats.select(
             "item_id",
             "t",
@@ -349,10 +348,10 @@ def neighbor_stats(
         # mirror corr_pairs: cells feed four consumers here (item
         # stats, context count, both gram sides) — unpersisted, the
         # full upstream event-log plan replays once per consumer
-        cells = _persist(cells, compact=False)
-        stats = _persist(valid_item_stats(cells))
+        cells = materialize(cells, compact=False)
+        stats = materialize(valid_item_stats(cells))
     if g is None:
-        g = _persist(gram(cells, stats, max_context_degree))
+        g = materialize(gram(cells, stats, max_context_degree))
     # all four global scalars (n, v, Σt, Σt²) in ONE probe over the
     # persisted stats (or a caller's shared probe row via `scalars`),
     # embedded as plan literals — replaces the n1/gl/v_df 1-row

@@ -37,7 +37,7 @@ path's design, see minhash_lsh_pairs).
 
 from __future__ import annotations
 
-import os
+import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -55,6 +55,9 @@ MINHASH_PRIME = 2_147_483_647
 # silently sorting an unbounded dictionary on a single core — switch
 # to id_mode='xxhash' (stateless, no dictionary) at that scale
 DICT_RANK_MAX = 10_000_000
+# ceiling on waiting for a materialized edge table's observed
+# fingerprint (see _observed_fingerprint)
+OBSERVATION_WAIT_S = 10.0
 MINHASH_A = [
     2654435761, 2246822519, 3266489917, 668265263, 374761393, 3141592653,
     2718281829, 1597334677, 2869860233, 1120485391, 2099109841, 1327217885,
@@ -362,30 +365,17 @@ def minhash_lsh_pairs(
     # ONE bucket-size pass serves both the drop cap and the sub-split
     # sizing (the cap filter keeps whole buckets, so the pre-filter
     # count IS the post-filter count) — as a count WINDOW over
-    # partitionBy(band, sig), not the old groupBy + self-join back:
-    # the aggregate's partial-agg exchange and the join-side exchange
-    # had different subplans, so the banded table shuffled TWICE on
-    # the same key plus a join, replayed once per candidate join side
-    # (round 9; the same two-exchange pattern the CC rounds had). The
-    # checkpoint moves from band_sig to the post-cap post-split
-    # sub_rows, so each candidate join side is a narrow explode over
-    # checkpoint blocks and the signature pipeline still runs once.
-    # PROPIUS_LSH_JOIN_SIZING=1 restores the old groupBy+join sizing
-    # over a checkpointed band_sig (result-identical twin for
-    # interleaved A/Bs, same protocol as PROPIUS_CC_JOIN_ROUNDS)
-    if os.environ.get("PROPIUS_LSH_JOIN_SIZING") == "1":
-        band_sig = materialize(band_sig)
-        bucket_sizes = band_sig.groupBy("band", "sig").agg(
-            F.count(F.lit(1)).alias("_bs")
-        )
-        if max_bucket_size is not None:
-            bucket_sizes = bucket_sizes.filter(F.col("_bs") <= max_bucket_size)
-        sized = band_sig.join(bucket_sizes, ["band", "sig"])
-    else:
-        wband = Window.partitionBy("band", "sig")
-        sized = band_sig.withColumn("_bs", F.count(F.lit(1)).over(wband))
-        if max_bucket_size is not None:
-            sized = sized.filter(F.col("_bs") <= max_bucket_size)
+    # partitionBy(band, sig), not a groupBy + self-join back: the
+    # aggregate's partial-agg exchange and the join-side exchange have
+    # different subplans, so the banded table would shuffle TWICE on
+    # the same key plus a join, replayed once per candidate join side.
+    # The checkpoint sits on the post-cap post-split sub_rows, so each
+    # candidate join side is a narrow explode over checkpoint blocks
+    # and the signature pipeline runs once.
+    wband = Window.partitionBy("band", "sig")
+    sized = band_sig.withColumn("_bs", F.count(F.lit(1)).over(wband))
+    if max_bucket_size is not None:
+        sized = sized.filter(F.col("_bs") <= max_bucket_size)
     # sub-split the surviving buckets (docstring): nb sub-blocks per
     # bucket, candidate join keyed on (band, sig, pa, pb). A doc in
     # sub-block s enters side A for every group (s, j ≥ s) and side B
@@ -452,19 +442,25 @@ def _observed_fingerprint(e: DataFrame):
     so inequality is PROOF of change (the cheap direction the
     convergence loop needs).
 
-    Attached as OBSERVED metrics (round 9) so the fingerprint rides
-    the SAME action that materializes the edge table — the old
-    separate `.first()` probe was one whole scheduled job per
-    checkpoint wave (7 jobs per clusters query at the gate SFs).
-    Safe as an observation precisely because both aggregates are
-    exact-integer and order-invariant (count; XOR is commutative/
-    associative), so the completion-order partial merge of the metrics
-    accumulator is bit-identical to the in-plan aggregate — the
-    float-summing probes elsewhere (correlation._global_scalars) must
-    NOT be folded this way, their merge order would become
-    nondeterministic. Returns (observed_df, get) where get() yields
-    the (n, h) tuple once the frame has been materialized; an empty
-    table fingerprints as (0, None), exactly like the old probe."""
+    Attached as OBSERVED metrics so the fingerprint rides the SAME
+    action that materializes the edge table — a separate probe would
+    be one whole scheduled job per checkpoint wave. Safe as an
+    observation precisely because both aggregates are exact-integer
+    and order-invariant (count; XOR is commutative/associative), so
+    the completion-order partial merge of the metrics accumulator is
+    bit-identical to the in-plan aggregate — the float-summing probes
+    elsewhere (correlation._global_scalars) must NOT be folded this
+    way, their merge order would become nondeterministic. Returns
+    (observed_df, get) where get() yields the (n, h) tuple once the
+    frame has been materialized; an empty table fingerprints as
+    (0, None).
+
+    get() never blocks unbounded: ``Observation.get`` waits on the JVM
+    with no timeout, so an action that never registered the metrics
+    would hang the caller. Spark sets the metrics from a
+    query-execution listener on the listener bus — possibly just
+    after the action returned — so get() polls ``getRowOrEmpty``
+    (≤ 100 ms per call) up to ``OBSERVATION_WAIT_S`` and then raises."""
     from pyspark.sql import Observation
 
     obs = Observation()
@@ -473,25 +469,28 @@ def _observed_fingerprint(e: DataFrame):
         F.count(F.lit(1)).alias("n"),
         F.expr("bit_xor(xxhash64(u, v))").alias("h"),
     )
-    return observed, lambda: (obs.get["n"], obs.get["h"])
+
+    def get():
+        deadline = time.monotonic() + OBSERVATION_WAIT_S
+        row = obs._jo.getRowOrEmpty()
+        while row.isEmpty():
+            if time.monotonic() >= deadline:
+                raise RuntimeError(
+                    "edge-set fingerprint: no observed metrics after "
+                    f"{OBSERVATION_WAIT_S:g} s (the observed frame was "
+                    "never materialized)"
+                )
+            row = obs._jo.getRowOrEmpty()
+        row = row.get()
+        return row.getAs("n"), row.getAs("h")
+
+    return observed, get
 
 
 def _materialized_with_fp(e: DataFrame):
     """Materialize an edge table and return (materialized, fingerprint)
-    — ONE action by default (the fingerprint rides the checkpoint as
-    observed metrics, see _observed_fingerprint). The
-    ``PROPIUS_CC_PROBE_JOB=1`` twin restores the pre-round-9 shape —
-    materialize, then a separate map-side `.first()` probe job over the
-    materialized blocks — kept result-identical for interleaved A/B
-    (the aggregates are the same exact-integer order-invariant
-    expressions either way)."""
-    if os.environ.get("PROPIUS_CC_PROBE_JOB") == "1":
-        m = materialize(e)
-        row = m.select(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).first()
-        return m, (row["n"], row["h"])
+    in ONE action — the fingerprint rides the checkpoint as observed
+    metrics (see _observed_fingerprint)."""
     observed, get = _observed_fingerprint(e)
     return materialize(observed), get()
 
@@ -529,28 +528,11 @@ def _is_star_forest(e: DataFrame) -> bool:
     )
 
 
-# Checkpoint/convergence-probe cadence for dup_clusters. BACKLOG r4
-# item 4 proposed 2 (halve the localCheckpoint writes + probe jobs,
-# folding odd rounds lazily into the next plan); the round-5 interleaved
-# A/B at sf0.01 on a healthy-CPU window measured that variant ~2×
-# SLOWER (4.2-5.8 s vs 2.1-2.4 s warm): without the checkpoint, the
-# folded round's subtree is consumed 4× by the next round (nbrs = e ∪
-# swap(e), then mins + join both read nbrs) and exchange reuse only
-# shares the shuffle write, not the post-shuffle work — recompute costs
-# more than the skipped checkpoint saves at any scale where the edge
-# set fits the executors. Default 1 (per-round checkpoint, the r4
-# behavior); the knob stays for re-evaluation on genuinely
-# I/O-starved clusters where a checkpoint write is the scarcer
-# resource.
-CLUSTERS_CHECK_EVERY = 1
-
-
 def dup_clusters(
     pairs: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 25,
-    check_every: int | None = None,
     pairs_unique: bool = False,
 ) -> DataFrame:
     """Connected components of the near-dup pair graph:
@@ -561,7 +543,7 @@ def dup_clusters(
 
     Alternating large-star / small-star (Kiveris et al. 2014,
     "Connected Components in MapReduce and Beyond"): each round is two
-    groupBy/join passes over the pair-cardinality edge set and the
+    min-per-key passes over the pair-cardinality edge set and the
     edge set converges to stars in O(log² n) rounds — never O(diameter)
     like naive label propagation, and never a driver-side union-find.
     Each round materializes (lineage truncation; see plans.materialize)
@@ -571,8 +553,8 @@ def dup_clusters(
     unordered pair at most once (e.g. the output of a pair-keyed
     groupBy, or the block kernel's strict upper triangle) — the
     canonicalizing ``distinct()`` is then skipped, saving a full
-    shuffle of the pair table inside the first materialize (round 9;
-    both declared cluster queries qualify). Duplicates under a false
+    shuffle of the pair table inside the first materialize (both
+    declared cluster queries qualify). Duplicates under a false
     claim would only cost the first round extra bytes (its min-
     aggregates and distinct absorb them), never wrong results.
     """
@@ -588,103 +570,60 @@ def dup_clusters(
     if not pairs_unique:
         e = e.distinct()
     e, fp = _materialized_with_fp(e)
-    check_every = check_every or CLUSTERS_CHECK_EVERY
-    converged = False
     # Each star operation attaches the group minimum to every row of
-    # its u-group. The round-9 shape does that with ONE exchange per
-    # star — a min window over partitionBy(u), the Kiveris
-    # reduce-per-key formulation — where the old groupBy+join form
-    # shuffled the SAME edge table twice per star (the partial-agg
-    # exchange and the join-side exchange have different subplans, so
-    # exchange reuse never applied; profiled as two separate full-input
-    # stage jobs per star at sf0.1) plus a broadcast build and a
-    # mid-round distinct. Per round: 5 exchanges + 2 joins → 3
-    # exchanges + 0 joins. A hub node's group sorts (spillably) in one
-    # window task where the join reduce-side also funneled the hub's
-    # rows into one partition — and each round exists precisely to
-    # dismantle hubs. PROPIUS_CC_JOIN_ROUNDS=1 restores the old
-    # join-based rounds (result-identical twin, kept for A/B and as an
-    # escape hatch; pinned by
-    # tests/test_dedup.py::test_dup_clusters_pairs_unique_and_round_twin_equal).
-    join_rounds = os.environ.get("PROPIUS_CC_JOIN_ROUNDS") == "1"
+    # its u-group with ONE exchange per star — a min window over
+    # partitionBy(u), the Kiveris reduce-per-key formulation. A
+    # groupBy + join-back form would shuffle the SAME edge table twice
+    # per star (the partial-agg exchange and the join-side exchange
+    # have different subplans, so exchange reuse never applies). Per
+    # round: 3 exchanges, 0 joins. A hub node's group sorts
+    # (spillably) in one window task — and each round exists precisely
+    # to dismantle hubs.
     wu = Window.partitionBy("u")
-    for i in range(max_iter):
+    for _ in range(max_iter):
         # large-star: for each u, connect every LARGER neighbor v to
         # m = min(N(u) ∪ {u})
         nbrs = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        if join_rounds:
-            mins = (
-                nbrs.groupBy("u")
-                .agg(F.min("v").alias("mv"))
-                .select("u", F.least("mv", "u").alias("m"))
+        large = (
+            nbrs.withColumn("m", F.least(F.min("v").over(wu), F.col("u")))
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .filter(F.col("u") != F.col("v"))
+        )
+        # small-star over large's (all-downward) edge set: connect
+        # every smaller neighbor AND u itself to m = min(N⁻(u)). The
+        # (u, m) self-rows are emitted once per EDGE; the duplicates
+        # sit inside their window partition, so the final distinct's
+        # map-side partial removes them before its shuffle.
+        lw = large.withColumn("m", F.min("v").over(wu))
+        small = (
+            lw.select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .unionAll(lw.select("u", F.col("m").alias("v")))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
+        )
+        # convergence test in two tiers: the fingerprint (count +
+        # order-invariant XOR, riding the checkpoint action as
+        # observed metrics) — equal sets ⇒ equal fingerprint, so a
+        # CHANGED fingerprint proves non-convergence with zero extra
+        # jobs; only when fingerprints match does the structural
+        # confirm run. The confirm is _is_star_forest (star forests
+        # are exactly the fixed points of the round map), which also
+        # guards the 2⁻⁶⁴-ish XOR collision.
+        e_new, fp_new = _materialized_with_fp(small)
+        if fp_new == fp and _is_star_forest(e_new):
+            e = e_new
+            break
+        e, fp = e_new, fp_new
+    else:
+        # the fingerprint is only evidence of change: task re-execution
+        # can double-count into the observed metrics, so matching
+        # fingerprints may never arrive on a converged edge set. The
+        # structural proof on the last checkpoint decides.
+        if not _is_star_forest(e):
+            raise RuntimeError(
+                f"dup_clusters did not converge in {max_iter} rounds"
             )
-            large = (
-                nbrs.join(mins, "u")
-                .filter(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-            )
-            # small-star: for each u (over larger→smaller edges),
-            # connect every smaller neighbor AND u itself to
-            # m = min(N⁻(u))
-            mins2 = large.groupBy("u").agg(F.min("v").alias("m"))
-            small = (
-                large.join(mins2, "u")
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .unionAll(mins2.select("u", F.col("m").alias("v")))
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-            )
-        else:
-            large = (
-                nbrs.withColumn("m", F.least(F.min("v").over(wu), F.col("u")))
-                .filter(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .filter(F.col("u") != F.col("v"))
-            )
-            # small-star over large's (all-downward) edge set. The
-            # (u, m) self-rows are emitted once per EDGE instead of
-            # once per node; the duplicates sit inside their window
-            # partition, so the final distinct's map-side partial
-            # removes them before its shuffle — the old mins2-union
-            # rows are a subset, identical set after distinct.
-            lw = large.withColumn("m", F.min("v").over(wu))
-            small = (
-                lw.select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .unionAll(lw.select("u", F.col("m").alias("v")))
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-            )
-        # Checkpoint + convergence check every `check_every` rounds
-        # (default 1 = per round — see CLUSTERS_CHECK_EVERY for why the
-        # proposed skip-odd-rounds cadence measured 2× slower and was
-        # reverted). A skipped round folds its operators lazily into
-        # the next plan, trading checkpoint I/O for recompute.
-        if (i + 1) % check_every == 0 or i + 1 == max_iter:
-            # convergence test in two tiers: a fingerprint (count +
-            # order-invariant XOR, riding the checkpoint action as
-            # observed metrics — no separate probe job, see
-            # _observed_fingerprint) per check — equal sets ⇒ equal
-            # fingerprint, so a CHANGED fingerprint proves
-            # non-convergence with zero extra jobs; only when
-            # fingerprints match does the structural confirm run. The
-            # confirm is _is_star_forest, NOT set-equality: snapshots
-            # here are two rounds apart, and "is a fixed point" (star
-            # forests are exactly the fixed points of the round map)
-            # stays sound at any check distance where
-            # equality-between-snapshots would not (it also guards the
-            # 2⁻⁶⁴-ish XOR collision).
-            e_new, fp_new = _materialized_with_fp(small)
-            if fp_new == fp and _is_star_forest(e_new):
-                e = e_new
-                converged = True
-                break
-            e, fp = e_new, fp_new
-        else:
-            e = small
-    if not converged:
-        raise RuntimeError(f"dup_clusters did not converge in {max_iter} rounds")
     # converged edge set is a star forest: (node, root). Roots appear
     # only on the v side and label themselves.
     members = e.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id"))

@@ -34,11 +34,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..plans import materialize
 from .correlation import (
     CORR_EXPR,
     _global_scalars,
     _lit0,
-    _persist,
     _stats_as,
     corr_pairs,
     gram,
@@ -74,8 +74,8 @@ def get_similar_items(
 
     Returns (item_b, corr) sorted descending.
     """
-    cells = _persist(cells, compact=False)
-    stats = _persist(valid_item_stats(cells))
+    cells = materialize(cells, compact=False)
+    stats = materialize(valid_item_stats(cells))
     me = stats.filter(F.col("item_id") == item_id)
     my_cells = cells.filter(F.col("item_id") == item_id).select(
         "ctx_id", F.col("cnt").alias("cnt_a")
@@ -133,7 +133,7 @@ def get_similar_items(
         # the dots join/aggregate over the cell table runs once, not
         # once per consumer (guide §2.3; the absolute branch consumes
         # row once and stays lazy)
-        row = _persist(row)
+        row = materialize(row)
         th = row.agg(
             (F.avg("corr") + F.lit(threshold_value) * F.stddev_samp("corr")).alias("cut")
         )
@@ -246,9 +246,9 @@ def similar_items_exact(
     # AQE re-optimizes the whole remaining plan at every query stage,
     # and a deep neighbor-stats subtree under the final joins measured
     # 3-10× slower than the same pipeline with a flat final plan.
-    cells = _persist(cells, compact=False)
-    stats = _persist(valid_item_stats(cells))
-    g = _persist(gram(cells, stats, max_context_degree))
+    cells = materialize(cells, compact=False)
+    stats = materialize(valid_item_stats(cells))
+    g = materialize(gram(cells, stats, max_context_degree))
     # ONE scalar probe over the persisted stats serves this function's
     # n literal AND neighbor_stats' n/v/Σt/Σt² (round 9) — no
     # re-aggregate of cells (the r8 guide-§2.3 fix) and no 1-row
@@ -257,7 +257,7 @@ def similar_items_exact(
     ns = neighbor_stats(
         cells, max_context_degree, stats=stats, g=g, scalars=sc_row
     )
-    cuts = _persist(
+    cuts = materialize(
         ns.select(
             F.col("item_id").alias("item_a"),
             (F.col("mean") + F.lit(k_sigma) * F.col("std")).alias("cut"),

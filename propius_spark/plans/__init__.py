@@ -3,14 +3,12 @@
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # target checkpoint-block size for materialize's compaction pass
-# (PROPIUS_CHECKPOINT_BLOCK_MB overrides; 0 disables compaction)
-_CHECKPOINT_BLOCK_MB_DEFAULT = 128
+_CHECKPOINT_BLOCK_MB = 128
 
 # per-process observability for the compaction pass (scale-run A/Bs
 # read this to prove the path engaged; tests pin the gate-SF no-op).
@@ -40,7 +38,7 @@ def fan_out(df: DataFrame, key_col: str) -> DataFrame:
     return df.repartition(sc.defaultParallelism, F.col(key_col))
 
 
-def materialize(df: DataFrame, compact: bool | None = None) -> DataFrame:
+def materialize(df: DataFrame, compact: bool = True) -> DataFrame:
     """Materialize a subtree consumed by several downstream branches:
     MEMORY_AND_DISK storage + lineage truncation (localCheckpoint).
 
@@ -101,9 +99,8 @@ def materialize(df: DataFrame, compact: bool | None = None) -> DataFrame:
     sorts, coarse blocks for the re-reads; at the gate SFs every table
     lands under the threshold in the first place (kilobytes in ≤ 32
     partitions → a no-op), so gate plans and timings are unchanged.
-    ``PROPIUS_CHECKPOINT_BLOCK_MB`` tunes the target; 0 disables
-    compaction. Single-writer per session, like the rest of the
-    materialization machinery (session.release_materialized_since):
+    Single-writer per session, like the rest of the materialization
+    machinery (session.release_materialized_since):
     the before/after persistent-RDD diff that releases the fine blocks
     attributes every new id to this call.
 
@@ -116,13 +113,8 @@ def materialize(df: DataFrame, compact: bool | None = None) -> DataFrame:
     irrelevant, but the compaction pass still re-reads and re-writes
     the whole table on a store that collapses under concurrency (the
     cells table: corr_pairs 289 s → 387 s with compaction on).
-    ``None`` (default) = the auto size heuristic; ``False`` = never
-    compact (the cells posture); ``True`` is annotation-only — the
-    SAME engage rule as auto (size-measured, and still disabled by
-    ``PROPIUS_CHECKPOINT_BLOCK_MB=0``, which must stay authoritative
-    so kill-switch A/B twins compare the whole machinery off): it
-    documents a re-read-heavy consumer at the call site without
-    forcing a pass the size heuristic would skip.
+    ``True`` (default) = the size heuristic decides; ``False`` = never
+    compact (the cells posture).
 
     Sizing is mode-aware: localCheckpoint mode measures the stored
     blocks (block-manager RDDInfo); reliable-checkpoint mode measures
@@ -137,19 +129,13 @@ def materialize(df: DataFrame, compact: bool | None = None) -> DataFrame:
     spark = df.sparkSession
     sc = spark.sparkContext
     reliable = sc.getCheckpointDir() is not None
-    block_mb = int(
-        os.environ.get(
-            "PROPIUS_CHECKPOINT_BLOCK_MB", str(_CHECKPOINT_BLOCK_MB_DEFAULT)
-        )
-    )
-    sizing = block_mb > 0 and compact is not False
     before = {int(k) for k in sc._jsc.getPersistentRDDs().keys()}
     # the FS listing is only needed when this call may compact — the
     # compact=False cells sites must not pay a checkpoint-dir list on
     # every call in durable mode
-    before_dirs = _checkpoint_rdd_dirs(sc) if (reliable and sizing) else None
+    before_dirs = _checkpoint_rdd_dirs(sc) if (reliable and compact) else None
     first = _checkpoint_once(df, sc)
-    if not sizing:
+    if not compact:
         return first
     # safe here: `first` is LogicalRDD-backed (no shuffles to finalize,
     # nothing recomputes — the AQE hazard in fan_out's docstring is
@@ -174,7 +160,7 @@ def materialize(df: DataFrame, compact: bool | None = None) -> DataFrame:
     # partitions, 32 cores) the 2× engage margin is then never met, so
     # gate plans are bit-identical to the pre-compaction behavior
     n_target = max(
-        sc.defaultParallelism, math.ceil(stored / (block_mb << 20))
+        sc.defaultParallelism, math.ceil(stored / (_CHECKPOINT_BLOCK_MB << 20))
     )
     if nparts <= 2 * n_target:
         compaction_stats["skipped"] += 1

@@ -16,7 +16,7 @@ from pyspark.sql import SparkSession
 
 def clear_materialized(spark: SparkSession) -> int:
     """Unpersist every persistent RDD (the engine's materialized
-    intermediate tables, see operators/correlation.py:_persist).
+    intermediate tables, see plans.materialize).
     Leftover blocks from a finished pipeline degrade later queries in
     the same session (measured 8.8 s → 127 s on an unrelated query at
     sf0.1); call this between logically-separate pipeline runs.

@@ -1,7 +1,6 @@
-"""Interleaved per-query A/B timer (the round-8 protocol from
-scripts/ab_durable_ck.py, generalized): alternate variant passes
-within ONE session so host-window drift hits both variants equally,
-timing each query with the noop sink (guide §1.4).
+"""Interleaved per-query A/B timer (the round-8 protocol): alternate
+variant passes within ONE session so host-window drift hits both
+variants equally, timing each query with the noop sink (guide §1.4).
 
 Variants are SQL-conf dicts (runtime-settable confs only — core
 confs like spark.io.compression.codec need separate JVMs; use

@@ -212,18 +212,13 @@ def test_dup_clusters_multiple_components(spark):
     assert got == {3: 3, 5: 3, 8: 3, 20: 20, 21: 20}
 
 
-def test_dup_clusters_pairs_unique_and_round_twin_equal(spark, monkeypatch):
-    """Round-9 CC internals pins: (a) pairs_unique=True (skip the init
-    distinct) must equal the default on a unique oriented pair table;
-    (b) the PROPIUS_CC_JOIN_ROUNDS=1 twin (the old groupBy+join star
-    rounds with their mid-round distinct) must be result-identical to
-    the window-based rounds — the window form's identity argument is
-    that the min-window sees the same u-groups the join attached, and
-    the final distinct absorbs the per-edge self-row duplicates."""
+def test_dup_clusters_pairs_unique_equal(spark):
+    """pairs_unique=True (skip the init distinct) must equal the
+    default on a unique oriented pair table."""
     from propius_spark.operators import dup_clusters
 
     # a shape with heavy min-sharing (two hubs bridged) so large-star
-    # actually produces duplicate (v, m) rows for the twin to absorb
+    # actually produces duplicate (v, m) rows for the distinct to absorb
     edges = [(1, i) for i in range(2, 8)] + [(10, i) for i in range(11, 16)]
     edges += [(7, 10)]
     pairs = spark.createDataFrame(
@@ -235,17 +230,57 @@ def test_dup_clusters_pairs_unique_and_round_twin_equal(spark, monkeypatch):
 
     base = canon(dup_clusters(pairs))
     assert canon(dup_clusters(pairs, pairs_unique=True)) == base
-    # separate-probe-job fingerprint twin (round 9: the fingerprint
-    # normally rides the checkpoint action as observed metrics)
-    monkeypatch.setenv("PROPIUS_CC_PROBE_JOB", "1")
-    assert canon(dup_clusters(pairs)) == base
-    monkeypatch.delenv("PROPIUS_CC_PROBE_JOB")
-    monkeypatch.setenv("PROPIUS_CC_JOIN_ROUNDS", "1")
-    assert canon(dup_clusters(pairs)) == base
     # every node in one component rooted at the smallest id (nodes are
     # 1-7 and 10-15; 8/9 are not in the graph)
     nodes = sorted({n for a, b in edges for n in (a, b)})
     assert base == [(i, 1) for i in nodes]
+
+
+def test_dup_clusters_converges_despite_corrupted_fingerprint(spark, monkeypatch):
+    """Task re-execution can double-count into the observed
+    fingerprint, so consecutive fingerprints may never match on a
+    converged edge set. The loop must then fall back to the
+    structural star-forest proof instead of raising non-convergence."""
+    import itertools
+
+    from propius_spark.operators import dedup
+
+    real = dedup._observed_fingerprint
+    fresh = itertools.count()
+
+    def never_repeats(e):
+        observed, _ = real(e)
+        return observed, lambda: (next(fresh), 0)
+
+    monkeypatch.setattr(dedup, "_observed_fingerprint", never_repeats)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)], "doc_a long, doc_b long"
+    )
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in dedup.dup_clusters(pairs, max_iter=8).collect()
+    }
+    assert got == {i: 0 for i in range(10)}
+
+
+def test_observed_fingerprint_raises_when_never_materialized(spark):
+    """A fingerprint whose frame never ran an action must fail loudly
+    within the wait ceiling, not block forever on the observation."""
+    import time
+
+    import pytest
+
+    from propius_spark.operators.dedup import (
+        OBSERVATION_WAIT_S,
+        _observed_fingerprint,
+    )
+
+    e = spark.createDataFrame([(2, 1)], "u long, v long")
+    _, get = _observed_fingerprint(e)
+    t0 = time.monotonic()
+    with pytest.raises(RuntimeError, match="no observed metrics"):
+        get()
+    assert time.monotonic() - t0 < OBSERVATION_WAIT_S + 5
 
 
 def test_observed_fingerprint_matches_direct_aggregate(spark):

@@ -193,12 +193,12 @@ def test_materialize_durable_checkpoint_mode(spark, tmp_path):
     assert sc.getCheckpointDir() is None
 
 
-def test_materialize_compacts_overpartitioned_checkpoints(spark, monkeypatch):
+def test_materialize_compacts_overpartitioned_checkpoints(spark):
     """SCALE.md §8a finding 4: a table checkpointed in many more blocks
     than its bytes warrant gets ONE narrow compaction pass — same rows,
     coarse blocks, fine-grained blocks released. A right-sized input
     (≤ 2× the defaultParallelism floor) must stay untouched, and
-    PROPIUS_CHECKPOINT_BLOCK_MB=0 must disable compaction entirely."""
+    compact=False must skip compaction entirely."""
     from propius_spark.plans import materialize
 
     sc = spark.sparkContext
@@ -229,12 +229,6 @@ def test_materialize_compacts_overpartitioned_checkpoints(spark, monkeypatch):
     no_compact = materialize(df, compact=False)
     assert no_compact.rdd.getNumPartitions() == wide
     assert sorted((r.id, r.v) for r in no_compact.collect()) == want
-
-    # kill switch
-    monkeypatch.setenv("PROPIUS_CHECKPOINT_BLOCK_MB", "0")
-    off = materialize(df)
-    assert off.rdd.getNumPartitions() == wide
-    assert sorted((r.id, r.v) for r in off.collect()) == want
     spark.catalog.clearCache()
     from propius_spark.session import clear_materialized
 
@@ -385,15 +379,15 @@ def test_rank_gap_window_exchange_reuse(spark, sf_dir):
     import re
 
     from propius_spark.operators.correlation import (
-        _persist,
         _rank_gap_extremes,
         gram,
         valid_item_stats,
     )
+    from propius_spark.plans import materialize
 
-    cells = _persist(build_cells(occurrences_from_lineitem(spark, sf_dir)))
-    stats = _persist(valid_item_stats(cells))
-    g = _persist(gram(cells, stats, None))
+    cells = materialize(build_cells(occurrences_from_lineitem(spark, sf_dir)))
+    stats = materialize(valid_item_stats(cells))
+    g = materialize(gram(cells, stats, None))
     plan = _plan(_rank_gap_extremes(stats, g))
 
     assert len(re.findall(r"^\(\d+\) Window$", plan, re.M)) == 2

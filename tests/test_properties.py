@@ -220,18 +220,18 @@ def test_rank_gap_extremes_matches_dense_bruteforce(spark, rows):
     single-neighbor items, and gapless prefixes on both scan sides
     (VERDICT r7 item 6)."""
     from propius_spark.operators.correlation import (
-        _persist,
         _rank_gap_extremes,
         gram,
         valid_item_stats,
     )
+    from propius_spark.plans import materialize
 
     df = spark.createDataFrame(
         [(f"r{r}", i) for r, i in rows], "reference_id string, item_id long"
     )
-    cells = _persist(build_cells(df), compact=False)
-    stats = _persist(valid_item_stats(cells))
-    g = _persist(gram(cells, stats, None))
+    cells = materialize(build_cells(df), compact=False)
+    stats = materialize(valid_item_stats(cells))
+    g = materialize(gram(cells, stats, None))
     got = {
         r["item_a"]: (r["t_nc_max"], r["t_nc_min"])
         for r in _rank_gap_extremes(stats, g).collect()
