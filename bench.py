@@ -1,29 +1,43 @@
-"""Benchmark harness: times every declared query at one scale factor,
-plus a secondary pass at sf0.01 so CORRECTNESS failures (graded at
-sf0.01) and BENCH numbers (graded at the main sf) can be cross-read.
+"""Benchmark harness: the one script that times `queries()` entries,
+at one scale factor plus a secondary pass at sf0.01 so CORRECTNESS
+failures (graded at sf0.01) and BENCH numbers (graded at the main sf)
+can be cross-read.
 
 Prints ONE compact JSON line (the LAST line of stdout):
   {"metric": "...", "value": total_sec, "unit": "sec",
    "queries": {name: sec, ...}, "sf": sf, "detail": "BENCH_full.json"}
 
-The driver keeps only the last ~2000 characters of stdout, and every
-prior round's single fat line (per-query dict + secondary pass +
-calibration arrays ≈ 4.5 KB) was truncated mid-key — BENCH_r01..r06
-all have `"parsed": null`. So the printed line now carries ONLY the
-contract fields (metric/value/unit/queries/sf) plus the secondary
-pass's total + failed-query names, with per-query times at 1-decimal
-precision (≤ ~1.9 KB at 74 queries, measured), and the FULL result —
-3-decimal timings, the secondary-SF pass, raw per-run totals, host
-CPU/disk calibration probes, failures — is written to
-``BENCH_full.json`` next to this script. If the query set ever grows
-the line past the tail budget, it degrades to a minimal contract line
-pointing at the sidecar (never a bare assert: that dies silently
-under -O and leaves no summary at all).
+The grader keeps only the last ~2000 characters of stdout (BENCH_r01..
+r06 all have `"parsed": null` from a truncated 4.5 KB line), so the
+printed line carries only the contract fields plus parallelism and the
+secondary pass's total + failed-query names, at 1-decimal precision
+(≤ ~1.9 KB at 74 queries); over budget it degrades via `_fit_tail`.
+Everything else goes to ``BENCH_full.json`` next to this script:
+3-decimal timings, per-query Spark `jobs`/`stages`/`tasks` (`profile`),
+every pass's raw per-query records (`raw`), per-pass totals, the
+secondary pass, `plans.compaction_stats`, host CPU/disk canaries and
+failures. Per-query progress goes to stderr.
+
+Flags:
+  --queries a,b,...  time only these (default: all); an unknown name
+                     exits non-zero before Spark starts
+  --passes N         timed passes at the primary SF (default 2); a
+                     query's time is the min over the passes it
+                     succeeded in
+  --variant NAME=k=v;k=v
+                     (repeatable) runtime SQL confs for an interleaved
+                     A/B in one session: each pass runs every variant in
+                     turn, setting its confs and restoring them after.
+                     `NAME=` is the session as built. The top level
+                     reports the first variant; the sidecar's `variants`
+                     reports each.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32),
      SPARK_GRAFT_SECONDARY_SF_DIR (default /root/testdata/sf0.01;
-     set empty to skip the secondary pass).
+     set empty to skip the secondary pass),
+     SPARK_GRAFT_CPUS (read by get_spark, default nproc; the resolved
+     count is reported as `cpus`).
+
 Each query is executed to completion with a `noop`-format write so the
 measured time covers the full distributed plan (scan → shuffles →
 aggregates) without driver-side collect overhead.
@@ -31,6 +45,7 @@ aggregates) without driver-side collect overhead.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -38,10 +53,6 @@ import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
-
-import __spark_entry__ as entrymod  # noqa: E402
-from propius_spark.session import clear_materialized, get_spark  # noqa: E402
-
 
 def _fit_tail(compact: dict, budget: int = 1900) -> str:
     """Serialize the compact summary within the driver's stdout-tail
@@ -128,21 +139,161 @@ def _disk_calibration(path: str | None = None) -> float:
     return round(256 / (time.perf_counter() - t0), 1)
 
 
-def main() -> None:
+def _variant(spec: str) -> tuple[str, dict[str, str]]:
+    """`NAME=k=v;k=v` → (NAME, {k: v}); `NAME=` is the base session."""
+    name, _, confstr = spec.partition("=")
+    if not name:
+        raise argparse.ArgumentTypeError(f"variant needs a name: {spec!r}")
+    confs: dict[str, str] = {}
+    for kv in filter(None, confstr.split(";")):
+        k, sep, v = kv.partition("=")
+        if not sep:
+            raise argparse.ArgumentTypeError(f"expected k=v in {spec!r}")
+        confs[k] = v
+    return name, confs
+
+
+def _parse_args(argv: list[str] | None) -> argparse.Namespace:
+    p = argparse.ArgumentParser(description="Time queries() entries.")
+    p.add_argument("--queries", type=lambda s: [q for q in s.split(",") if q])
+    p.add_argument("--passes", type=int, default=2)
+    p.add_argument("--variant", type=_variant, action="append", dest="variants")
+    args = p.parse_args(argv)
+    if args.passes < 1:
+        p.error("--passes must be at least 1")
+    args.variants = args.variants or [("base", {})]
+    if len({v for v, _ in args.variants}) < len(args.variants):
+        p.error("variant names must be unique")
+    return args
+
+
+def _master_cpus(master: str) -> int:
+    """`local[N]` or `local[N,F]` → N (get_spark always builds local[N])."""
+    return int(master[master.index("[") + 1 :].split(",")[0].rstrip("]"))
+
+
+def _rollup(
+    job_stages: dict[int, list[int] | None], stage_tasks: dict[int, int | None]
+) -> dict[str, int]:
+    """Jobs, stages and tasks one query scheduled. `job_stages` maps
+    each job id of the query's job group to its stage ids, `stage_tasks`
+    maps a stage id to its task count; None marks a job or stage the
+    status tracker no longer holds, which is skipped (the job still
+    counts). AQE lists a reused stage under every job that reads it, so
+    a stage id counts once (ADVICE r8: counting per (job, stage) pair
+    inflated the very counts this profile exists to attribute). Pure
+    function, unit-tested without Spark (tests/test_bench_profile.py)."""
+    tasks: dict[int, int] = {}
+    for sids in job_stages.values():
+        for sid in sids or ():
+            if stage_tasks.get(sid) is not None:
+                tasks[sid] = stage_tasks[sid]
+    return {"jobs": len(job_stages), "stages": len(tasks), "tasks": sum(tasks.values())}
+
+
+def _summarize(records: list[dict]) -> dict:
+    """One variant's result from its per-pass query records
+    ({"pass", "query", "sec", jobs/stages/tasks, and "error" when
+    `sec` is None}). A query's time is the min over the passes it
+    SUCCEEDED in (a query that failed one pass still reports its good
+    pass; failed-everywhere queries appear only under `failures`), and
+    its profile is that fastest pass's. `runs` is each pass's total.
+    Pure function, unit-tested without Spark."""
+    best: dict[str, dict] = {}
+    runs = dict.fromkeys(sorted({r["pass"] for r in records}), 0.0)
+    failures: dict[str, str] = {}
+    for r in records:
+        if r["sec"] is None:
+            failures[r["query"]] = r["error"]
+            continue
+        runs[r["pass"]] += r["sec"]
+        if r["query"] not in best or r["sec"] < best[r["query"]]["sec"]:
+            best[r["query"]] = r
+    names = sorted(best)
+    out = {
+        "value": round(sum(best[q]["sec"] for q in names), 3),
+        "queries": {q: best[q]["sec"] for q in names},
+        "runs": [round(t, 3) for t in runs.values()],
+        "profile": {
+            q: {k: best[q][k] for k in ("jobs", "stages", "tasks")} for q in names
+        },
+    }
+    if failures:
+        out["failures"] = failures
+    return out
+
+
+def main(argv: list[str] | None = None) -> None:
+    args = _parse_args(argv)
+    import __spark_entry__ as entrymod
+    from propius_spark.session import get_spark
+
+    qs = entrymod.queries()
+    names = args.queries or list(qs)
+    unknown = sorted(set(names) - set(qs))
+    if unknown:
+        # a typo'd name must not yield a short suite that exits 0
+        raise SystemExit(f"bench: unknown queries {unknown}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark("propius_bench", cpus=cpus)
+    spark = get_spark("propius_bench")
     # stop-in-finally: a mid-suite exception must not leave the JVM up,
     # and the summary line prints AFTER stop so no late JVM chatter can
     # push it out of the driver's 2000-char stdout tail
     try:
-        line = _run(spark, sf_dir, cpus)
+        line = _run(spark, {n: qs[n] for n in names}, sf_dir, args)
     finally:
         spark.stop()
     print(line, flush=True)
 
 
-def _run(spark, sf_dir: str, cpus: int) -> str:
+def _time_query(spark, fn, sf_dir: str, group: str) -> dict:
+    """Run one query under its own job group and return its record:
+    wall `sec` (None plus `error` on failure) and its jobs/stages/tasks
+    read from the status tracker before its blocks are released."""
+    from propius_spark.session import clear_materialized
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    t0 = time.perf_counter()
+    try:
+        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+        rec: dict = {"sec": round(time.perf_counter() - t0, 3)}
+    except Exception as e:  # noqa: BLE001 - record, keep measuring
+        # one flaky query must not discard a whole completed pass:
+        # record the failure, keep the rest of the suite
+        rec = {"sec": None, "error": f"{type(e).__name__}: {e}"[:300]}
+    # the status store is fed by the listener bus; drain it so the
+    # query's last jobs and stages are visible
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    tracker = sc.statusTracker()
+    job_stages = {
+        j: getattr(tracker.getJobInfo(j), "stageIds", None)
+        for j in tracker.getJobIdsForGroup(group)
+    }
+    stage_tasks = {
+        s: getattr(tracker.getStageInfo(s), "numTasks", None)
+        for sids in job_stages.values()
+        for s in sids or ()
+    }
+    rec.update(_rollup(job_stages, stage_tasks))
+    # release materialized intermediates so one pipeline's blocks don't
+    # skew the next query's timing, and nudge the JVM to collect them
+    # now — long multi-query sessions otherwise hit multi-second GC
+    # pauses inside later queries (measured 3-4× inflation on queries
+    # that run in ~3 s isolated)
+    clear_materialized(spark)
+    sc._jvm.System.gc()
+    return rec
+
+
+def _sf_of(d: str):
+    s = d.rstrip("/").rsplit("sf", 1)[-1]
+    return float(s) if s.replace(".", "").isdigit() else s
+
+
+def _run(spark, qs: dict, sf_dir: str, args: argparse.Namespace) -> str:
+    from propius_spark import plans
+
     spark.sparkContext.setLogLevel("ERROR")
 
     # warm the JVM on untimed work covering the runtime surfaces the
@@ -181,91 +332,75 @@ def _run(spark, sf_dir: str, cpus: int) -> str:
     except Exception:
         pass
 
-    def run_suite(d: str, failures: dict[str, str]) -> dict[str, float]:
-        # per-suite failures dict: the secondary SF's failures must not
-        # be mis-attributed to (or hidden by) the primary's
-        timings: dict[str, float] = {}
-        for name, fn in entrymod.queries().items():
-            t0 = time.perf_counter()
-            try:
-                fn(spark, d).write.mode("overwrite").format("noop").save()
-            except Exception as e:  # noqa: BLE001 - record, keep measuring
-                # one flaky query must not discard a whole completed
-                # pass: record the failure, keep the rest of the suite
-                failures[name] = f"{type(e).__name__}: {e}"[:300]
-                clear_materialized(spark)
-                continue
-            timings[name] = round(time.perf_counter() - t0, 3)
-            # release materialized intermediates so one pipeline's
-            # blocks don't skew the next query's timing, and nudge the
-            # JVM to collect them now — long multi-query sessions
-            # otherwise hit multi-second GC pauses inside later queries
-            # (measured 3-4× inflation on queries that run in ~3 s
-            # isolated)
-            clear_materialized(spark)
-            spark.sparkContext._jvm.System.gc()
-        return timings
+    records: list[dict] = []
 
-    def sf_of(d: str):
-        s = d.rstrip("/").rsplit("sf", 1)[-1]
-        return float(s) if s.replace(".", "").isdigit() else s
+    def run_suite(d: str, pass_no: int, variant: str, confs: dict[str, str]) -> None:
+        prev = {k: spark.conf.get(k, None) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            for name, fn in qs.items():
+                rec = _time_query(spark, fn, d, f"bench-{len(records)}-{name}")
+                records.append(
+                    {"variant": variant, "pass": pass_no, "query": name, **rec}
+                )
+                print(variant, pass_no, name, rec, file=sys.stderr, flush=True)
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
 
-    # best-of-2 at the primary SF: this host's co-tenancy noise swings
-    # individual queries 1.5-2.5× between back-to-back identical runs
-    # (BASELINE.md round-3 variance band — three same-code suite runs
-    # totaled 123/156/138 s). Min-per-query is the standard de-noising
-    # estimator for a cold external disturbance; both raw totals are
-    # kept in `runs` for transparency.
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
+    # best-of-N (default 2) at the primary SF: this host's co-tenancy
+    # noise swings individual queries 1.5-2.5× between back-to-back
+    # identical runs (BASELINE.md round-3 variance band — three
+    # same-code suite runs totaled 123/156/138 s). Min-per-query is the
+    # standard de-noising estimator for a cold external disturbance;
+    # every pass's raw record is kept in `raw` for transparency.
+    # Variants interleave inside each pass so host-window drift hits
+    # them all equally.
     calib_before = _host_calibration()
     disk_before = _disk_calibration()
-    failures: dict[str, str] = {}
-    passes = [run_suite(sf_dir, failures) for _ in range(max(1, n_runs))]
-    # min over the passes a query SUCCEEDED in (a query that failed
-    # one pass still reports its good pass; failed-everywhere queries
-    # appear only under `failures`)
-    qnames = {q for p in passes for q in p}
-    timings = {
-        q: round(min(p[q] for p in passes if q in p), 3)
-        for q in sorted(qnames)
+    for p in range(args.passes):
+        for variant, confs in args.variants:
+            run_suite(sf_dir, p, variant, confs)
+    by_variant = {
+        v: _summarize([r for r in records if r["variant"] == v])
+        for v, _ in args.variants
     }
+    first = by_variant[args.variants[0][0]]
+    sc = spark.sparkContext
     result = {
         "metric": "total_query_wall_time",
-        "value": round(sum(timings.values()), 3),
         "unit": "sec",
-        "queries": timings,
-        "sf": sf_of(sf_dir),
-        "runs": [round(sum(p.values()), 3) for p in passes],
-        # parallelism contract, made legible (VERDICT r8 item 2): the
-        # driver's low-core pass could not PROVE from the output which
-        # parallelism was in effect (every 8-vs-32-core ratio ≈ 1 at
-        # the fixed-cost-dominated bench SF tripped a suspect flag even
-        # though $SPARK_GRAFT_CPUS is honored). `cpus` is the requested
-        # count; `default_parallelism` is what the live context
-        # actually resolved — they match in local[cpus] mode, and a
-        # divergence would itself be the diagnostic.
-        "cpus": cpus,
-        "default_parallelism": spark.sparkContext.defaultParallelism,
+        "sf": _sf_of(sf_dir),
+        # parallelism contract (VERDICT r8 item 2): `cpus` is what
+        # get_spark put in the master URL, `default_parallelism` what
+        # the live context resolved; a divergence is itself diagnostic
+        "cpus": _master_cpus(sc.master),
+        "default_parallelism": sc.defaultParallelism,
+        **first,
     }
-    if failures:
-        result["failures"] = failures
+    if len(args.variants) > 1:
+        result["variants"] = {
+            v: {"confs": confs, **by_variant[v]} for v, confs in args.variants
+        }
     sec_dir = os.environ.get(
         "SPARK_GRAFT_SECONDARY_SF_DIR", "/root/testdata/sf0.01"
     )
     if sec_dir and os.path.isdir(sec_dir) and sec_dir != sf_dir:
-        sec_failures: dict[str, str] = {}
-        sec = run_suite(sec_dir, sec_failures)
-        result["secondary"] = {
-            "sf": sf_of(sec_dir),
-            "value": round(sum(sec.values()), 3),
-            "queries": sec,
-        }
-        if sec_failures:
-            result["secondary"]["failures"] = sec_failures
+        n_primary = len(records)
+        run_suite(sec_dir, 0, "secondary", {})
+        result["secondary"] = {"sf": _sf_of(sec_dir), **_summarize(records[n_primary:])}
+    # cumulative over the run: whether materialize's checkpoint
+    # compaction engaged at these sizes
+    result["compaction_stats"] = dict(plans.compaction_stats)
     # [before-suite, after-suite] probes: code-independent host-speed
     # anchors for cross-window comparisons (docstrings above)
     result["host_calib_sec"] = [calib_before, _host_calibration()]
     result["host_disk_mbps"] = [disk_before, _disk_calibration()]
+    result["raw"] = records
     # full-fidelity record → sidecar file; the stdout line must fit the
     # driver's 2000-char tail window (module docstring)
     full_path = Path(__file__).resolve().parent / "BENCH_full.json"
@@ -274,25 +409,20 @@ def _run(spark, sf_dir: str, cpus: int) -> str:
         "metric": result["metric"],
         "value": result["value"],
         "unit": "sec",
-        "queries": {q: round(t, 1) for q, t in timings.items()},
+        "queries": {q: round(t, 1) for q, t in result["queries"].items()},
         "sf": result["sf"],
         "detail": full_path.name,
-        # both parallelism fields ride the compact line too — the
-        # driver's 32- and 8-core passes must be distinguishable from
-        # BENCH_r{N}.json alone (VERDICT r8 item 2); ~40 chars, inside
-        # the measured tail headroom, and _fit_tail degrades the
-        # per-query dict first if the set ever grows
+        # low- and high-core runs must be
+        # distinguishable from BENCH_r{N}.json alone (VERDICT r8 item 2)
         "cpus": result["cpus"],
         "default_parallelism": result["default_parallelism"],
     }
-    if failures:
+    if "failures" in result:
         # identity of failed queries must survive even in the compact
         # line; messages live in the sidecar
-        compact["failed"] = sorted(failures)
-    # surface the secondary (correctness-SF) pass in the compact line
-    # too: previously its total AND its failures lived only in the
-    # sidecar, so a query that broke solely at sf0.01 was invisible in
-    # BENCH_r{N}.json (VERDICT r7 item 5)
+        compact["failed"] = sorted(result["failures"])
+    # a query that breaks solely at the correctness SF must be visible
+    # in BENCH_r{N}.json (VERDICT r7 item 5)
     if "secondary" in result:
         compact["secondary_value"] = result["secondary"]["value"]
         if result["secondary"].get("failures"):

@@ -69,6 +69,14 @@ def release_materialized_since(spark: SparkSession, before: set[int]) -> int:
     return released
 
 
+def driver_memory() -> str:
+    """PROPIUS_DRIVER_MEM, else half of physical RAM in whole GiB (at
+    least 1g, at most 24g), so the default heap never over-commits the
+    host it runs on."""
+    gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
+    return os.environ.get("PROPIUS_DRIVER_MEM", f"{min(24, max(1, gib // 2))}g")
+
+
 def get_spark(app_name: str = "propius_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -97,7 +105,7 @@ def get_spark(app_name: str = "propius_spark", cpus: int | None = None) -> Spark
         # once their RDDs are GC'd — otherwise repeated pipelines
         # accumulate unbounded checkpoint data on durable storage
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-        .config("spark.driver.memory", os.environ.get("PROPIUS_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

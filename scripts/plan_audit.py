@@ -14,7 +14,9 @@ fixture is enough) and counts in the formatted physical plan:
             BatchEvalPython nodes — Python-worker stages; parity paths
             must stay at 0 (pinned by tests/test_plans.py)
 
-Prints one line per query plus a trailing JSON summary. Queries whose
+Prints one line per query plus a trailing JSON summary; `--dump DIR`
+also writes each query's formatted plan to DIR/<query>.txt (the
+before/after evidence files under plans/). Queries whose
 plan count changed since the committed snapshot deserve a look, not
 necessarily a revert — the point is that plan regressions surface in
 review instead of in BENCH_r{N}.json.
@@ -35,6 +37,7 @@ suspected replay with the Spark UI / BENCH before "fixing" it.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
@@ -55,16 +58,22 @@ PY_NODES = re.compile(
 )
 
 
-def main() -> None:
+def main() -> int:
     import __spark_entry__ as entrymod
     from propius_spark.session import clear_materialized, get_spark
 
-    only = set(sys.argv[1:])
+    p = argparse.ArgumentParser(description="Count plan nodes per query.")
+    p.add_argument("queries", nargs="*", help="default: all")
+    p.add_argument("--dump", type=Path, metavar="DIR")
+    args = p.parse_args()
+    only = set(args.queries)
     unknown = only - set(entrymod.queries())
     if unknown:
         # a typo'd name must not produce an empty "no regressions"
         # audit that exits 0
         raise SystemExit(f"plan_audit: unknown queries {sorted(unknown)}")
+    if args.dump:
+        args.dump.mkdir(parents=True, exist_ok=True)
     spark = get_spark("plan_audit", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
     out: dict[str, dict[str, int]] = {}
@@ -79,6 +88,8 @@ def main() -> None:
                     "formatted"
                 )
             )
+            if args.dump:
+                (args.dump / f"{name}.txt").write_text(plan)
             counts = {
                 "scans": len(re.findall(r"Scan parquet", plan)),
                 "exch": len(re.findall(r"\bExchange\b", plan)),

@@ -1,7 +1,8 @@
-"""Pins the set of environment variables the engine reads, without
-Spark: every ``os.environ`` / ``os.getenv`` read under propius_spark/
-is found by walking the sources' syntax trees. A new knob has to be
-added to EXPECTED here, so it shows up in review as an edit to this
+"""Pins the set of environment variables the engine and its tooling
+read, without Spark: every ``os.environ`` / ``os.getenv`` read under
+propius_spark/, in bench.py and in scripts/ is found by walking the
+sources' syntax trees. A new knob has to be added to EXPECTED or
+TOOLING_EXPECTED here, so it shows up in review as an edit to this
 file."""
 
 from __future__ import annotations
@@ -9,13 +10,23 @@ from __future__ import annotations
 import ast
 from pathlib import Path
 
-ENGINE = Path(__file__).resolve().parent.parent / "propius_spark"
+REPO = Path(__file__).resolve().parent.parent
+ENGINE = REPO / "propius_spark"
 
 EXPECTED = {
     "SPARK_GRAFT_CPUS",
     "PROPIUS_SHUFFLE_PARTITIONS",
     "PROPIUS_DRIVER_MEM",
     "PROPIUS_CHECKPOINT_DIR",
+}
+
+# the engine's own knobs (SPARK_GRAFT_CPUS, PROPIUS_DRIVER_MEM, ...) are
+# read once, by get_spark; the tooling must not read them again
+TOOLING_EXPECTED = {
+    "SPARK_GRAFT_SF_DIR",
+    "SPARK_GRAFT_SECONDARY_SF_DIR",
+    "SPARK_LOCAL_DIRS",
+    "PROPIUS_ORACLE_SF_DIR",
 }
 
 
@@ -70,6 +81,14 @@ def test_engine_env_knobs_are_pinned():
         rel = str(path.relative_to(ENGINE.parent))
         found |= env_reads(ast.parse(path.read_text(), rel), rel)
     assert found == EXPECTED
+
+
+def test_tooling_env_names_are_pinned():
+    found: set[str] = set()
+    for path in [REPO / "bench.py", *sorted((REPO / "scripts").glob("*.py"))]:
+        rel = str(path.relative_to(REPO))
+        found |= env_reads(ast.parse(path.read_text(), rel), rel)
+    assert found == TOOLING_EXPECTED
 
 
 def test_env_reads_scanner_sees_every_form():
