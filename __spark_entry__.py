@@ -648,7 +648,7 @@ def q_ann_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = embedding_dup_pairs(emb, threshold=0.4).select("vec_a", "vec_b")
     ids = emb.select(F.col("vec_id").alias("doc_id"))
     # pairs_unique: the exact block kernel emits each unordered pair
-    # exactly once, min/max-oriented (_block_cosines_kernel docstring)
+    # exactly once, min/max-oriented (ann._sub_block_pairs docstring)
     # — the CC init skips its canonicalizing distinct
     return resolve_duplicates(
         ids, pairs, src="vec_a", dst="vec_b", pairs_unique=True
@@ -1357,20 +1357,10 @@ def q_multimodal_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode emits per-media feature blocks (deterministic fake kernel),
     which feed the BLAS near-dup operator unchanged — the plumbing a
     real image-dedup pipeline runs, with stubbed codecs."""
-    from propius_spark.plans import persist_big
-
     dec = decode_media(media_from_documents(_docs(spark, sf_dir)), fake=True)
-    # cache the decoded embeddings: embedding_dup_pairs consumes its
-    # input on BOTH sides of the block-pair join, and without the cache
-    # the decode kernel (the expensive stage once codecs are real) runs
-    # twice over the corpus (plan-audited: python=2 kernels → 1).
-    # persist_big = lazy DISK_ONLY, corpus-cardinality contract;
-    # released by session.clear_materialized like the shingle tables.
-    emb = persist_big(
-        dec.select(
-            F.col("media_id").alias("vec_id"),
-            F.col("pixels").cast("array<double>").alias("embedding"),
-        )
+    emb = dec.select(
+        F.col("media_id").alias("vec_id"),
+        F.col("pixels").cast("array<double>").alias("embedding"),
     )
     return _r6(embedding_dup_pairs(emb, threshold=0.9), "cosine")
 
@@ -1816,7 +1806,7 @@ def oracle_sql() -> dict[str, str]:
         # boundary membership on the 6-dp-ROUNDED corr vs ROUNDED cut
         # (engine twin: similarity.py get_similar_items) — a raw
         # comparison makes a pair sitting exactly on mean+2σ
-        # engine-specific in the last ulp (BACKLOG round-4 item 3)
+        # engine-specific in the last ulp (history/BACKLOG.md round-4 item 3)
         "similar_one_part": f"""
             {_ONE_ROW},
             cut AS (SELECT AVG(corr) + 2.0*STDDEV_SAMP(corr) AS v FROM row_)

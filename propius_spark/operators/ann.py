@@ -1,26 +1,25 @@
 """Similarity search over an embedding column (array<float>)
 (beyond-reference capability; graded alongside SURVEY.md §2).
 
-Three tiers:
-- ``cosine_topk``          — brute-force exact top-k for one query
-                             vector: map-side dot products + a
-                             distributed TakeOrderedAndProject. The
-                             correctness baseline.
-- ``embedding_dup_pairs``  — all-pairs cosine ≥ τ near-duplicates
-                             (exact; quadratic — the oracle/baseline).
-- ``ivf_topk``             — IVF-style pruned search: vectors are
-                             assigned to their nearest centroid once;
-                             a query probes only the ``n_probe``
-                             closest centroid lists. The 100 TB path:
-                             the scan is partition-pruned to
-                             n_probe/n_centroids of the data; persist
-                             the assignment table partitioned by
-                             centroid_id so Spark prunes at the file
-                             level.
+Entry points, by the one helper each group shares:
+- one-query top-k: ``cosine_topk`` (brute force, the correctness
+  baseline), ``ivf_topk`` (the ``n_probe`` centroid lists nearest the
+  query; at 100 TB persist the assignment table partitioned by
+  centroid_id so the scan is file-pruned) and ``lsh_topk`` (vectors
+  sharing a hyperplane-LSH bucket) each pick a candidate pool for
+  ``_exact_topk``, a broadcast 1-row query cross join + TakeOrdered.
+- batch k-NN: ``knn_join`` and ``ivf_knn_join`` run one Arrow-batched
+  BLAS corpus scan, ``_knn_scan``; IVF adds only a probe mask.
+- near-duplicate pairs: ``embedding_dup_pairs``'s exact all-pairs is
+  the one-bucket case of its candidate path; both run the block nested
+  loop ``_sub_block_pairs`` (one BLAS kernel per block pair).
+- candidate generators: ``assign_centroids`` /
+  ``multi_probe_assignments`` (IVF lists; centroids resolved by
+  ``_centroid_table``) and ``hyperplane_lsh_buckets``.
 
-All vector math is built-in (zip_with + aggregate fold in double
-precision) — no UDFs, fully codegen'd, and expressible 1:1 in the
-DuckDB oracle (list_dot_product over DOUBLE[]).
+The Catalyst paths' vector math is built-in (zip_with + aggregate fold
+in double precision) — no UDFs, fully codegen'd, and expressible 1:1
+in the DuckDB oracle (list_dot_product over DOUBLE[]).
 
 Centroid policy: deterministic "seed centroids" — the vectors with
 the ``n_centroids`` smallest ids — keep every operator bit-replayable
@@ -76,24 +75,30 @@ def with_norm(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return emb.withColumn("vec", v).withColumn("norm", F.sqrt(_dot(F.col("vec"), F.col("vec"))))
 
 
-def cosine_topk(
-    emb: DataFrame,
-    query_id: int,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k neighbors of one stored vector by cosine:
-    (vec_id, cosine), ties broken by id. The query vector rides along
-    as a broadcast 1-row cross join; the top-k is a distributed
-    TakeOrderedAndProject (no global sort materialization)."""
-    base = with_norm(emb, vec_col).select(F.col(id_col).alias("vec_id"), "vec", "norm")
-    q = base.filter(F.col("vec_id") == query_id).select(
+def _normed(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(vec_id, vec, norm): the Catalyst paths' scoring base."""
+    return with_norm(emb, vec_col).select(F.col(id_col).alias("vec_id"), "vec", "norm")
+
+
+def _query_row(base: DataFrame, query_id: int) -> DataFrame:
+    """The 1-row (qvec, qnorm) frame of one stored query vector."""
+    return base.filter(F.col("vec_id") == query_id).select(
         F.col("vec").alias("qvec"), F.col("norm").alias("qnorm")
     )
+
+
+def _exact_topk(
+    base: DataFrame, query_id: int, k: int, candidates: DataFrame | None = None
+) -> DataFrame:
+    """The one exact top-k tail of the one-query searches: score the
+    pool (``base``, semi-joined to the ``candidates`` vec_ids when
+    given, minus the query itself) against the query row, which rides
+    along as a broadcast 1-row cross join; the top-k is a distributed
+    TakeOrderedAndProject (no global sort materialization)."""
+    pool = base if candidates is None else base.join(candidates, "vec_id", "left_semi")
     return (
-        base.filter(F.col("vec_id") != query_id)
-        .crossJoin(F.broadcast(q))
+        pool.filter(F.col("vec_id") != query_id)
+        .crossJoin(F.broadcast(_query_row(base, query_id)))
         .select(
             "vec_id",
             _cosine(_dot(F.col("vec"), F.col("qvec")), F.col("norm"), F.col("qnorm")).alias(
@@ -104,6 +109,19 @@ def cosine_topk(
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(k)
     )
+
+
+def cosine_topk(
+    emb: DataFrame,
+    query_id: int,
+    k: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Exact top-k neighbors of one stored vector by cosine:
+    (vec_id, cosine), ties broken by id — ``_exact_topk`` over the
+    whole corpus."""
+    return _exact_topk(_normed(emb, id_col, vec_col), query_id, k)
 
 
 def _stack_rect(arrs, where: str):
@@ -125,6 +143,18 @@ def _stack_rect(arrs, where: str):
         ) from e
 
 
+def _kernel_rows(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(vid long, vec array<double>) rows for the BLAS kernels. NULL
+    embeddings are degenerate (match nothing) — and they MUST be
+    dropped before a kernel: np.stack raises on a None row, failing
+    the whole job where the Catalyst twins just emit a NULL cosine
+    that _finite drops."""
+    return emb.filter(F.col(vec_col).isNotNull()).select(
+        F.col(id_col).cast("long").alias("vid"),
+        F.col(vec_col).cast("array<double>").alias("vec"),
+    )
+
+
 def embedding_dup_pairs(
     emb: DataFrame,
     threshold: float = 0.95,
@@ -138,13 +168,14 @@ def embedding_dup_pairs(
     vec_a < vec_b and cosine ≥ threshold.
 
     Without ``candidates``: EXACT all-pairs, via *block nested-loop
-    with a BLAS inner kernel*. Vectors are hashed into ``n_blocks``
-    blocks; each unordered block pair (i ≤ j) becomes one
-    ``applyInPandas`` group whose rows carry both blocks' vectors, and
-    inside the group the full cosine submatrix is one NumPy matmul.
-    Every unordered vector pair lands in exactly one block pair (its
-    own blocks'), so the result is the exact all-pairs answer with no
-    dedup pass.
+    with a BLAS inner kernel* — the candidate path below with ONE
+    bucket holding every vector, split into ``n_blocks`` sub-blocks by
+    id (``_sub_block_pairs``). Each unordered sub-block pair (i ≤ j)
+    becomes one ``applyInPandas`` group whose rows carry both
+    sub-blocks' vectors, and inside the group the full cosine
+    submatrix is one NumPy matmul. Every unordered vector pair lands
+    in exactly one sub-block pair (its own sub-blocks'), so the result
+    is the exact all-pairs answer with no dedup pass.
 
     With ``candidates`` — a 2-column DataFrame (vector id, bucket id)
     from any candidate generator (IVF: assign_centroids' assignment;
@@ -165,9 +196,9 @@ def embedding_dup_pairs(
 
     Scale: exact mode's total work is N²·dim multiply-adds no matter
     what — at 100 TB always feed ``candidates``. The knob that matters
-    in exact mode is ``n_blocks``: each group holds ~2N/n_blocks
-    vectors (bound it to executor memory); data replication is
-    ~(n_blocks+1)/2 ×. Groups are independent → embarrassingly
+    in exact mode is ``n_blocks`` (≥ 1): each group holds ~2N/n_blocks
+    vectors (bound it to executor memory); each vector is replicated
+    into its n_blocks groups. Groups are independent → embarrassingly
     parallel across executors. In candidate mode hot buckets are
     sub-split automatically (``max_bucket_vectors``, see
     `_bucketed_dup_pairs`): kernel memory stays bounded and a skewed
@@ -177,44 +208,102 @@ def embedding_dup_pairs(
         return _bucketed_dup_pairs(
             emb, threshold, id_col, vec_col, candidates, max_bucket_vectors
         )
-    spark = emb.sparkSession
-    # NULL embeddings are degenerate (match nothing) — and they MUST
-    # be dropped before the kernel: np.stack raises on a None row,
-    # failing the whole job where the Catalyst twins just emit a NULL
-    # cosine that _finite drops
-    base = emb.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).cast("long").alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-        F.pmod(F.col(id_col).cast("long"), F.lit(n_blocks)).cast("int").alias("blk"),
+    if n_blocks < 1:
+        # pmod(id, 0) is NULL, and a zero or negative block count
+        # would reach the plan as an empty or nonsensical expansion —
+        # a dedup that silently finds nothing
+        raise ValueError(f"n_blocks must be >= 1, got {n_blocks}")
+    return _sub_block_pairs(
+        _kernel_rows(emb, id_col, vec_col).select(
+            F.lit(0).alias("bkt"),
+            "vid",
+            "vec",
+            F.lit(n_blocks).alias("nb"),
+            F.pmod(F.col("vid"), F.lit(n_blocks)).cast("int").alias("sub"),
+        ),
+        threshold,
     )
-    block_pairs = spark.createDataFrame(
-        [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
-        "pa: int, pb: int",
-    )
-    # diagonal groups (pa == pb) carry ONE copy of the block as side 0
-    # — the shared kernel self-joins it, so the exact path's diagonal
-    # replication is halved vs emitting both sides
-    side_a = base.join(F.broadcast(block_pairs), F.col("blk") == F.col("pa")).select(
-        "pa", "pb", F.lit(0).alias("side"), "vid", "vec"
-    )
-    side_b = base.join(
-        F.broadcast(block_pairs.filter(F.col("pa") != F.col("pb"))),
-        F.col("blk") == F.col("pb"),
-    ).select("pa", "pb", F.lit(1).alias("side"), "vid", "vec")
 
-    return (
-        side_a.unionByName(side_b)
-        .groupBy("pa", "pb")
-        .applyInPandas(
-            _block_cosines_kernel(threshold),
-            "vec_a long, vec_b long, cosine double",
+
+def _bucketed_dup_pairs(
+    emb: DataFrame,
+    threshold: float,
+    id_col: str,
+    vec_col: str,
+    candidates: DataFrame,
+    max_bucket_vectors: int = 1024,
+) -> DataFrame:
+    """Candidate-pruned near-dup pairs: score only pairs co-located in
+    a candidate bucket. One shuffle of the (pruned) corpus on the
+    bucket id; the same sub-block nested loop as the exact path runs
+    per bucket.
+
+    Hot buckets are SUB-SPLIT, not trusted: a bucket with B >
+    ``max_bucket_vectors`` members becomes ceil(B/max)² sub-block
+    pairs (the exact path's block nested-loop, scoped to the bucket),
+    so one skewed candidate list can neither OOM a task (kernel
+    allocation is bounded by max² doubles ≈ 8 MB at the default) nor
+    serialize the stage into one giant matmul — at 100 TB the hottest
+    IVF list parallelizes across the cluster instead of pinning one
+    executor. Total multiply-adds are unchanged; replication per row
+    is the per-bucket sub-block count (1 for any bucket under the
+    cap, so the common case pays nothing).
+
+    Caching note: the normalized candidate table is disk-cached
+    (persist_big) for the session so bucket sizing and the row join
+    share one pass over the generator's subtree;
+    ``session.clear_materialized`` releases it."""
+    if max_bucket_vectors < 1:
+        # a zero cap must not reach the plan: under legacy division
+        # ceil(count/0) is NULL (explode() silently drops every row —
+        # a "dedup" that finds nothing) and under ANSI (Spark 4
+        # default) it crashes mid-job. No disable value; pass a huge
+        # cap instead.
+        raise ValueError(
+            f"max_bucket_vectors must be >= 1, got {max_bucket_vectors}"
         )
+    from ..plans import persist_big
+
+    idc, bkc = candidates.columns[:2]
+    # persist_big: the candidate table feeds TWO consumers (bucket
+    # sizing + the row join) — without a cache the generator's whole
+    # subtree (IVF assignment scoring, LSH plane dots) replays per
+    # consumer, plan-verified as a doubled corpus scan. Narrow
+    # (vid, bkt) rows on DISK_ONLY — no storage-memory pinning.
+    cand = persist_big(
+        candidates.select(
+            F.col(idc).cast("long").alias("vid"),
+            F.col(bkc).cast("long").alias("bkt"),
+        ).dropDuplicates(["vid", "bkt"])
+    )
+    sizes = cand.groupBy("bkt").agg(
+        F.ceil(F.count(F.lit(1)) / max_bucket_vectors).cast("int").alias("nb")
+    )
+    rows = (
+        _kernel_rows(emb, id_col, vec_col)
+        .join(cand, "vid")
+        .join(sizes, "bkt")
+        .withColumn("sub", F.pmod(F.xxhash64("vid"), F.col("nb")).cast("int"))
+    )
+    return (
+        _sub_block_pairs(rows, threshold)
+        # multi-bucket membership (LSH) can surface a pair twice with
+        # the identical cosine — keep one
+        .dropDuplicates(["vec_a", "vec_b"])
     )
 
 
-def _block_cosines_kernel(threshold: float):
-    """The ONE BLAS pair-scoring kernel both near-dup paths share
-    (exact block nested-loop AND candidate-bucket sub-blocks) — the
+def _sub_block_pairs(rows: DataFrame, threshold: float) -> DataFrame:
+    """Block nested loop over (bkt, vid, vec, nb, sub) rows: bucket
+    ``bkt`` is split into ``nb`` sub-blocks and the row sits in
+    sub-block ``sub``. A row in sub-block s meets every sub-block j of
+    its bucket exactly once: as side 0 of group (s, j) when j ≥ s
+    (j = s is the diagonal group, which carries ONE copy of the
+    sub-block), else as side 1 of group (j, s). One sequence(0, nb-1)
+    per row generates all nb memberships map-side; the only shuffle is
+    the (bkt, pa, pb) group exchange.
+
+    Each group runs the ONE BLAS pair-scoring kernel — the
     engine-semantics subtleties live in exactly one place:
 
     - degenerate vectors match NOTHING: zero-norm cosines are NULL in
@@ -229,10 +318,7 @@ def _block_cosines_kernel(threshold: float):
     - an off-diagonal group crosses two disjoint sub-sets; every pair
       occurs exactly once but the smaller id can sit on either side —
       ids are min/max-ordered on output (the != guard is
-      defense-in-depth; sub assignment is a function of the id).
-
-    Group columns beyond (pa, pb, side, vid, vec) — e.g. the bucket id
-    — ride along unused."""
+      defense-in-depth; sub assignment is a function of the id)."""
 
     def kernel(pdf):
         import numpy as np
@@ -277,78 +363,6 @@ def _block_cosines_kernel(threshold: float):
             }
         )
 
-    return kernel
-
-
-def _bucketed_dup_pairs(
-    emb: DataFrame,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-    candidates: DataFrame,
-    max_bucket_vectors: int = 1024,
-) -> DataFrame:
-    """Candidate-pruned near-dup pairs: score only pairs co-located in
-    a candidate bucket. One shuffle of the (pruned) corpus on the
-    bucket id; the same strict-upper-triangle BLAS kernel as the exact
-    path runs per bucket.
-
-    Hot buckets are SUB-SPLIT, not trusted: a bucket with B >
-    ``max_bucket_vectors`` members becomes ceil(B/max)² sub-block
-    pairs (the exact path's block nested-loop, scoped to the bucket),
-    so one skewed candidate list can neither OOM a task (kernel
-    allocation is bounded by max² doubles ≈ 8 MB at the default) nor
-    serialize the stage into one giant matmul — at 100 TB the hottest
-    IVF list parallelizes across the cluster instead of pinning one
-    executor. Total multiply-adds are unchanged; replication per row
-    is the per-bucket sub-block count (1 for any bucket under the
-    cap, so the common case pays nothing).
-
-    Caching note: the normalized candidate table is disk-cached
-    (persist_big) for the session so bucket sizing and the row join
-    share one pass over the generator's subtree;
-    ``session.clear_materialized`` releases it."""
-    if max_bucket_vectors < 1:
-        # a zero cap must not reach the plan: under legacy division
-        # ceil(count/0) is NULL (explode() silently drops every row —
-        # a "dedup" that finds nothing) and under ANSI (Spark 4
-        # default) it crashes mid-job. No disable value; pass a huge
-        # cap instead.
-        raise ValueError(
-            f"max_bucket_vectors must be >= 1, got {max_bucket_vectors}"
-        )
-    from ..plans import persist_big
-
-    idc, bkc = candidates.columns[:2]
-    # persist_big: the candidate table feeds TWO consumers (bucket
-    # sizing + the row join) — without a cache the generator's whole
-    # subtree (IVF assignment scoring, LSH plane dots) replays per
-    # consumer, plan-verified as a doubled corpus scan. Narrow
-    # (vid, bkt) rows on DISK_ONLY — no storage-memory pinning.
-    cand = persist_big(
-        candidates.select(
-            F.col(idc).cast("long").alias("vid"),
-            F.col(bkc).cast("long").alias("bkt"),
-        ).dropDuplicates(["vid", "bkt"])
-    )
-    sizes = cand.groupBy("bkt").agg(
-        F.ceil(F.count(F.lit(1)) / max_bucket_vectors).cast("int").alias("nb")
-    )
-    rows = (
-        emb.filter(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col).cast("long").alias("vid"),
-            F.col(vec_col).cast("array<double>").alias("vec"),
-        )
-        .join(cand, "vid")
-        .join(sizes, "bkt")
-        .withColumn("sub", F.pmod(F.xxhash64("vid"), F.col("nb")).cast("int"))
-    )
-    # A row in sub-block s meets every sub-block j exactly once: as
-    # side 0 of group (s, j) when j ≥ s (j = s is the diagonal group,
-    # which carries ONE copy of the sub-block — the kernel self-joins
-    # it), else as side 1 of group (j, s). One sequence(0, nb-1) per
-    # row generates all nb memberships.
     expanded = rows.select(
         "bkt",
         "vid",
@@ -365,31 +379,26 @@ def _bucketed_dup_pairs(
         ).alias("x"),
     ).select("bkt", F.col("x.pa").alias("pa"), F.col("x.pb").alias("pb"),
              F.col("x.side").alias("side"), "vid", "vec")
-
-    return (
-        expanded.groupBy("bkt", "pa", "pb")
-        .applyInPandas(
-            _block_cosines_kernel(threshold),
-            "vec_a long, vec_b long, cosine double",
-        )
-        # multi-bucket membership (LSH) can surface a pair twice with
-        # the identical cosine — keep one
-        .dropDuplicates(["vec_a", "vec_b"])
+    return expanded.groupBy("bkt", "pa", "pb").applyInPandas(
+        kernel, "vec_a long, vec_b long, cosine double"
     )
 
 
+_KNN_SCHEMA = "query_id long, vec_id long, cosine double"
+
+
 def _masked_partial_topk(sims, ids, norms, b_qids, b_qnorm, k):
-    """THE kernel tier's one selection definition, shared by knn_join
-    and ivf_knn_join (round-3/4 reviews kept finding bugs in exactly
-    this class — tie ordering, degenerate masking, keep-filtering —
-    so the semantics live in one place): mask degenerate rows/queries
-    (zero-norm → the Catalyst twins' NULL posture; NaN cosines — which
-    could not survive the Arrow boundary anyway, pandas NaN IS the
-    null sentinel; self-matches), then per query partial-select
-    followed by the exact (cosine desc, id asc) order capped at k.
-    Callers may pre-apply extra -inf masks (ivf's probe mask) — all
-    masking is idempotent. Returns the (query_id, vec_id, cosine)
-    pandas frame for the batch."""
+    """THE kernel tier's one selection definition, run by
+    ``_knn_scan`` per corpus batch (round-3/4 reviews kept finding bugs
+    in exactly this class — tie ordering, degenerate masking,
+    keep-filtering — so the semantics live in one place): mask
+    degenerate rows/queries (zero-norm → the Catalyst twins' NULL
+    posture; NaN cosines — which could not survive the Arrow boundary
+    anyway, pandas NaN IS the null sentinel; self-matches), then per
+    query partial-select followed by the exact (cosine desc, id asc)
+    order capped at k. The caller may pre-apply extra -inf masks (the
+    IVF probe mask) — all masking is idempotent. Returns the
+    (query_id, vec_id, cosine) pandas frame for the batch."""
     import numpy as np
     import pandas as pd
 
@@ -416,6 +425,82 @@ def _masked_partial_topk(sims, ids, norms, b_qids, b_qnorm, k):
     return pd.DataFrame({"query_id": out_q, "vec_id": out_v, "cosine": out_c})
 
 
+def _query_matrix(queries: DataFrame, id_col: str, vec_col: str, where: str):
+    """The query side collected to the driver: (qids, qmat) over the
+    non-NULL query vectors, or None when there are none."""
+    import numpy as np
+
+    qrows = _kernel_rows(queries, id_col, vec_col).collect()
+    if not qrows:
+        return None
+    qids = np.array([r["vid"] for r in qrows], dtype="int64")
+    qmat = _stack_rect(
+        [np.asarray(r["vec"], dtype="float64") for r in qrows], f"{where} queries"
+    )
+    return qids, qmat
+
+
+def _knn_scan(
+    corpus: DataFrame,
+    qids,
+    qmat,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    where: str,
+    probe=None,
+) -> DataFrame:
+    """The one corpus scan of the batch k-NN joins: broadcast the
+    query matrix, score each Arrow batch against all queries with one
+    BLAS matmul, keep a per-batch partial top-k per query, then a
+    per-query top-k window over the tiny candidate table.
+
+    ``probe`` = (cmat, cnorm, mask) restricts each query to its probed
+    IVF lists: every corpus row is assigned to its centroid in-kernel
+    (argmax against the KB-sized centroid matrix, rows cid-ascending)
+    and ``mask[centroid, query]`` says whether the query probes it."""
+    import numpy as np
+
+    bc = corpus.sparkSession.sparkContext.broadcast(
+        (qids, qmat, np.linalg.norm(qmat, axis=1), probe)
+    )
+
+    def batch_topk(pdfs):
+        import numpy as np
+
+        b_qids, b_qmat, b_qnorm, b_probe = bc.value
+        for pdf in pdfs:
+            if pdf.empty:
+                continue
+            ids = pdf["vid"].to_numpy()
+            m = _stack_rect(pdf["vec"].to_numpy(), f"{where} corpus")
+            norms = np.linalg.norm(m, axis=1)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                # (batch × Q) cosine submatrix in one BLAS call
+                sims = (m @ b_qmat.T) / np.outer(norms, b_qnorm)
+                if b_probe is not None:
+                    cmat, cnorm, mask = b_probe
+                    # per-row centroid: argmax cosine, ties → smaller
+                    # cid (argmax takes the first). NaN-sanitize BEFORE
+                    # argmax: a zero-norm corpus row scores 0/0 = NaN
+                    # against every centroid and NaN propagates as the
+                    # max — such rows are degenerate and their query
+                    # sims are masked anyway
+                    cs = (m @ cmat.T) / np.outer(norms, cnorm)
+                    ca = np.argmax(np.where(np.isnan(cs), -np.inf, cs), axis=1)
+                    sims[~mask[ca]] = -np.inf  # not in a probed list
+            # masking + selection semantics live in ONE place
+            yield _masked_partial_topk(sims, ids, norms, b_qids, b_qnorm, k)
+
+    cand = _kernel_rows(corpus, id_col, vec_col).mapInPandas(batch_topk, _KNN_SCHEMA)
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
+    return (
+        cand.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("query_id", "vec_id", "cosine")
+    )
+
+
 def knn_join(
     queries: DataFrame,
     corpus: DataFrame,
@@ -429,70 +514,23 @@ def knn_join(
     (hard-negative mining, cross-corpus dedup) where per-query
     ``cosine_topk`` calls would re-scan the corpus Q times.
 
-    Physical strategy: the query side is collected to a dense matrix
-    and broadcast (it is the SMALL side by contract — exactly a
-    broadcast hash join's build side, ~Q·dim·8 bytes); the corpus
-    streams through ONE Arrow-batched ``mapInPandas`` scan that scores
-    each batch against all queries with a single BLAS matmul and keeps
-    a per-batch partial top-k per query. The surviving Q·k-per-batch
-    candidate table is tiny, so the global per-query top-k window at
-    the end shuffles candidates, never the corpus: one corpus scan,
-    zero corpus shuffles, regardless of Q.
+    Physical strategy (``_knn_scan``): the query side is collected to
+    a dense matrix and broadcast (it is the SMALL side by contract —
+    exactly a broadcast hash join's build side, ~Q·dim·8 bytes); the
+    corpus streams through ONE Arrow-batched ``mapInPandas`` scan that
+    scores each batch against all queries with a single BLAS matmul
+    and keeps a per-batch partial top-k per query. The surviving
+    Q·k-per-batch candidate table is tiny, so the global per-query
+    top-k window at the end shuffles candidates, never the corpus: one
+    corpus scan, zero corpus shuffles, regardless of Q.
 
-    At 100 TB compose with IVF: semi-join the corpus on the queries'
-    probed centroid lists first (assign_centroids), then knn_join the
-    pruned scan — the kernel is unchanged.
+    At 100 TB compose with IVF: ``ivf_knn_join`` runs the same scan
+    with each query restricted to its probed centroid lists.
     """
-    import numpy as np
-
-    spark = corpus.sparkSession
-    # NULL embeddings dropped on both sides before np.stack (same
-    # kernel-tier posture as embedding_dup_pairs: degenerate rows
-    # match nothing, they must not crash the stack call)
-    qrows = (
-        queries.filter(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col).cast("long").alias("qid"),
-            F.col(vec_col).cast("array<double>").alias("qv"),
-        )
-        .collect()
-    )
-    if not qrows:
-        return spark.createDataFrame([], "query_id long, vec_id long, cosine double")
-    qids = np.array([r["qid"] for r in qrows], dtype="int64")
-    qmat = _stack_rect(
-        [np.asarray(r["qv"], dtype="float64") for r in qrows], "knn_join queries"
-    )
-    qnorm = np.linalg.norm(qmat, axis=1)
-    bc = spark.sparkContext.broadcast((qids, qmat, qnorm))
-
-    def batch_topk(pdfs):
-        import numpy as np
-        import pandas as pd
-
-        b_qids, b_qmat, b_qnorm = bc.value
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            ids = pdf["vid"].to_numpy()
-            m = _stack_rect(pdf["vec"].to_numpy(), "knn_join corpus")
-            norms = np.linalg.norm(m, axis=1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                # (batch × Q) cosine submatrix in one BLAS call
-                sims = (m @ b_qmat.T) / np.outer(norms, b_qnorm)
-            # masking + selection semantics live in ONE place
-            yield _masked_partial_topk(sims, ids, norms, b_qids, b_qnorm, k)
-
-    cand = corpus.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).cast("long").alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-    ).mapInPandas(batch_topk, "query_id long, vec_id long, cosine double")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "vec_id", "cosine")
-    )
+    q = _query_matrix(queries, id_col, vec_col, "knn_join")
+    if q is None:
+        return corpus.sparkSession.createDataFrame([], _KNN_SCHEMA)
+    return _knn_scan(corpus, *q, k, id_col, vec_col, "knn_join")
 
 
 def ivf_knn_join(
@@ -512,10 +550,10 @@ def ivf_knn_join(
     row-mask, not a join. Exact within the probed lists; recall follows
     the standard IVF n_probe/n_centroids trade.
 
-    Probe selection (query side) runs through the same Catalyst
-    expressions as `ivf_topk`, so an SQL oracle reproduces the probe
-    sets exactly. Corpus-side centroid assignment happens INSIDE the
-    kernel (argmax against the KB-sized broadcast centroid matrix, same
+    Probe selection (query side) is ``multi_probe_assignments`` over
+    the queries, so an SQL oracle reproduces the probe sets exactly.
+    Corpus-side centroid assignment happens INSIDE the kernel (argmax
+    against the KB-sized broadcast centroid matrix, same
     sim-desc/cid-asc tie order as assign_centroids) — no N-row
     assignment table is ever joined or shuffled.
     """
@@ -523,96 +561,31 @@ def ivf_knn_join(
 
     from ..plans import materialize
 
-    spark = corpus.sparkSession
-    cents, _ = assign_centroids(corpus, n_centroids, id_col, vec_col)
     # the centroid table is consumed by TWO driver actions (the probes
     # job and the crows collect); left lazy, each replays the
     # corpus-wide seed TakeOrdered — materialize the KB-sized table
     # once (same reasoning as ivf_topk's plan-audited fix)
-    cents = materialize(cents)
-    qbase = (
-        with_norm(queries, vec_col)
-        .filter(F.col("vec").isNotNull())
-        .select(F.col(id_col).cast("long").alias("qid"), "vec", "norm")
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("centroid_id"))
-    probes = (
-        qbase.crossJoin(F.broadcast(cents))
-        .select(
-            "qid",
-            "centroid_id",
-            _cosine(_dot(F.col("vec"), F.col("cvec")), F.col("norm"), F.col("cnorm")).alias(
-                "sim"
-            ),
-        )
-        .transform(lambda d: _finite(d, "sim"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= n_probe)
-        .select("qid", "centroid_id")
-        .collect()
-    )
-    qrows = qbase.select("qid", "vec").collect()
-    if not qrows:
-        return spark.createDataFrame([], "query_id long, vec_id long, cosine double")
-    qids = np.array([r["qid"] for r in qrows], dtype="int64")
-    qmat = _stack_rect(
-        [np.asarray(r["vec"], dtype="float64") for r in qrows],
-        "ivf_knn_join queries",
-    )
-    qnorm = np.linalg.norm(qmat, axis=1)
-    qpos = {int(q): j for j, q in enumerate(qids)}
+    cents = materialize(_seed_centroids(_normed(corpus, id_col, vec_col), n_centroids))
+    probes = multi_probe_assignments(
+        queries, n_probe=n_probe, id_col=id_col, vec_col=vec_col, centroids=cents
+    ).collect()
+    q = _query_matrix(queries, id_col, vec_col, "ivf_knn_join")
     crows = sorted(
         cents.select("centroid_id", "cvec").collect(), key=lambda r: r["centroid_id"]
     )
-    if not crows:
-        # empty corpus -> no centroids: the sibling knn_join contract
-        # (empty result, not an np.stack crash on [])
-        return spark.createDataFrame([], "query_id long, vec_id long, cosine double")
+    if q is None or not crows:
+        # no queries, or an empty corpus -> no centroids: the sibling
+        # knn_join contract (empty result, not an np.stack crash on [])
+        return corpus.sparkSession.createDataFrame([], _KNN_SCHEMA)
+    qids, qmat = q
     cmat = np.stack([np.asarray(r["cvec"], dtype="float64") for r in crows])
-    cnorm = np.linalg.norm(cmat, axis=1)
+    qpos = {int(v): j for j, v in enumerate(qids)}
     cpos = {int(r["centroid_id"]): i for i, r in enumerate(crows)}
     mask = np.zeros((len(crows), len(qids)), dtype=bool)
     for r in probes:
-        mask[cpos[int(r["centroid_id"])], qpos[int(r["qid"])]] = True
-    bc = spark.sparkContext.broadcast((qids, qmat, qnorm, cmat, cnorm, mask))
-
-    def batch_topk(pdfs):
-        import numpy as np
-        import pandas as pd
-
-        b_qids, b_qmat, b_qnorm, b_cmat, b_cnorm, b_mask = bc.value
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            ids = pdf["vid"].to_numpy()
-            m = _stack_rect(pdf["vec"].to_numpy(), "ivf_knn_join corpus")
-            norms = np.linalg.norm(m, axis=1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                # per-row centroid: argmax cosine, ties → smaller cid
-                # (cmat rows are cid-ascending, argmax takes the first).
-                # NaN-sanitize BEFORE argmax: a zero-norm corpus row
-                # scores 0/0 = NaN against every centroid and NaN
-                # propagates as the max — such rows are degenerate and
-                # their query sims are masked below anyway
-                cs = (m @ b_cmat.T) / np.outer(norms, b_cnorm)
-                ca = np.argmax(np.where(np.isnan(cs), -np.inf, cs), axis=1)
-                sims = (m @ b_qmat.T) / np.outer(norms, b_qnorm)
-            # the probe mask is the IVF-specific extra; everything
-            # else (degenerate masking + selection) is the shared
-            # kernel definition
-            sims[~b_mask[ca]] = -np.inf  # not in a probed list
-            yield _masked_partial_topk(sims, ids, norms, b_qids, b_qnorm, k)
-
-    cand = corpus.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).cast("long").alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-    ).mapInPandas(batch_topk, "query_id long, vec_id long, cosine double")
-    wq = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        cand.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "vec_id", "cosine")
-    )
+        mask[cpos[int(r["centroid_id"])], qpos[int(r["vec_id"])]] = True
+    probe = (cmat, np.linalg.norm(cmat, axis=1), mask)
+    return _knn_scan(corpus, qids, qmat, k, id_col, vec_col, "ivf_knn_join", probe)
 
 
 def kmeans_centroids(
@@ -702,22 +675,26 @@ def kmeans_centroids(
 DEFAULT_N_CENTROIDS = 8
 
 
-def _resolve_n_centroids(
-    fn: str, n_centroids: int | None, centroids: DataFrame | None
-) -> int | None:
-    """None-sentinel resolution of the two centroid knobs: an explicit
-    centroids table fully determines the centroid set, so a caller
-    ALSO passing n_centroids (ANY value — a sentinel, unlike the old
-    magic-8 comparison, detects an explicit 8 too) gets a loud error
-    instead of a silently-ignored knob."""
-    if centroids is not None:
-        if n_centroids is not None:
-            raise ValueError(
-                f"{fn}: n_centroids={n_centroids} is ignored when a"
-                " centroids DataFrame is supplied — pass one or the other"
-            )
-        return None
-    return DEFAULT_N_CENTROIDS if n_centroids is None else n_centroids
+def _centroid_table(
+    fn: str, base: DataFrame, n_centroids: int | None, centroids: DataFrame | None
+) -> DataFrame:
+    """The one resolver of the two centroid knobs: the supplied
+    (centroid_id, cvec, cnorm) table, else the seed centroids of
+    ``base`` (``n_centroids``, default DEFAULT_N_CENTROIDS). An
+    explicit centroids table fully determines the centroid set, so a
+    caller ALSO passing n_centroids (ANY value — a None sentinel,
+    unlike a magic-8 comparison, detects an explicit 8 too) gets a
+    loud error instead of a silently-ignored knob."""
+    if centroids is None:
+        return _seed_centroids(
+            base, DEFAULT_N_CENTROIDS if n_centroids is None else n_centroids
+        )
+    if n_centroids is not None:
+        raise ValueError(
+            f"{fn}: n_centroids={n_centroids} is ignored when a"
+            " centroids DataFrame is supplied — pass one or the other"
+        )
+    return centroids.select("centroid_id", "cvec", "cnorm")
 
 
 def assign_centroids(
@@ -735,12 +712,9 @@ def assign_centroids(
     plan. When ``centroids`` is supplied it takes full precedence:
     ``n_centroids`` is ignored (raises if both are explicitly set to
     avoid a silently-ignored knob)."""
-    base = with_norm(emb, vec_col).select(F.col(id_col).alias("vec_id"), "vec", "norm")
-    n = _resolve_n_centroids("assign_centroids", n_centroids, centroids)
-    if centroids is not None:
-        cents = centroids.select("centroid_id", "cvec", "cnorm")
-    else:
-        cents = _seed_centroids(base, n)
+    cents = _centroid_table(
+        "assign_centroids", _normed(emb, id_col, vec_col), n_centroids, centroids
+    )
     assignment = multi_probe_assignments(
         emb, n_probe=1, id_col=id_col, vec_col=vec_col, centroids=cents
     )
@@ -803,12 +777,8 @@ def multi_probe_assignments(
     (raises if both are explicitly set). One broadcast of the
     KB-sized centroid set — map-side at any scale;
     ``assign_centroids`` is exactly n_probe=1."""
-    base = with_norm(emb, vec_col).select(F.col(id_col).alias("vec_id"), "vec", "norm")
-    n = _resolve_n_centroids("multi_probe_assignments", n_centroids, centroids)
-    if centroids is not None:
-        cents = centroids.select("centroid_id", "cvec", "cnorm")
-    else:
-        cents = _seed_centroids(base, n)
+    base = _normed(emb, id_col, vec_col)
+    cents = _centroid_table("multi_probe_assignments", base, n_centroids, centroids)
     scored = base.crossJoin(F.broadcast(cents)).select(
         "vec_id",
         "centroid_id",
@@ -843,21 +813,18 @@ def ivf_topk(
     IVF trade). Returns (vec_id, cosine)."""
     from ..plans import materialize
 
-    base = with_norm(emb, vec_col).select(F.col(id_col).alias("vec_id"), "vec", "norm")
+    base = _normed(emb, id_col, vec_col)
     # materialize the KB-sized centroid table HERE (not in the lazy
     # helper): both the probe-selection branch and the assignment
     # branch consume it, and uncached each replays the corpus-wide
     # TakeOrdered (plan-audited: 6 scans → 4)
-    cents, assignment = assign_centroids(
-        emb, id_col=id_col, vec_col=vec_col,
-        centroids=materialize(_seed_centroids(base, n_centroids)),
-    )
-    q = base.filter(F.col("vec_id") == query_id).select(
-        F.col("vec").alias("qvec"), F.col("norm").alias("qnorm")
+    cents = materialize(_seed_centroids(base, n_centroids))
+    assignment = multi_probe_assignments(
+        emb, n_probe=1, id_col=id_col, vec_col=vec_col, centroids=cents
     )
     probes = (
         F.broadcast(cents)
-        .crossJoin(F.broadcast(q))
+        .crossJoin(F.broadcast(_query_row(base, query_id)))
         .select(
             "centroid_id",
             _cosine(_dot(F.col("cvec"), F.col("qvec")), F.col("cnorm"), F.col("qnorm")).alias(
@@ -870,20 +837,7 @@ def ivf_topk(
         .select("centroid_id")
     )
     candidates = assignment.join(F.broadcast(probes), "centroid_id").select("vec_id")
-    return (
-        base.join(candidates, "vec_id", "left_semi")
-        .filter(F.col("vec_id") != query_id)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            _cosine(_dot(F.col("vec"), F.col("qvec")), F.col("norm"), F.col("qnorm")).alias(
-                "cosine"
-            ),
-        )
-        .transform(_finite)
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-    )
+    return _exact_topk(base, query_id, k, candidates)
 
 
 def rademacher_planes(n_planes: int, dim: int, seed: int = 1) -> list[list[float]]:
@@ -952,9 +906,10 @@ def hyperplane_lsh_buckets(
     produce null sign bits → null buckets, which no bucket join
     matches: malformed vectors silently generate no candidates (same
     posture as the kernel paths, which require rectangular input)."""
-    if n_planes % n_bands != 0:
+    if n_bands < 1 or n_planes % n_bands != 0:
         raise ValueError(
-            f"n_bands ({n_bands}) must divide evenly n_planes ({n_planes})"
+            f"n_bands ({n_bands}) must be >= 1 and divide evenly"
+            f" n_planes ({n_planes})"
         )
     if dim is None:
         row = emb.agg(
@@ -1008,29 +963,9 @@ def lsh_topk(
     Recall is the banding S-curve; raise bands (or lower bits/band)
     for more recall, exactly like n_probe in IVF. Deterministic seeded
     planes ⇒ SQL-oracle replayable end to end."""
-    base = with_norm(emb, vec_col).select(F.col(id_col).alias("vec_id"), "vec", "norm")
     bk = hyperplane_lsh_buckets(emb, n_planes, n_bands, seed, id_col, vec_col, dim)
     q_buckets = bk.filter(F.col("vec_id") == query_id).select("bucket")
-    # no distinct: the left_semi probe below ignores duplicate
+    # no distinct: the left_semi probe in _exact_topk ignores duplicate
     # build-side ids, so deduping here would only add a shuffle
-    cand = (
-        bk.join(F.broadcast(q_buckets), "bucket")
-        .select("vec_id")
-        .filter(F.col("vec_id") != query_id)
-    )
-    q = base.filter(F.col("vec_id") == query_id).select(
-        F.col("vec").alias("qvec"), F.col("norm").alias("qnorm")
-    )
-    return (
-        base.join(cand, "vec_id", "left_semi")
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            _cosine(_dot(F.col("vec"), F.col("qvec")), F.col("norm"), F.col("qnorm")).alias(
-                "cosine"
-            ),
-        )
-        .transform(_finite)
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-    )
+    cand = bk.join(F.broadcast(q_buckets), "bucket").select("vec_id")
+    return _exact_topk(_normed(emb, id_col, vec_col), query_id, k, cand)

@@ -23,7 +23,7 @@ and its DuckDB oracle twin. A pair whose corr sits within ~5e-7 of
 the cut can therefore flip membership relative to the reference. The
 rounding exists because the raw cut differs between engines in the
 last ulp, making raw-boundary membership engine-specific (round-4
-BACKLOG item 3); parity between this engine and its oracle is exact.
+history/BACKLOG.md item 3); parity between this engine and its oracle is exact.
 A reference-conformance audit should read this as a documented
 contract deviation, not a bug.
 """
@@ -141,7 +141,7 @@ def get_similar_items(
         # 6-dp-ROUNDED cut (the repo's _r6 idiom): raw mean+k·σ can
         # differ between engines in the last ulp, so a raw comparison
         # makes membership of a pair sitting exactly on the cut
-        # engine-specific (BACKLOG round-4 item 3; oracle twin rounds
+        # engine-specific (history/BACKLOG.md round-4 item 3; oracle twin rounds
         # identically)
         out = (
             row.crossJoin(F.broadcast(th))
@@ -270,7 +270,7 @@ def similar_items_exact(
     # Boundary membership compares 6-dp-ROUNDED corr against the
     # 6-dp-ROUNDED cut (the repo's _r6 idiom): raw mean+k·σ can differ
     # between engines in the last ulp, making membership of a pair
-    # sitting exactly on the cut engine-specific (BACKLOG round-4
+    # sitting exactly on the cut engine-specific (history/BACKLOG.md round-4
     # item 3; the similar_exact_parts / publish_retrieve oracle twins
     # round identically).
     cooc = (

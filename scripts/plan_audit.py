@@ -4,7 +4,8 @@ counts for every declared query (the round-3 practice recorded in
 
 For each `queries()` entry, builds the DataFrame at $PROPIUS_ORACLE_SF_DIR
 (default sf0.001 — plan SHAPE is scale-invariant, so the smallest
-fixture is enough) and counts in the formatted physical plan:
+fixture is enough) and counts nodes — the `(n) Name` detail headers —
+in the formatted physical plan:
 
   scans     `Scan parquet` nodes — more scans of one table than the
             query has logical inputs means a shared subtree replays
@@ -26,11 +27,10 @@ writes its store; materialize() runs eager jobs) are measured on the
 plan of the RETURNED DataFrame — build-time side jobs aren't visible
 here, so their counts understate total work. BENCH covers those.
 
-Conversely, LAZY-cached subtrees (plans.persist_big) are REPRINTED
-under every consuming InMemoryTableScan in formatted mode, so their
-scan/exchange counts OVERSTATE runtime work — dedup_minhash_lsh shows
-14 scans / 37 exchanges on paper but executes the shingle/signature
-subtree once (2.9 s at sf0.1, in line with its siblings). Read counts
+LAZY-cached subtrees (plans.persist_big) are reprinted under every
+consuming InMemoryTableScan in the formatted tree but carry one node
+number, so they count once — dedup_minhash_lsh shows 2 scans / 8
+exchanges and executes the shingle/signature subtree once. Read counts
 as relative plan-shape signals, compare like with like, and confirm a
 suspected replay with the Spark UI / BENCH before "fixing" it.
 """
@@ -90,10 +90,14 @@ def main() -> int:
             )
             if args.dump:
                 (args.dump / f"{name}.txt").write_text(plan)
+            # formatted explain prints each node twice — once in the
+            # tree, once as its `(n) Name` detail header — so count the
+            # headers only
+            heads = "\n".join(re.findall(r"^\(\d+\) .*$", plan, re.M))
             counts = {
-                "scans": len(re.findall(r"Scan parquet", plan)),
-                "exch": len(re.findall(r"\bExchange\b", plan)),
-                "python": len(PY_NODES.findall(plan)),
+                "scans": len(re.findall(r"Scan parquet", heads)),
+                "exch": len(re.findall(r"\bExchange\b", heads)),
+                "python": len(PY_NODES.findall(heads)),
             }
             out[name] = counts
             print(

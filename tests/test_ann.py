@@ -478,6 +478,8 @@ def test_hyperplane_lsh_validation(spark):
     emb = _emb(spark, [(0, [1.0, 2.0])])
     with pytest.raises(ValueError, match="divide evenly"):
         hyperplane_lsh_buckets(emb, n_planes=10, n_bands=4)
+    with pytest.raises(ValueError, match="must be >= 1"):
+        hyperplane_lsh_buckets(emb, n_planes=16, n_bands=0)
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
     with pytest.raises(ValueError, match="empty input"):
         hyperplane_lsh_buckets(empty)
@@ -718,6 +720,24 @@ def test_lsh_dim_inference_uses_max_length(spark):
     got = bk.filter(F.col("bucket").isNotNull()).select("vec_id").distinct()
     # the two full-length vectors bucket; the short one nulls out
     assert sorted(r.vec_id for r in got.collect()) == [1, 2]
+
+
+def test_dup_pairs_reject_empty_block_counts(spark):
+    """A block or bucket cap below 1 must raise before any plan is
+    built: n_blocks=0 or -1 silently returned no pairs (a dedup that
+    finds nothing), and max_bucket_vectors=0 would do the same under
+    legacy division."""
+    import pytest
+
+    from propius_spark.operators import assign_centroids, embedding_dup_pairs
+
+    emb = _emb(spark, [(0, [1.0, 0.0]), (1, [0.99, 0.1]), (2, [0.0, 1.0])])
+    for n_blocks in (0, -1):
+        with pytest.raises(ValueError, match="n_blocks must be >= 1"):
+            embedding_dup_pairs(emb, threshold=0.5, n_blocks=n_blocks)
+    _, asg = assign_centroids(emb, n_centroids=2)
+    with pytest.raises(ValueError, match="max_bucket_vectors must be >= 1"):
+        embedding_dup_pairs(emb, threshold=0.5, candidates=asg, max_bucket_vectors=0)
 
 
 def test_kernels_reject_ragged_embeddings_loudly(spark):

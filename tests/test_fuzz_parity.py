@@ -16,7 +16,7 @@ test-suite budget.
 Seed-robustness mode: set PROPIUS_FUZZ_SEED_SHIFT=<int> to regenerate
 every hostile corpus under shifted seeds and re-run the full sweep —
 the committed probe that twice confirmed 71/71 green on reseeded data
-(ROUND4.md session-close note). Default 0 keeps the committed sweep
+(history/ROUND4.md session-close note). Default 0 keeps the committed sweep
 byte-deterministic; the hand-placed boundary rows (epoch-exact times,
 singleton payloads, ±Inf vectors, hostile keys) are seed-independent,
 so every pinned edge case survives any shift.

@@ -403,14 +403,17 @@ def test_rank_gap_window_exchange_reuse(spark, sf_dir):
     assert "Generate" not in plan
 
 
-def test_bucketed_dup_pairs_plan_shape(spark, sf_dir):
-    """Candidate-fed embedding near-dup (round-3 sub-split form): ONE
-    Arrow kernel (FlatMapGroupsInPandas), the sub-block expansion is a
-    map-side Generate below the group shuffle (replication costs no
-    extra shuffle), and the plan carries a bounded shuffle set — the
-    vid join pair, candidate dedup + bucket sizes, the kernel's group
-    shuffle, and the result dedup. A change that reintroduces
-    per-bucket single-task matmuls or a second kernel fails here."""
+@pytest.mark.parametrize("mode", ["candidates", "exact"])
+def test_bucketed_dup_pairs_plan_shape(spark, sf_dir, mode):
+    """Embedding near-dup (round-3 sub-split form): ONE Arrow kernel
+    (FlatMapGroupsInPandas), the sub-block expansion is a map-side
+    Generate below the group shuffle (replication costs no extra
+    shuffle), and the plan carries a bounded shuffle set — the vid
+    join pair, candidate dedup + bucket sizes, the kernel's group
+    shuffle, and the result dedup. Exact mode is the same expansion
+    over one bucket: one corpus scan, and no broadcast block-pair
+    joins. A change that reintroduces per-bucket single-task matmuls,
+    a second kernel or a second corpus read fails here."""
     import re
 
     from propius_spark.operators import assign_centroids, embedding_dup_pairs
@@ -418,8 +421,13 @@ def test_bucketed_dup_pairs_plan_shape(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
-    _, asg = assign_centroids(emb, n_centroids=4)
-    plan = _plan(embedding_dup_pairs(emb, threshold=0.4, candidates=asg))
+    if mode == "exact":
+        plan = _plan(embedding_dup_pairs(emb, threshold=0.4))
+        assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) == 1, plan
+        assert "BroadcastHashJoin" not in plan
+    else:
+        _, asg = assign_centroids(emb, n_centroids=4)
+        plan = _plan(embedding_dup_pairs(emb, threshold=0.4, candidates=asg))
 
     assert len(re.findall(r"^\(\d+\) FlatMapGroupsInPandas$", plan, re.M)) == 1
     assert len(re.findall(r"^\(\d+\) Generate$", plan, re.M)) == 1
