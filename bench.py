@@ -175,18 +175,20 @@ def _master_cpus(master: str) -> int:
 def _rollup(
     job_stages: dict[int, list[int] | None], stage_tasks: dict[int, int | None]
 ) -> dict[str, int]:
-    """Jobs, stages and tasks one query scheduled. `job_stages` maps
-    each job id of the query's job group to its stage ids, `stage_tasks`
-    maps a stage id to its task count; None marks a job or stage the
-    status tracker no longer holds, which is skipped (the job still
-    counts). AQE lists a reused stage under every job that reads it, so
-    a stage id counts once (ADVICE r8: counting per (job, stage) pair
-    inflated the very counts this profile exists to attribute). Pure
-    function, unit-tested without Spark (tests/test_bench_profile.py)."""
+    """Jobs, stages and tasks one query ran. `job_stages` maps each job
+    id of the query's job group to its stage ids, `stage_tasks` maps a
+    stage id to its completed-task count; None marks a job or stage the
+    status tracker no longer holds, and 0 a stage the job listed but
+    SKIPPED (its shuffle output already existed). Both are skipped (the
+    job still counts). AQE lists a reused stage under every job that
+    reads it, so a stage id counts once (ADVICE r8: counting per (job,
+    stage) pair inflated the very counts this profile exists to
+    attribute). Pure function, unit-tested without Spark
+    (tests/test_bench_profile.py)."""
     tasks: dict[int, int] = {}
     for sids in job_stages.values():
         for sid in sids or ():
-            if stage_tasks.get(sid) is not None:
+            if stage_tasks.get(sid):
                 tasks[sid] = stage_tasks[sid]
     return {"jobs": len(job_stages), "stages": len(tasks), "tasks": sum(tasks.values())}
 
@@ -271,7 +273,7 @@ def _time_query(spark, fn, sf_dir: str, group: str) -> dict:
         for j in tracker.getJobIdsForGroup(group)
     }
     stage_tasks = {
-        s: getattr(tracker.getStageInfo(s), "numTasks", None)
+        s: getattr(tracker.getStageInfo(s), "numCompletedTasks", None)
         for sids in job_stages.values()
         for s in sids or ()
     }

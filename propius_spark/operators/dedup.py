@@ -55,8 +55,8 @@ MINHASH_PRIME = 2_147_483_647
 # silently sorting an unbounded dictionary on a single core — switch
 # to id_mode='xxhash' (stateless, no dictionary) at that scale
 DICT_RANK_MAX = 10_000_000
-# ceiling on waiting for a materialized edge table's observed
-# fingerprint (see _observed_fingerprint)
+# ceiling on waiting for a materialized frame's observed metric (see
+# _observed)
 OBSERVATION_WAIT_S = 10.0
 MINHASH_A = [
     2654435761, 2246822519, 3266489917, 668265263, 374761393, 3141592653,
@@ -433,42 +433,28 @@ def minhash_lsh_pairs(
     return _jaccard_from_inter(inter, sizes, threshold)
 
 
-def _observed_fingerprint(e: DataFrame):
-    """Order-invariant set fingerprint of an (u, v) edge table:
-    (count, XOR of xxhash64(u, v)) — XOR, not sum, so the aggregate
-    can never overflow a long under ANSI mode, and the edge sets are
-    distinct by construction so XOR self-cancellation needs a genuine
-    64-bit collision. Equal sets always produce equal fingerprints,
-    so inequality is PROOF of change (the cheap direction the
-    convergence loop needs).
-
-    Attached as OBSERVED metrics so the fingerprint rides the SAME
-    action that materializes the edge table — a separate probe would
-    be one whole scheduled job per checkpoint wave. Safe as an
-    observation precisely because both aggregates are exact-integer
-    and order-invariant (count; XOR is commutative/associative), so
-    the completion-order partial merge of the metrics accumulator is
-    bit-identical to the in-plan aggregate — the float-summing probes
-    elsewhere (correlation._global_scalars) must NOT be folded this
-    way, their merge order would become nondeterministic. Returns
-    (observed_df, get) where get() yields the (n, h) tuple once the
-    frame has been materialized; an empty table fingerprints as
-    (0, None).
+def _observed(df: DataFrame, agg):
+    """Attach ONE exact-integer aggregate to `df` as observed metrics,
+    so the value rides the action that materializes the frame — a
+    separate probe would be one whole scheduled job. Only exact-integer,
+    order-invariant aggregates belong here (count, max of an int): the
+    metrics accumulator merges partials in task-completion order, and
+    the float-summing probes elsewhere (correlation._global_scalars)
+    would become nondeterministic this way. Returns (observed_df, get);
+    get() yields the value once the frame has been materialized (count
+    of an empty frame is 0, max is None).
 
     get() never blocks unbounded: ``Observation.get`` waits on the JVM
     with no timeout, so an action that never registered the metrics
     would hang the caller. Spark sets the metrics from a
     query-execution listener on the listener bus — possibly just
     after the action returned — so get() polls ``getRowOrEmpty``
-    (≤ 100 ms per call) up to ``OBSERVATION_WAIT_S`` and then raises."""
+    (≤ 100 ms per call) up to ``OBSERVATION_WAIT_S`` and then raises.
+    The value is read by position: the JVM row carries no schema."""
     from pyspark.sql import Observation
 
     obs = Observation()
-    observed = e.observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-    )
+    observed = df.observe(obs, agg.alias("x"))
 
     def get():
         deadline = time.monotonic() + OBSERVATION_WAIT_S
@@ -476,56 +462,14 @@ def _observed_fingerprint(e: DataFrame):
         while row.isEmpty():
             if time.monotonic() >= deadline:
                 raise RuntimeError(
-                    "edge-set fingerprint: no observed metrics after "
+                    "no observed metrics after "
                     f"{OBSERVATION_WAIT_S:g} s (the observed frame was "
                     "never materialized)"
                 )
             row = obs._jo.getRowOrEmpty()
-        row = row.get()
-        return row.getAs("n"), row.getAs("h")
+        return row.get().get(0)
 
     return observed, get
-
-
-def _materialized_with_fp(e: DataFrame):
-    """Materialize an edge table and return (materialized, fingerprint)
-    in ONE action — the fingerprint rides the checkpoint as observed
-    metrics (see _observed_fingerprint)."""
-    observed, get = _observed_fingerprint(e)
-    return materialize(observed), get()
-
-
-def _is_star_forest(e: DataFrame) -> bool:
-    """True iff the (u, v) edge set is a DOWNWARD star forest: every
-    edge points at a smaller root (v < u), every u has exactly one
-    edge, and no u also appears as a root (v side). Downward star
-    forests are exactly the fixed points of the large-star/small-star
-    map (one more round maps one to itself), so this is a STRUCTURAL
-    convergence proof — sound regardless of how many rounds apart the
-    compared snapshots are, unlike set-equality between consecutive
-    rounds. The orientation term matters (ADVICE r5): an UPWARD edge
-    like (1, 5) is NOT a fixed point — small-star would rewrite it —
-    so without `v < u` the claim only held for small-star output,
-    where v is always the neighborhood minimum by construction. The
-    defensive check keeps the predicate correct at any call site. One
-    shuffle job over the (small, shrinking) edge set — the orientation
-    term rides the same pass (an upward edge contributes weight 2, so
-    it trips the same `c > 1` violation); partial aggregation keeps
-    the shuffle at node-cardinality."""
-    return (
-        e.select(
-            F.col("u"),
-            F.when(F.col("v") >= F.col("u"), 2).otherwise(1).alias("c"),
-            F.lit(0).alias("r"),
-        )
-        .unionAll(
-            e.select(F.col("v").alias("u"), F.lit(0).alias("c"), F.lit(1).alias("r"))
-        )
-        .groupBy("u")
-        .agg(F.sum("c").alias("c"), F.max("r").alias("r"))
-        .filter((F.col("c") > 1) | ((F.col("c") >= 1) & (F.col("r") == 1)))
-        .isEmpty()
-    )
 
 
 def dup_clusters(
@@ -549,6 +493,20 @@ def dup_clusters(
     Each round materializes (lineage truncation; see plans.materialize)
     so the loop's plan depth stays constant.
 
+    Convergence is PROVED, not inferred from evidence. Every edge
+    points down (u > v) from the first round on, and a downward edge
+    set is a min-rooted star forest — a fixed point of the round map —
+    exactly when no node has both a smaller neighbor and more than one
+    neighbor. Large-star's window over the undirected neighbor table
+    already holds each node's raw min(v); count(v) rides the same
+    window, so each round observes max(violation) over its OWN input
+    with no extra exchange or job. A max of 0 proves that input a star
+    forest and the loop keeps it. max is exact, order-invariant and
+    idempotent, so task retries, speculative attempts and the doubled
+    observation node (small-star reads its input twice) cannot move
+    it. ``max_iter`` (≥ 1) bounds the rounds; a round that cannot
+    prove its input converged and is the last raises RuntimeError.
+
     ``pairs_unique``: the caller guarantees `pairs` holds each
     unordered pair at most once (e.g. the output of a pair-keyed
     groupBy, or the block kernel's strict upper triangle) — the
@@ -558,6 +516,8 @@ def dup_clusters(
     claim would only cost the first round extra bytes (its min-
     aggregates and distinct absorb them), never wrong results.
     """
+    if max_iter < 1:
+        raise ValueError(f"dup_clusters: max_iter must be >= 1, got {max_iter}")
     # canonical orientation: u > v (edge points from node to a smaller
     # neighbor); self-pairs dropped
     e = (
@@ -569,7 +529,12 @@ def dup_clusters(
     )
     if not pairs_unique:
         e = e.distinct()
-    e, fp = _materialized_with_fp(e)
+    # violated() is nonzero until the edge set is proven a star forest:
+    # first the edge count (the empty set is one, and must skip the
+    # loop — AQE prunes a round's observation over an empty stage),
+    # then each round's max violation over its own input
+    observed, violated = _observed(e, F.count(F.lit(1)))
+    e = materialize(observed)
     # Each star operation attaches the group minimum to every row of
     # its u-group with ONE exchange per star — a min window over
     # partitionBy(u), the Kiveris reduce-per-key formulation. A
@@ -580,14 +545,20 @@ def dup_clusters(
     # (spillably) in one window task — and each round exists precisely
     # to dismantle hubs.
     wu = Window.partitionBy("u")
-    for _ in range(max_iter):
+    for _ in range(max_iter if violated() else 0):
         # large-star: for each u, connect every LARGER neighbor v to
-        # m = min(N(u) ∪ {u})
-        nbrs = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        # m = min(N(u) ∪ {u}). The proof reads the raw min(v), before
+        # the least(…, u): a node violates the star-forest shape when it
+        # has a smaller neighbor and any second neighbor.
+        nbrs, violated = _observed(
+            e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            .withColumn("mn", F.min("v").over(wu))
+            .withColumn("deg", F.count("v").over(wu)),
+            F.max(((F.col("mn") < F.col("u")) & (F.col("deg") > 1)).cast("int")),
+        )
         large = (
-            nbrs.withColumn("m", F.least(F.min("v").over(wu), F.col("u")))
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            nbrs.filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.least("mn", "u").alias("v"))
             .filter(F.col("u") != F.col("v"))
         )
         # small-star over large's (all-downward) edge set: connect
@@ -602,28 +573,12 @@ def dup_clusters(
             .filter(F.col("u") != F.col("v"))
             .distinct()
         )
-        # convergence test in two tiers: the fingerprint (count +
-        # order-invariant XOR, riding the checkpoint action as
-        # observed metrics) — equal sets ⇒ equal fingerprint, so a
-        # CHANGED fingerprint proves non-convergence with zero extra
-        # jobs; only when fingerprints match does the structural
-        # confirm run. The confirm is _is_star_forest (star forests
-        # are exactly the fixed points of the round map), which also
-        # guards the 2⁻⁶⁴-ish XOR collision.
-        e_new, fp_new = _materialized_with_fp(small)
-        if fp_new == fp and _is_star_forest(e_new):
-            e = e_new
+        e_next = materialize(small)
+        if not violated():
             break
-        e, fp = e_new, fp_new
-    else:
-        # the fingerprint is only evidence of change: task re-execution
-        # can double-count into the observed metrics, so matching
-        # fingerprints may never arrive on a converged edge set. The
-        # structural proof on the last checkpoint decides.
-        if not _is_star_forest(e):
-            raise RuntimeError(
-                f"dup_clusters did not converge in {max_iter} rounds"
-            )
+        e = e_next
+    if violated():
+        raise RuntimeError(f"dup_clusters did not converge in {max_iter} rounds")
     # converged edge set is a star forest: (node, root). Roots appear
     # only on the v side and label themselves.
     members = e.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id"))

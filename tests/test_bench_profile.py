@@ -28,6 +28,14 @@ def test_missing_job_or_stage_info_is_skipped():
     assert _rollup({}, {}) == {"jobs": 0, "stages": 0, "tasks": 0}
 
 
+def test_skipped_stage_adds_nothing():
+    """A job lists the stages it skipped (their shuffle output already
+    existed); a listed stage with 0 completed tasks never ran, so it
+    adds neither a stage nor tasks."""
+    got = _rollup({10: [1, 2], 11: [1, 3]}, {1: 0, 2: 4, 3: 6})
+    assert got == {"jobs": 2, "stages": 2, "tasks": 10}
+
+
 def _rec(p, q, sec, jobs=1):
     r = {"pass": p, "query": q, "sec": sec, "jobs": jobs, "stages": 2, "tasks": 3}
     if sec is None:

@@ -191,7 +191,10 @@ def test_lsh_bucket_subsplit_is_result_identical(spark):
 def test_dup_clusters_transitive_chain(spark):
     """A 10-node path graph: every node must land in cluster 0 even
     though 0 and 9 share no pair — exercises multiple star rounds
-    (naive one-hop propagation would need 9)."""
+    (naive one-hop propagation would need 9). A round bound below one
+    is rejected."""
+    import pytest
+
     from propius_spark.operators import dup_clusters
 
     pairs = spark.createDataFrame(
@@ -199,6 +202,8 @@ def test_dup_clusters_transitive_chain(spark):
     )
     got = {r["doc_id"]: r["cluster_id"] for r in dup_clusters(pairs).collect()}
     assert got == {i: 0 for i in range(10)}
+    with pytest.raises(ValueError, match="max_iter"):
+        dup_clusters(pairs, max_iter=0)
 
 
 def test_dup_clusters_multiple_components(spark):
@@ -236,23 +241,21 @@ def test_dup_clusters_pairs_unique_equal(spark):
     assert base == [(i, 1) for i in nodes]
 
 
-def test_dup_clusters_converges_despite_corrupted_fingerprint(spark, monkeypatch):
-    """Task re-execution can double-count into the observed
-    fingerprint, so consecutive fingerprints may never match on a
-    converged edge set. The loop must then fall back to the
-    structural star-forest proof instead of raising non-convergence."""
-    import itertools
-
+def test_dup_clusters_converges_despite_double_counted_metric(spark, monkeypatch):
+    """Task re-execution can merge a retried task's metrics twice, and
+    small-star's doubled read of the round's input carries the
+    observation node twice. The loop may depend only on whether the
+    observed value is zero, never on its magnitude: doubling every
+    nonzero reading must leave the clusters unchanged."""
     from propius_spark.operators import dedup
 
-    real = dedup._observed_fingerprint
-    fresh = itertools.count()
+    real = dedup._observed
 
-    def never_repeats(e):
-        observed, _ = real(e)
-        return observed, lambda: (next(fresh), 0)
+    def doubled(df, agg):
+        observed, get = real(df, agg)
+        return observed, lambda: (v := get()) and 2 * v
 
-    monkeypatch.setattr(dedup, "_observed_fingerprint", never_repeats)
+    monkeypatch.setattr(dedup, "_observed", doubled)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(9)], "doc_a long, doc_b long"
     )
@@ -264,19 +267,17 @@ def test_dup_clusters_converges_despite_corrupted_fingerprint(spark, monkeypatch
 
 
 def test_observed_fingerprint_raises_when_never_materialized(spark):
-    """A fingerprint whose frame never ran an action must fail loudly
-    within the wait ceiling, not block forever on the observation."""
+    """An observed metric whose frame never ran an action must fail
+    loudly within the wait ceiling, not block forever on the
+    observation."""
     import time
 
     import pytest
 
-    from propius_spark.operators.dedup import (
-        OBSERVATION_WAIT_S,
-        _observed_fingerprint,
-    )
+    from propius_spark.operators.dedup import OBSERVATION_WAIT_S, _observed
 
     e = spark.createDataFrame([(2, 1)], "u long, v long")
-    _, get = _observed_fingerprint(e)
+    _, get = _observed(e, F.count(F.lit(1)))
     t0 = time.monotonic()
     with pytest.raises(RuntimeError, match="no observed metrics"):
         get()
@@ -284,34 +285,32 @@ def test_observed_fingerprint_raises_when_never_materialized(spark):
 
 
 def test_observed_fingerprint_matches_direct_aggregate(spark):
-    """Round-9 probe fold pin: the convergence fingerprint now rides
-    the materialize action as observed metrics (count + bit_xor of
-    xxhash64 — exact-integer, order-invariant aggregates, so the
-    metrics accumulator's completion-order merge cannot diverge from
-    the in-plan aggregate the old `.first()` probe ran). Assert the
-    observed tuple equals the direct aggregate on a non-trivial edge
-    table, and that an empty table fingerprints as (0, None) exactly
-    like the old probe did."""
+    """The convergence metrics ride the materialize action as observed
+    metrics (count, max of an int — exact, order-invariant aggregates,
+    so the metrics accumulator's completion-order merge cannot diverge
+    from the in-plan aggregate). Each observed value must equal the
+    direct aggregate on a non-trivial edge table, and an empty table
+    must observe count 0 and max None."""
     from pyspark.sql import functions as F
 
-    from propius_spark.operators.dedup import _observed_fingerprint
+    from propius_spark.operators.dedup import _observed
     from propius_spark.plans import materialize
 
     e = spark.createDataFrame(
         [(i * 7 % 23, i % 5) for i in range(200)], "u long, v long"
     )
-    observed, get = _observed_fingerprint(e)
-    materialize(observed)
-    direct = e.select(
-        F.count(F.lit(1)).alias("n"),
-        F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-    ).first()
-    assert get() == (direct["n"], direct["h"])
-
     empty = e.filter(F.col("u") < 0)
-    observed_e, get_e = _observed_fingerprint(empty)
-    materialize(observed_e)
-    assert get_e() == (0, None)
+    aggs = {
+        "count": (F.count(F.lit(1)), 0),
+        "max": (F.max((F.col("u") - F.col("v")).cast("int")), None),
+    }
+    for name, (agg, on_empty) in aggs.items():
+        observed, get = _observed(e, agg)
+        materialize(observed)
+        assert get() == e.select(agg).first()[0], name
+        observed_e, get_e = _observed(empty, agg)
+        materialize(observed_e)
+        assert get_e() == on_empty, name
 
 
 def test_resolve_duplicates_keepers_and_singletons(spark):
@@ -464,23 +463,3 @@ def test_dict_rank_guard_raises_past_bound(spark, monkeypatch):
         simhash(docs, id_mode="dict").collect()
     # xxhash mode has no dictionary and never consults the bound
     assert shingle_ids(shingles(docs, k=3), id_mode="xxhash").count() > 0
-
-
-def test_is_star_forest_rejects_upward_edges(spark):
-    """ADVICE r5: a star forest containing an UPWARD edge like (1, 5)
-    is NOT a fixed point of the large/small-star round map (small-star
-    would rewrite it), so _is_star_forest must reject it even though
-    every u has exactly one edge and no u is also a root."""
-    from propius_spark.operators.dedup import _is_star_forest
-
-    down = spark.createDataFrame([(5, 1), (6, 1), (9, 7)], "u long, v long")
-    assert _is_star_forest(down)
-    # same shape but one edge flipped upward
-    up = spark.createDataFrame([(1, 5), (6, 1), (9, 7)], "u long, v long")
-    assert not _is_star_forest(up)
-    # degree violation still caught alongside the orientation term
-    multi = spark.createDataFrame([(5, 1), (5, 2)], "u long, v long")
-    assert not _is_star_forest(multi)
-    # chain (root also a u) still caught
-    chain = spark.createDataFrame([(5, 3), (3, 1)], "u long, v long")
-    assert not _is_star_forest(chain)

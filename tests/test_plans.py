@@ -439,6 +439,44 @@ def test_bucketed_dup_pairs_plan_shape(spark, sf_dir, mode):
     assert n_shuffles <= 5, plan
 
 
+def test_dup_clusters_round_proof_adds_no_exchange(spark, monkeypatch):
+    """Each connected-components round proves its own input converged
+    from count(v) riding large-star's existing min window, so a round's
+    pre-AQE plan keeps the shape it had before the proof: 4 Window and
+    5 Exchange nodes (small-star's union reads its input twice, so each
+    star's window and exchange appear twice, plus the distinct's
+    exchange). The observation sits under that doubled read, so it
+    appears twice — the reason the proof observes max, which a double
+    merge cannot move. The 10-node path takes the initial checkpoint
+    plus 5 rounds."""
+    import re
+
+    from propius_spark.operators import dedup
+
+    frames = []
+    real = dedup.materialize
+
+    def capture(df, *args, **kwargs):
+        frames.append(df)
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(dedup, "materialize", capture)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)], "doc_a long, doc_b long"
+    )
+    dedup.dup_clusters(pairs).collect()
+    assert len(frames) == 6
+    tree = _plan(frames[1]).split("\n\n")[0]
+    initial = tree.split("== Initial Plan ==")[1]
+
+    def count(node):
+        return len(re.findall(rf"\b{node} \(\d+\)", initial))
+
+    assert count("Window") == 4, initial
+    assert count("Exchange") == 5, initial
+    assert count("CollectMetrics") == 2, initial
+
+
 def test_lsh_buckets_map_side(spark, sf_dir):
     """hyperplane_lsh_buckets is pure map work: plane literals in the
     plan, no Exchange, no Python eval nodes, and the embeddings scan

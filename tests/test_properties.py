@@ -268,21 +268,9 @@ edge_lists = st.lists(
 )
 
 
-@given(edges=edge_lists)
-@settings(max_examples=10, deadline=None,
-          suppress_health_check=[HealthCheck.too_slow])
-def test_dup_clusters_matches_union_find(spark, edges):
-    """large-star/small-star connected components ≡ a sequential
-    union-find on every random graph (self-loops dropped, arbitrary
-    topology — chains, cycles, stars, forests)."""
-    from propius_spark.operators import dup_clusters
-
-    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    got = {
-        r["doc_id"]: r["cluster_id"] for r in dup_clusters(pairs).collect()
-    }
-    clear_materialized(spark)
-
+def _union_find(edges) -> dict[int, int]:
+    """Sequential union-find labels (node → component minimum) of the
+    graph's non-self-loop edges."""
     parent: dict[int, int] = {}
 
     def find(x):
@@ -298,10 +286,63 @@ def test_dup_clusters_matches_union_find(spark, edges):
             ra, rb = find(a), find(b)
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
-    want = {n: find(n) for n in nodes}
-    # normalize: union-find roots are already the component minimum
-    # because unions always point the larger root at the smaller
-    assert got == want
+    # union-find roots are already the component minimum because
+    # unions always point the larger root at the smaller
+    return {n: find(n) for n in nodes}
+
+
+@given(edges=edge_lists)
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+def test_dup_clusters_matches_union_find(spark, edges):
+    """large-star/small-star connected components ≡ a sequential
+    union-find on every random graph (self-loops dropped, arbitrary
+    topology — chains, cycles, stars, forests)."""
+    from propius_spark.operators import dup_clusters
+
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    got = {
+        r["doc_id"]: r["cluster_id"] for r in dup_clusters(pairs).collect()
+    }
+    clear_materialized(spark)
+    assert got == _union_find(edges)
+
+
+@given(edges=edge_lists)
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@example(edges=[(1, 5), (6, 1), (9, 7)])  # star forest given upward
+@example(edges=[(3, 3)])  # no edge at all
+@example(edges=[(5, 1), (5, 2)])  # two smaller neighbors
+@example(edges=[(5, 3), (3, 1)])  # a root that is also a leaf
+def test_dup_clusters_one_round_proves_exactly_star_forests(spark, edges):
+    """One round's in-window proof is exact: ``max_iter=1`` raises
+    non-convergence iff the canonical (larger → smaller) edge set is
+    not a downward star forest — every node with an edge to a smaller
+    node has exactly one, and no such node is also a smaller end —
+    and when it returns, it equals the union-find."""
+    import pytest
+
+    from propius_spark.operators import dup_clusters
+
+    down = {(max(a, b), min(a, b)) for a, b in edges if a != b}
+    leaves = [u for u, _ in down]
+    star_forest = len(leaves) == len(set(leaves)) and not (
+        set(leaves) & {v for _, v in down}
+    )
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    try:
+        if not star_forest:
+            with pytest.raises(RuntimeError, match="did not converge"):
+                dup_clusters(pairs, max_iter=1)
+            return
+        got = {
+            r["doc_id"]: r["cluster_id"]
+            for r in dup_clusters(pairs, max_iter=1).collect()
+        }
+    finally:
+        clear_materialized(spark)
+    assert got == _union_find(edges)
 
 
 event_rows = st.lists(
