@@ -43,6 +43,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..plans import materialize
 
@@ -53,39 +54,21 @@ def context_count(cells: DataFrame) -> DataFrame:
 
 
 def _global_scalars(stats: DataFrame):
-    """Every global scalar the correlation plans need, fetched in ONE
-    driver probe over the (persisted, item-cardinality) stats table:
-    Row(n, v, big_t, big_u) — context count, valid-item count, Σt_j,
-    Σt_j². Probing once and embedding the values as plan LITERALS
-    replaces up to three 1-row broadcast crossJoins per pipeline
-    (context n, the rank-gap v, global_stats' T/U) — each crossJoin
-    cost a separate aggregate stage + broadcast-build job wave and left
-    a BroadcastNestedLoopJoin in the final plan for AQE to re-plan
-    (round 9; guide §2.4 "remove shuffles outright" applied to
-    broadcast waves). The aggregation expressions are IDENTICAL to the
-    in-plan forms they replace (same sum order over the same persisted
-    partitions), so the doubles are bit-equal and every oracle hash is
-    unchanged.
-
-    Callers must hold a PERSISTED stats table (all production call
-    sites do) — probing an unpersisted subtree would compute it once
-    here and again downstream. Empty stats probes (n=None, v=0,
-    big_t/big_u=None); consumers substitute 0.0 — the values are
-    unreachable because every frame they combine with is empty exactly
-    then (pinned by
-    tests/test_correlation.py::test_corr_pairs_no_valid_items)."""
+    """The global scalars of `neighbor_stats`, fetched in ONE driver
+    probe over the (persisted, item-cardinality) stats table:
+    Row(v, big_t, big_u) — valid-item count, Σt_j, Σt_j². The values
+    ride the plan as literals, so no 1-row broadcast crossJoin (with
+    its own aggregate stage and broadcast-build job) is left for AQE
+    to re-plan. Callers must hold a PERSISTED stats table — probing an
+    unpersisted subtree would compute it once here and again
+    downstream. Empty stats probe (0, 0.0, 0.0): unreachable in any
+    row, since every frame the values combine with is empty exactly
+    then (pinned by test_correlation::test_corr_pairs_no_valid_items)."""
     return stats.agg(
-        F.first("n").alias("n"),
         F.count(F.lit(1)).alias("v"),
-        F.sum("t").alias("big_t"),
-        F.sum(F.col("t") * F.col("t")).alias("big_u"),
+        F.coalesce(F.sum("t"), F.lit(0.0)).alias("big_t"),
+        F.coalesce(F.sum(F.col("t") * F.col("t")), F.lit(0.0)).alias("big_u"),
     ).first()
-
-
-def _lit0(x) -> "F.Column":
-    """Double literal for a probed scalar; 0.0 for the empty-stats
-    None (unreachable in any row — see _global_scalars)."""
-    return F.lit(0.0 if x is None else float(x))
 
 
 def item_stats(cells: DataFrame) -> DataFrame:
@@ -128,8 +111,11 @@ def gram(cells: DataFrame, stats: DataFrame, max_context_degree: int | None = No
     can appear in results. `max_context_degree`, when set, drops
     contexts containing more than that many distinct items — an
     *approximate* mode for pathological skew (documented delta; default
-    off, exact).
+    off, exact). A cap below 1 would keep no context at all while the
+    stats still count every one, so it raises ValueError.
     """
+    if max_context_degree is not None and max_context_degree < 1:
+        raise ValueError(f"max_context_degree must be >= 1, got {max_context_degree}")
     pruned = cells.join(stats.select("item_id"), "item_id", "left_semi")
     if max_context_degree is not None:
         deg = pruned.groupBy("ctx_id").agg(F.count(F.lit(1)).alias("_ctx_deg"))
@@ -151,16 +137,29 @@ def gram(cells: DataFrame, stats: DataFrame, max_context_degree: int | None = No
     )
 
 
-def _stats_as(stats: DataFrame, suffix: str) -> DataFrame:
-    return stats.select(
-        F.col("item_id").alias(f"item_{suffix}"),
-        F.col("s").alias(f"s_{suffix}"),
-        F.col("den").alias(f"den_{suffix}"),
-        F.col("t").alias(f"t_{suffix}"),
+def _corr_gram(stats: DataFrame, g: DataFrame, *b_extra: str) -> DataFrame:
+    """The Gram pairs with their correlation — (item_a, item_b, dot, n,
+    s_a, den_a, t_a, s_b, den_b, t_b, corr) — through two broadcast
+    stats joins (item dimension ≪ pair table). Every stats row carries
+    the context count n, so n rides the a side. `b_extra` names further
+    stats columns to carry on the b side as `<name>_b`."""
+    a = stats.select(
+        F.col("item_id").alias("item_a"),
+        "n",
+        *[F.col(c).alias(f"{c}_a") for c in ("s", "den", "t")],
     )
-
-
-CORR_EXPR = "(n * dot - s_a * s_b) / (den_a * den_b)"
+    b = stats.select(
+        F.col("item_id").alias("item_b"),
+        *[F.col(c).alias(f"{c}_b") for c in ("s", "den", "t", *b_extra)],
+    )
+    corr = (F.col("n") * F.col("dot") - F.col("s_a") * F.col("s_b")) / (
+        F.col("den_a") * F.col("den_b")
+    )
+    return (
+        g.join(F.broadcast(a), "item_a")
+        .join(F.broadcast(b), "item_b")
+        .withColumn("corr", corr)
+    )
 
 
 def corr_pairs(
@@ -169,13 +168,12 @@ def corr_pairs(
     stats: DataFrame | None = None,
     g: DataFrame | None = None,
 ) -> DataFrame:
-    """(item_a, item_b, corr) over co-occurring valid pairs (both
+    """(item_a, item_b, dot, corr) over co-occurring valid pairs (both
     directions; symmetric). This is the sparse "candidates" view of the
     correlation matrix — pairs with no shared context are not emitted
     (their corr is the separable −t_a·t_b; see `neighbor_stats` /
     `similar_items_exact` for where that matters).
 
-    The two stats joins broadcast (item dimension ≪ fact table).
     `stats`/`g` accept precomputed (usually persisted) inputs so a
     pipeline sharing them across stages computes each subtree once.
 
@@ -192,130 +190,7 @@ def corr_pairs(
         stats = materialize(valid_item_stats(cells))
     if g is None:
         g = gram(cells, stats, max_context_degree)
-    # n as a plan literal from the one-probe scalar fetch — the old
-    # 1-row crossJoin(broadcast(n1)) paid a broadcast-build job and
-    # left a BroadcastNestedLoopJoin node in every corr plan
-    n_row = _global_scalars(stats)
-    return (
-        g.join(F.broadcast(_stats_as(stats, "a")), "item_a")
-        .join(F.broadcast(_stats_as(stats, "b")), "item_b")
-        .withColumn("n", _lit0(n_row["n"]))
-        .select("item_a", "item_b", "dot", F.expr(CORR_EXPR).alias("corr"))
-    )
-
-
-def _rank_gap_extremes(
-    stats: DataFrame, gram_df: DataFrame, v: int | None = None
-) -> DataFrame:
-    """Per item_a: the MAX and MIN t among valid NON-co-occurring
-    neighbors, in one pass — (item_a, t_nc_max, t_nc_min); items whose
-    co-occurrence set covers all other valid items are absent.
-
-    Rank-gap trick (no I² blowup): rank all V valid items by t
-    (row_number over a V-row dimension — bounded by item cardinality,
-    not fact rows); for each item, the extreme non-co-occurring t is the
-    t at the smallest rank not taken by a co-occurring partner or the
-    item itself. Each item only needs to examine its first deg+2
-    candidate ranks, so the generated candidate table is O(nnz pairs).
-
-    Both extremes come from ONE un-replicated taken set (round 6): the
-    descending order (t desc, id asc) gives the max side directly, and
-    because the ascending rank is its exact reverse
-    (rnk_asc = V+1−rnk_desc), the min side's first gap is found by
-    scanning the SAME rows from the other end — a second row_number
-    over the same (item_a) hash partitioning, ordered taken_rnk desc,
-    costs one extra in-partition sort but NO extra exchange and NO
-    side-tag row doubling. Replaces the round-3 explode-two-sides form:
-    half the shuffle bytes, one window partition key instead of two —
-    measured on the sf1.0 scale replica at 16.3 s → 3.5 s warm (the
-    dominant component of neighbor_stats), result exceptAll-equal both
-    directions.
-    """
-    from pyspark.sql.window import Window
-
-    # v (valid-item count) as a plan literal: passed in by callers that
-    # already probed the stats scalars (_global_scalars), else one
-    # cheap count over the item-cardinality stats — either way the old
-    # 1-row v_df crossJoins (two of them: under ranked and under taken)
-    # and their aggregate + broadcast-build job waves are gone (round 9)
-    if v is None:
-        v = stats.count()
-    v_lit = F.lit(int(v)).cast("long")
-    # materialized: three consumers (rb under taken, the self-rank
-    # union, both tmaps) would otherwise each re-sort the item
-    # dimension — item-cardinality, so it stores safely at any scale
-    ranked = materialize(
-        stats.select(
-            "item_id",
-            "t",
-            F.row_number()
-            .over(Window.orderBy(F.col("t").desc(), F.col("item_id").asc()))
-            .alias("rnk"),
-        ).withColumn("rnk_rev", v_lit + 1 - F.col("rnk"))
-    )
-    rb = ranked.select(
-        F.col("item_id").alias("item_b"), F.col("rnk").alias("rnk_b")
-    )
-    # ranks occupied per item_a: co-occurring partners + self
-    taken = (
-        gram_df.select("item_a", "item_b")
-        .join(F.broadcast(rb), "item_b")
-        .select("item_a", F.col("rnk_b").alias("taken_rnk"))
-        .unionByName(
-            ranked.select(
-                F.col("item_id").alias("item_a"),
-                F.col("rnk").alias("taken_rnk"),
-            )
-        )
-    )
-    # First free rank per side via sorted passes over ONE exchange
-    # (round 3 established the sorted-pass-over-taken form; round 6
-    # fused both sides into it): the taken ranks of one item_a are
-    # distinct, so sorted ascending the first gap is the first position
-    # where taken_rnk != row_number; on the reverse side the same test
-    # runs against the reversed rank (V+1−taken_rnk) under the
-    # descending row_number. If a prefix is gapless the free rank is
-    # count+1 — and count+1 > v_items happens exactly when the item
-    # co-occurs with every other valid item, which (taken covering ALL
-    # V ranks) makes BOTH sides gapless at once, so the inner tmap
-    # joins below drop the item entirely, as they must. The groupBy
-    # reuses the windows' (item_a) exchange — one shuffle total,
-    # spillable sorts, no per-item arrays.
-    wd = Window.partitionBy("item_a").orderBy(F.col("taken_rnk").asc())
-    wa = Window.partitionBy("item_a").orderBy(F.col("taken_rnk").desc())
-    frees = (
-        taken.withColumn("rn_d", F.row_number().over(wd))
-        .withColumn("rn_a", F.row_number().over(wa))
-        .groupBy("item_a")
-        .agg(
-            F.coalesce(
-                F.min(F.when(F.col("taken_rnk") != F.col("rn_d"), F.col("rn_d"))),
-                F.count(F.lit(1)) + 1,
-            ).alias("free_d"),
-            F.coalesce(
-                F.min(
-                    F.when(
-                        v_lit + 1 - F.col("taken_rnk") != F.col("rn_a"),
-                        F.col("rn_a"),
-                    )
-                ),
-                F.count(F.lit(1)) + 1,
-            ).alias("free_a"),
-        )
-    )
-    # map each side's free rank back to its t (rnk keys the desc side,
-    # rnk_rev the asc side — both item-cardinality broadcasts)
-    tmap_d = ranked.select(
-        F.col("rnk").alias("free_d"), F.col("t").alias("t_nc_max")
-    )
-    tmap_a = ranked.select(
-        F.col("rnk_rev").alias("free_a"), F.col("t").alias("t_nc_min")
-    )
-    return (
-        frees.join(F.broadcast(tmap_d), "free_d")
-        .join(F.broadcast(tmap_a), "free_a")
-        .select("item_a", "t_nc_max", "t_nc_min")
-    )
+    return _corr_gram(stats, g).select("item_a", "item_b", "dot", "corr")
 
 
 def neighbor_stats(
@@ -323,7 +198,6 @@ def neighbor_stats(
     max_context_degree: int | None = None,
     stats: DataFrame | None = None,
     g: DataFrame | None = None,
-    scalars=None,
 ) -> DataFrame:
     """Exact per-item statistics of the FULL correlation row — over all
     V−1 valid neighbors, co-occurring or not — without materializing I².
@@ -341,54 +215,98 @@ def neighbor_stats(
       Σ_j corr_ij  = (n·G1_i − s_i·(T − t_i)) / den_i          (G1 = Σ_cooc d/den_b)
       Σ_j corr_ij² = (n²·G2_i − 2n·s_i·G3_i + s_i²·(U − t_i²)) / den_i²
                      (G2 = Σ_cooc d²/den_b², G3 = Σ_cooc d·t_b/den_b)
-      min/max: combine cooc extremes with −t_i·t_nc from the rank-gap
-      extremes of the non-cooc set (all non-cooc corrs are −t_i·t_j).
+      min/max: combine cooc extremes with −t_i·t_nc, where t_nc is the
+      max/min t over the item's non-cooc set (all non-cooc corrs are
+      −t_i·t_j, and t > 0).
+
+    Rank-gap trick for t_nc (no I² blowup): rank all V valid items by
+    (t desc, id asc); the max non-cooc t is the t at the smallest rank
+    not taken by a co-occurring partner or the item itself. The
+    ascending rank is the exact reverse (V+1−rnk), so the min side's
+    first gap comes from scanning the SAME taken rows from the other
+    end.
+
+    One per-item pass: the taken set is the Gram rows (carrying dot,
+    den_b, t_b and corr) plus one self row per item with null
+    metrics, shuffled ONCE by item_a. Both row_numbers and the groupBy
+    yielding the sums, the cooc extremes and both first free ranks
+    ride that exchange; null-skipping sums and count(dot) keep the
+    self rows out of the neighbor aggregates.
     """
     if stats is None:
-        # mirror corr_pairs: cells feed four consumers here (item
-        # stats, context count, both gram sides) — unpersisted, the
-        # full upstream event-log plan replays once per consumer
+        # as in corr_pairs: unpersisted cells replay upstream per consumer
         cells = materialize(cells, compact=False)
         stats = materialize(valid_item_stats(cells))
     if g is None:
         g = materialize(gram(cells, stats, max_context_degree))
-    # all four global scalars (n, v, Σt, Σt²) in ONE probe over the
-    # persisted stats (or a caller's shared probe row via `scalars`),
-    # embedded as plan literals — replaces the n1/gl/v_df 1-row
-    # broadcast crossJoins and their separate aggregate + broadcast
-    # job waves (round 9; values bit-identical, see _global_scalars)
-    sc_row = scalars if scalars is not None else _global_scalars(stats)
-    n_lit = _lit0(sc_row["n"])
-    big_t = _lit0(sc_row["big_t"])
-    big_u = _lit0(sc_row["big_u"])
+    sc_row = _global_scalars(stats)
+    v = F.lit(int(sc_row["v"])).cast("long")
+    big_t, big_u = F.lit(sc_row["big_t"]), F.lit(sc_row["big_u"])
 
-    ge = (
-        g.join(F.broadcast(_stats_as(stats, "a")), "item_a")
-        .join(F.broadcast(_stats_as(stats, "b")), "item_b")
-        .withColumn("n", n_lit)
-        .withColumn("corr", F.expr(CORR_EXPR))
+    # materialized: six consumers (both Gram sides, the self rows, the
+    # stats join, both rank→t maps) would each re-sort the item dimension
+    ranked = materialize(
+        stats.withColumn(
+            "rnk",
+            F.row_number().over(
+                Window.orderBy(F.col("t").desc(), F.col("item_id").asc())
+            ),
+        )
     )
-    peritem = ge.groupBy("item_a").agg(
-        F.count(F.lit(1)).alias("deg"),
-        F.sum(F.col("dot") / F.col("den_b")).alias("g1"),
-        F.sum(F.col("dot") * F.col("dot") / (F.col("den_b") * F.col("den_b"))).alias("g2"),
-        F.sum(F.col("dot") * F.col("t_b") / F.col("den_b")).alias("g3"),
-        F.min("corr").alias("cmin"),
-        F.max("corr").alias("cmax"),
+    metrics = ("dot", "den_b", "t_b", "corr")
+    taken = (
+        _corr_gram(ranked, g, "rnk")
+        .select("item_a", "rnk_b", *metrics)
+        .unionByName(
+            ranked.select(
+                F.col("item_id").alias("item_a"),
+                F.col("rnk").alias("rnk_b"),
+                *[F.lit(None).cast("double").alias(c) for c in metrics],
+            )
+        )
     )
-    nc_t = _rank_gap_extremes(stats, g, v=int(sc_row["v"]))
 
+    # First free rank per side: the taken ranks of one item_a are
+    # distinct, so sorted ascending the first gap is the first position
+    # where rnk_b != row_number; the reverse side runs the same test on
+    # V+1−rnk_b under the descending row_number. A gapless prefix frees
+    # rank count+1, which exceeds V exactly when the item co-occurs with
+    # every other valid item — then BOTH sides are gapless and the left
+    # rank→t joins below give null extremes, as they must.
+    def first_free(rnk, rn):
+        return F.coalesce(F.min(F.when(rnk != rn, rn)), F.count(F.lit(1)) + 1)
+
+    wd = Window.partitionBy("item_a").orderBy(F.col("rnk_b").asc())
+    wa = Window.partitionBy("item_a").orderBy(F.col("rnk_b").desc())
+    dot, den_b = F.col("dot"), F.col("den_b")
+    per = (
+        taken.withColumn("rn_d", F.row_number().over(wd))
+        .withColumn("rn_a", F.row_number().over(wa))
+        .groupBy("item_a")
+        .agg(
+            F.count("dot").alias("deg"),
+            F.sum(dot / den_b).alias("g1"),
+            F.sum(dot * dot / (den_b * den_b)).alias("g2"),
+            F.sum(dot * F.col("t_b") / den_b).alias("g3"),
+            F.min("corr").alias("cmin"),
+            F.max("corr").alias("cmax"),
+            first_free(F.col("rnk_b"), F.col("rn_d")).alias("free_d"),
+            first_free(v + 1 - F.col("rnk_b"), F.col("rn_a")).alias("free_a"),
+        )
+    )
+    # every item has its self row in taken, so `per` holds exactly one
+    # row per valid item and the stats join can stream it (broadcasting
+    # the item dimension — no second exchange)
+    tmap_d = ranked.select(F.col("rnk").alias("free_d"), F.col("t").alias("t_nc_max"))
+    tmap_a = ranked.select((v + 1 - F.col("rnk")).alias("free_a"), F.col("t").alias("t_nc_min"))
     sp = (
-        stats.join(peritem, stats.item_id == peritem.item_a, "left")
-        .drop("item_a")
-        .join(nc_t.withColumnRenamed("item_a", "item_id"), "item_id", "left")
+        per.withColumnRenamed("item_a", "item_id")
+        .join(F.broadcast(ranked), "item_id")
+        .join(F.broadcast(tmap_d), "free_d", "left")
+        .join(F.broadcast(tmap_a), "free_a", "left")
         .fillna(0.0, ["g1", "g2", "g3"])
-        .fillna(0, ["deg"])
     )
-    # v/big_t/big_u are plan literals (probe above); n/s/t/den/den2
-    # stay per-row stats columns — the arithmetic is the expression
-    # the old gl-crossJoin form evaluated, term for term
-    m = _lit0(float(sc_row["v"])) - 1
+    m = F.lit(float(sc_row["v"])) - 1
     sum1 = (F.col("n") * F.col("g1") - F.col("s") * (big_t - F.col("t"))) / F.col("den")
     sum2 = (
         F.col("n") * F.col("n") * F.col("g2")

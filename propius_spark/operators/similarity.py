@@ -36,10 +36,7 @@ from pyspark.sql.window import Window
 
 from ..plans import materialize
 from .correlation import (
-    CORR_EXPR,
-    _global_scalars,
-    _lit0,
-    _stats_as,
+    _corr_gram,
     corr_pairs,
     gram,
     neighbor_stats,
@@ -241,7 +238,7 @@ def similar_items_exact(
     (sklearn MinMaxScaler's zero-range behavior, propius/data.py:138).
     """
     # each subtree computes once: cells is consumed by stats + gram,
-    # stats by five branches, gram by four (SURVEY.md §4 cache note).
+    # stats and gram by several branches each (SURVEY.md §4 cache note).
     # cuts is ALSO materialized so the final union plan is shallow —
     # AQE re-optimizes the whole remaining plan at every query stage,
     # and a deep neighbor-stats subtree under the final joins measured
@@ -249,14 +246,7 @@ def similar_items_exact(
     cells = materialize(cells, compact=False)
     stats = materialize(valid_item_stats(cells))
     g = materialize(gram(cells, stats, max_context_degree))
-    # ONE scalar probe over the persisted stats serves this function's
-    # n literal AND neighbor_stats' n/v/Σt/Σt² (round 9) — no
-    # re-aggregate of cells (the r8 guide-§2.3 fix) and no 1-row
-    # broadcast crossJoins left in either plan
-    sc_row = _global_scalars(stats)
-    ns = neighbor_stats(
-        cells, max_context_degree, stats=stats, g=g, scalars=sc_row
-    )
+    ns = neighbor_stats(cells, stats=stats, g=g)
     cuts = materialize(
         ns.select(
             F.col("item_id").alias("item_a"),
@@ -274,10 +264,7 @@ def similar_items_exact(
     # item 3; the similar_exact_parts / publish_retrieve oracle twins
     # round identically).
     cooc = (
-        g.join(F.broadcast(_stats_as(stats, "a")), "item_a")
-        .join(F.broadcast(_stats_as(stats, "b")), "item_b")
-        .withColumn("n", _lit0(sc_row["n"]))
-        .withColumn("corr", F.expr(CORR_EXPR))
+        _corr_gram(stats, g)
         .join(F.broadcast(cuts), "item_a")
         .filter(F.round(F.col("corr"), 6) >= F.round(F.col("cut"), 6))
         .select("item_a", "item_b", "corr", "mn", "mx")

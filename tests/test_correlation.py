@@ -159,10 +159,10 @@ def test_zero_variance_items_dropped(spark):
 def test_corr_pairs_no_valid_items(spark):
     """Degenerate corpus where EVERY item has zero variance (each item
     in both contexts with cnt=1 → den2 = 0): valid stats is EMPTY.
-    Pins the empty-stats edge the scalar probe rides on —
-    `_global_scalars` returns (n=None, v=0) here — asserting the full
-    pipelines still return exactly no rows (they must: gram and every
-    stats-derived frame are empty precisely when stats is)."""
+    Pins the empty-stats edge neighbor_stats' scalar probe rides on —
+    `_global_scalars` returns (v=0, big_t=big_u=0.0) here — asserting
+    the full pipelines still return exactly no rows (they must: gram
+    and every stats-derived frame are empty precisely when stats is)."""
     from propius_spark.operators.similarity import similar_items_exact
 
     rows = [("r1", 1), ("r2", 1), ("r1", 2), ("r2", 2)]
@@ -172,6 +172,39 @@ def test_corr_pairs_no_valid_items(spark):
     assert corr_pairs(cells).count() == 0
     assert neighbor_stats(cells).count() == 0
     assert similar_items_exact(cells).count() == 0
+
+
+def test_gram_context_degree_cap(spark):
+    """gram's max_context_degree drops every context holding more than
+    the cap's distinct items (the documented approximate mode). A cap
+    below 1 would keep no context while the stats still count them
+    all, so it raises ValueError — in gram and through corr_pairs."""
+    from propius_spark.operators import gram
+
+    rows = [("r1", 1), ("r1", 2), ("r1", 3), ("r2", 1), ("r2", 2), ("r3", 3)]
+    cells = build_cells(
+        spark.createDataFrame(rows, "reference_id string, item_id long")
+    )
+    stats = valid_item_stats(cells)
+
+    def dots(cap):
+        return {
+            (r["item_a"], r["item_b"]): r["dot"]
+            for r in gram(cells, stats, max_context_degree=cap).collect()
+        }
+
+    assert dots(None) == {
+        (1, 2): 2.0, (2, 1): 2.0, (1, 3): 1.0, (3, 1): 1.0,
+        (2, 3): 1.0, (3, 2): 1.0,
+    }
+    # r1 holds 3 items: a cap of 2 drops it, leaving r2's (1, 2) pair
+    assert dots(2) == {(1, 2): 1.0, (2, 1): 1.0}
+    assert dots(3) == dots(None)
+    for cap in (0, -1):
+        with pytest.raises(ValueError, match="max_context_degree"):
+            gram(cells, stats, max_context_degree=cap)
+    with pytest.raises(ValueError, match="max_context_degree"):
+        corr_pairs(cells, max_context_degree=0)
 
 
 def test_candidates_stddev_matches_dense(spark):

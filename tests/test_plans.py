@@ -365,42 +365,38 @@ def test_new_text_ops_plan_shape(spark, sf_dir):
     assert not [n for n in PY_EVAL_NODES if n in pr]
 
 
-def test_rank_gap_window_exchange_reuse(spark, sf_dir):
-    """_rank_gap_extremes (round 6 shape): BOTH first-free-rank sides
-    ride ONE taken-set exchange — two Window nodes (asc and desc
-    row_numbers) separated only by an in-partition Sort, the
-    first-free-rank HashAggregate DIRECTLY above the top one, and no
-    Exchange anywhere between the taken-set shuffle and the aggregate.
-    The ranked item dimension is materialized once (no third Window;
-    the rb/self/tmap consumers read the persisted table instead of
-    re-sorting items). A regression to the round-3 explode-two-sides
-    form (side-tagged row doubling) or a lost exchange reuse (second
-    shuffle between the windows or before the aggregate) fails here."""
+def test_neighbor_stats_one_item_exchange(spark, sf_dir):
+    """neighbor_stats' per-item pass: the taken set (Gram rows carrying
+    the sum terms and corr, plus one self row per item) is shuffled
+    ONCE by item_a. Both first-free-rank row_numbers ride that exchange
+    — two Window nodes separated only by an in-partition Sort — and the
+    per-item HashAggregate sits directly above the upper Window, so the
+    sums, the cooc extremes and the free ranks share it. The stats and
+    rank→t joins broadcast. The executed (AQE final) plan must hold
+    exactly one hash exchange; a second shuffle of the pair table (a
+    separate groupBy or join back to the stats) or a side-tagged
+    explode (Generate) fails here."""
     import re
 
-    from propius_spark.operators.correlation import (
-        _rank_gap_extremes,
-        gram,
-        valid_item_stats,
-    )
+    from propius_spark.operators import gram, neighbor_stats, valid_item_stats
     from propius_spark.plans import materialize
 
     cells = materialize(build_cells(occurrences_from_lineitem(spark, sf_dir)))
     stats = materialize(valid_item_stats(cells))
-    g = materialize(gram(cells, stats, None))
-    plan = _plan(_rank_gap_extremes(stats, g))
+    g = materialize(gram(cells, stats))
+    ns = neighbor_stats(cells, stats=stats, g=g)
+    ns.collect()
+    final = ns._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
 
-    assert len(re.findall(r"^\(\d+\) Window$", plan, re.M)) == 2
-    tree = plan.split("\n\n")[0].splitlines()
-    widx = [i for i, ln in enumerate(tree) if re.search(r"Window \(\d+\)", ln)]
+    assert final.count("Exchange hashpartitioning") == 1
+    tree = final.splitlines()
+    widx = [i for i, ln in enumerate(tree) if re.search(r"\bWindow \[", ln)]
     assert len(widx) == 2
-    above = "".join(tree[max(0, widx[0] - 2): widx[0]])
-    assert "HashAggregate" in above and "Exchange" not in above
-    between = "".join(tree[widx[0] + 1 : widx[1]])
-    assert "Sort" in between and "Exchange" not in between
-    # the taken-set explosion must not return: no Generate (explode)
-    # node anywhere in the rank-gap plan
-    assert "Generate" not in plan
+    assert "HashAggregate" in tree[widx[0] - 1]
+    between = tree[widx[0] + 1 : widx[1]]
+    assert len(between) == 1 and "Sort [" in between[0]
+    assert "Generate" not in final
 
 
 @pytest.mark.parametrize("mode", ["candidates", "exact"])

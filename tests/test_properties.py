@@ -191,7 +191,7 @@ def test_publication_matches_dense_bruteforce(spark, rows):
 
 # tie-heavy tiny universe: 3 contexts × 3 items makes identical
 # crosstab columns (equal t), single-neighbor items (V = 2), and
-# all-cooccurring items (absent-row case) all common draws
+# all-cooccurring items (null rank-gap extremes) all common draws
 tied_rows = st.lists(
     st.tuples(st.integers(0, 2), st.integers(1, 3)),
     min_size=2,
@@ -204,61 +204,52 @@ tied_rows = st.lists(
 # so the adversarial shapes are pinned as always-run @example cases):
 # equal-t tie between items 1 and 2 with a non-cooc item 4 on its own
 # context; two isolated single-neighbor items (V=2, both extremes =
-# the other's t); two valid items that co-occur → EMPTY result
+# the other's corr); two valid items that co-occur (no non-cooc
+# neighbor: both rank-gap extremes are null)
 @example(rows=[(0, 1), (1, 1), (0, 2), (1, 2), (0, 3), (2, 4)])
 @example(rows=[(0, 1), (0, 1), (1, 2), (1, 2)])
 @example(rows=[(0, 1), (0, 1), (1, 1), (0, 2), (1, 2), (1, 2)])
 @settings(**SETTINGS)
-def test_rank_gap_extremes_matches_dense_bruteforce(spark, rows):
-    """_rank_gap_extremes (correlation.py rank-gap trick) ≡ the dense
-    definition on every random table: per valid item a, t_nc_max/min
-    are exactly max/min of t_b over valid NON-co-occurring b ≠ a
-    (dot(a,b) == 0 in the dense crosstab), and the row is ABSENT
-    exactly when a co-occurs with every other valid item. The tied
-    strategy drives the adversarial shapes the sorted-pass gap test
-    must survive: equal-t runs (rank ties broken by id), V = 2
+def test_neighbor_extremes_match_dense_bruteforce(spark, rows):
+    """neighbor_stats' row extremes (cooc min/max combined with the
+    rank-gap trick over the non-co-occurring set) ≡ the dense
+    definition on every random table: per valid item a, mn/mx are
+    exactly min/max of corr(a, b) over ALL V−1 valid b ≠ a, and deg is
+    the number of valid b ≠ a with dot(a, b) > 0. The tied strategy
+    drives the adversarial shapes the sorted-pass gap test must
+    survive: equal-t runs (rank ties broken by id), V = 2
     single-neighbor items, and gapless prefixes on both scan sides
-    (VERDICT r7 item 6)."""
-    from propius_spark.operators.correlation import (
-        _rank_gap_extremes,
-        gram,
-        valid_item_stats,
-    )
-    from propius_spark.plans import materialize
+    (an item co-occurring with every other valid item)."""
+    from propius_spark.operators import neighbor_stats
 
     df = spark.createDataFrame(
         [(f"r{r}", i) for r, i in rows], "reference_id string, item_id long"
     )
-    cells = materialize(build_cells(df), compact=False)
-    stats = materialize(valid_item_stats(cells))
-    g = materialize(gram(cells, stats, None))
     got = {
-        r["item_a"]: (r["t_nc_max"], r["t_nc_min"])
-        for r in _rank_gap_extremes(stats, g).collect()
+        r["item_id"]: (r["mn"], r["mx"], r["deg"])
+        for r in neighbor_stats(build_cells(df)).collect()
     }
     clear_materialized(spark)
 
     m, items = _dense(rows)
-    n, s, q, den2 = _stats(m)
-    ipos = {it: j for j, it in enumerate(items)}
-    valid = [it for it, d2 in zip(items, den2) if d2 > 0]
-    t = {it: s[ipos[it]] / math.sqrt(den2[ipos[it]]) for it in valid}
-
+    *_, den2 = _stats(m)
+    valid = [j for j, d2 in enumerate(den2) if d2 > 0]
     want = {}
-    for a in valid:
-        nc = [
-            t[b]
-            for b in valid
-            if b != a and float(np.dot(m[ipos[a]], m[ipos[b]])) == 0.0
-        ]
-        if nc:
-            want[a] = (max(nc), min(nc))
+    if len(valid) >= 2:
+        corr = np.corrcoef(m[valid])
+        for x, a in enumerate(valid):
+            row = [corr[x, y] for y in range(len(valid)) if y != x]
+            deg = sum(
+                1 for b in valid if b != a and float(np.dot(m[a], m[b])) > 0
+            )
+            want[items[a]] = (min(row), max(row), deg)
 
     assert set(got) == set(want), (sorted(got), sorted(want))
-    for a, (mx, mn) in want.items():
-        gmx, gmn = got[a]
-        assert math.isclose(gmx, mx, rel_tol=1e-9, abs_tol=1e-12), (a, gmx, mx)
+    for a, (mn, mx, deg) in want.items():
+        gmn, gmx, gdeg = got[a]
         assert math.isclose(gmn, mn, rel_tol=1e-9, abs_tol=1e-12), (a, gmn, mn)
+        assert math.isclose(gmx, mx, rel_tol=1e-9, abs_tol=1e-12), (a, gmx, mx)
+        assert gdeg == deg, (a, gdeg, deg)
 
 
 edge_lists = st.lists(
