@@ -21,7 +21,9 @@ Scale design notes (the parts that survive a 1000-executor / 100 TB run):
 
 - The only large shuffle is the Gram self-join on the context key. Its
   output is Σ_ctx deg(ctx)² rows; hot contexts (a context containing d
-  items yields d² pairs) skew it. AQE skew-join splitting is enabled in
+  items yields d² pairs) skew it. A·Aᵀ is symmetric, so only the
+  item_a < item_b half is aggregated and shuffled, and one explode
+  mirrors the summed rows. AQE skew-join splitting is enabled in
   session.py; `gram` also exposes `max_context_degree` to cap
   pathological contexts with an explicit, documented semantic delta.
 - Items with zero variance (den² = n·q − s² = 0) are NaN rows/columns
@@ -31,9 +33,11 @@ Scale design notes (the parts that survive a 1000-executor / 100 TB run):
 - Pairs that share no context still have nonzero correlation
   corr_ij = −s_i·s_j/(den_i·den_j) = −t_i·t_j with t = s/den. Because
   that term is *separable*, per-item statistics over ALL V−1 neighbors
-  (mean, std — and min/max via a rank-gap trick) are computable from
-  sparse aggregates plus two global scalars T = Σt_j, U = Σt_j²: no I²
-  materialization. See `neighbor_stats`.
+  (mean, std — and min/max via a rank-gap trick whose free ranks are set
+  differences over each item's taken-rank list, with no sort) are
+  computable from one partial-aggregated per-item pass plus two global
+  scalars T = Σt_j, U = Σt_j²: no I² materialization. See
+  `neighbor_stats`.
 - All post-aggregate arithmetic is done in double (cast once) so the
   engine and the DuckDB oracle evaluate bit-identical IEEE expressions,
   and so 100 TB-scale values cannot silently wrap 64-bit ints.
@@ -106,13 +110,17 @@ def gram(cells: DataFrame, stats: DataFrame, max_context_degree: int | None = No
     """(item_a, item_b, dot) for co-occurring valid pairs, both directions.
 
     The self-equi-join on ctx_id is the distributed analogue of the
-    sparse A·Aᵀ at propius/similarity.py:37. Cells of invalid items are
-    semi-join-pruned first so the pair explosion only covers items that
-    can appear in results. `max_context_degree`, when set, drops
-    contexts containing more than that many distinct items — an
-    *approximate* mode for pathological skew (documented delta; default
-    off, exact). A cap below 1 would keep no context at all while the
-    stats still count every one, so it raises ValueError.
+    sparse A·Aᵀ at propius/similarity.py:37. A·Aᵀ is symmetric, so the
+    join keeps only item_a < item_b — half the pairs reach the
+    aggregate and its shuffle — and one explode mirrors each summed row
+    into both directions. Every dot is an exact sum of integer
+    products, so both directions carry the same double. Cells of
+    invalid items are semi-join-pruned first so the pair explosion only
+    covers items that can appear in results. `max_context_degree`, when
+    set, drops contexts containing more than that many distinct items —
+    an *approximate* mode for pathological skew (documented delta;
+    default off, exact). A cap below 1 would keep no context at all
+    while the stats still count every one, so it raises ValueError.
     """
     if max_context_degree is not None and max_context_degree < 1:
         raise ValueError(f"max_context_degree must be >= 1, got {max_context_degree}")
@@ -129,12 +137,19 @@ def gram(cells: DataFrame, stats: DataFrame, max_context_degree: int | None = No
     b = pruned.select(
         F.col("ctx_id"), F.col("item_id").alias("item_b"), F.col("cnt").alias("cnt_b")
     )
-    return (
+    half = (
         a.join(b, "ctx_id")
-        .filter(F.col("item_a") != F.col("item_b"))
+        .filter(F.col("item_a") < F.col("item_b"))
         .groupBy("item_a", "item_b")
         .agg(F.sum(F.col("cnt_a") * F.col("cnt_b")).cast("double").alias("dot"))
     )
+    both = F.explode(
+        F.array(
+            F.struct("item_a", "item_b"),
+            F.struct(F.col("item_b").alias("item_a"), F.col("item_a").alias("item_b")),
+        )
+    )
+    return half.select(both.alias("p"), "dot").select("p.item_a", "p.item_b", "dot")
 
 
 def _corr_gram(stats: DataFrame, g: DataFrame, *b_extra: str) -> DataFrame:
@@ -162,6 +177,32 @@ def _corr_gram(stats: DataFrame, g: DataFrame, *b_extra: str) -> DataFrame:
     )
 
 
+def _corr_inputs(
+    cells: DataFrame,
+    max_context_degree: int | None = None,
+    stats: DataFrame | None = None,
+    g: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(cells, stats, g): the prelude every correlation consumer shares.
+    Supplied `stats`/`g` pass through; a missing Gram is built lazily,
+    since each caller that does not hold one consumes it once.
+
+    When stats are not supplied, the cell table is materialized first:
+    cells feed four consumers (context count, item stats, both Gram
+    sides) and Spark only reuses *identical* physical subplans, so the
+    lazy composition re-scans the source event log once per consumer —
+    8 full scans of the fact table in one action (measured via explain
+    at sf0.001). Materializing the item×ctx aggregate — orders of
+    magnitude smaller than the event log — makes it one scan.
+    """
+    if stats is None:
+        cells = materialize(cells, compact=False)
+        stats = materialize(valid_item_stats(cells))
+    if g is None:
+        g = gram(cells, stats, max_context_degree)
+    return cells, stats, g
+
+
 def corr_pairs(
     cells: DataFrame,
     max_context_degree: int | None = None,
@@ -176,20 +217,8 @@ def corr_pairs(
 
     `stats`/`g` accept precomputed (usually persisted) inputs so a
     pipeline sharing them across stages computes each subtree once.
-
-    When stats are not supplied, the cell table is materialized first:
-    cells feed four consumers here (context count, item stats, both
-    Gram sides) and Spark only reuses *identical* physical subplans, so
-    the lazy composition re-scans the source event log once per
-    consumer — 8 full scans of the fact table in one action (measured
-    via explain at sf0.001). Materializing the item×ctx aggregate —
-    orders of magnitude smaller than the event log — makes it one scan.
     """
-    if stats is None:
-        cells = materialize(cells, compact=False)
-        stats = materialize(valid_item_stats(cells))
-    if g is None:
-        g = gram(cells, stats, max_context_degree)
+    _, stats, g = _corr_inputs(cells, max_context_degree, stats, g)
     return _corr_gram(stats, g).select("item_a", "item_b", "dot", "corr")
 
 
@@ -221,26 +250,24 @@ def neighbor_stats(
 
     Rank-gap trick for t_nc (no I² blowup): rank all V valid items by
     (t desc, id asc); the max non-cooc t is the t at the smallest rank
-    not taken by a co-occurring partner or the item itself. The
-    ascending rank is the exact reverse (V+1−rnk), so the min side's
-    first gap comes from scanning the SAME taken rows from the other
-    end.
+    not taken by a co-occurring partner or the item itself, the min
+    non-cooc t the t at the largest such rank.
 
-    One per-item pass: the taken set is the Gram rows (carrying dot,
-    den_b, t_b and corr) plus one self row per item with null
-    metrics, shuffled ONCE by item_a. Both row_numbers and the groupBy
-    yielding the sums, the cooc extremes and both first free ranks
-    ride that exchange; null-skipping sums and count(dot) keep the
-    self rows out of the neighbor aggregates.
+    One per-item pass, no sort: the taken set is the Gram rows
+    (carrying dot, den_b, t_b and corr) plus one self row per item with
+    null metrics, and ONE groupBy(item_a) — partial-aggregated before
+    its single exchange — yields the sums, the cooc extremes and the
+    list of taken ranks; null-skipping sums and count(dot) keep the
+    self rows out of the neighbor aggregates. An item's `size` taken
+    ranks are distinct, so [1, size+1] and [V−size, V] each hold a free
+    rank unless size = V: the smallest and largest free ranks are set
+    differences over those windows. When the item co-occurs with every
+    other valid item both differences are empty (rank V+1 maps to no t)
+    and the extremes come out null, as they must.
     """
-    if stats is None:
-        # as in corr_pairs: unpersisted cells replay upstream per consumer
-        cells = materialize(cells, compact=False)
-        stats = materialize(valid_item_stats(cells))
-    if g is None:
-        g = materialize(gram(cells, stats, max_context_degree))
+    _, stats, g = _corr_inputs(cells, max_context_degree, stats, g)
     sc_row = _global_scalars(stats)
-    v = F.lit(int(sc_row["v"])).cast("long")
+    v = F.lit(int(sc_row["v"]))
     big_t, big_u = F.lit(sc_row["big_t"]), F.lit(sc_row["big_u"])
 
     # materialized: six consumers (both Gram sides, the self rows, the
@@ -265,42 +292,31 @@ def neighbor_stats(
             )
         )
     )
-
-    # First free rank per side: the taken ranks of one item_a are
-    # distinct, so sorted ascending the first gap is the first position
-    # where rnk_b != row_number; the reverse side runs the same test on
-    # V+1−rnk_b under the descending row_number. A gapless prefix frees
-    # rank count+1, which exceeds V exactly when the item co-occurs with
-    # every other valid item — then BOTH sides are gapless and the left
-    # rank→t joins below give null extremes, as they must.
-    def first_free(rnk, rn):
-        return F.coalesce(F.min(F.when(rnk != rn, rn)), F.count(F.lit(1)) + 1)
-
-    wd = Window.partitionBy("item_a").orderBy(F.col("rnk_b").asc())
-    wa = Window.partitionBy("item_a").orderBy(F.col("rnk_b").desc())
     dot, den_b = F.col("dot"), F.col("den_b")
-    per = (
-        taken.withColumn("rn_d", F.row_number().over(wd))
-        .withColumn("rn_a", F.row_number().over(wa))
-        .groupBy("item_a")
-        .agg(
-            F.count("dot").alias("deg"),
-            F.sum(dot / den_b).alias("g1"),
-            F.sum(dot * dot / (den_b * den_b)).alias("g2"),
-            F.sum(dot * F.col("t_b") / den_b).alias("g3"),
-            F.min("corr").alias("cmin"),
-            F.max("corr").alias("cmax"),
-            first_free(F.col("rnk_b"), F.col("rn_d")).alias("free_d"),
-            first_free(v + 1 - F.col("rnk_b"), F.col("rn_a")).alias("free_a"),
-        )
+    per = taken.groupBy("item_a").agg(
+        F.count("dot").alias("deg"),
+        F.sum(dot / den_b).alias("g1"),
+        F.sum(dot * dot / (den_b * den_b)).alias("g2"),
+        F.sum(dot * F.col("t_b") / den_b).alias("g3"),
+        F.min("corr").alias("cmin"),
+        F.max("corr").alias("cmax"),
+        F.collect_list("rnk_b").alias("ranks"),
+    )
+    size = F.size("ranks")
+    free_d = F.array_min(F.array_except(F.sequence(F.lit(1), size + 1), F.col("ranks")))
+    free_a = F.array_max(
+        F.array_except(F.sequence(F.greatest(F.lit(1), v - size), v), F.col("ranks"))
     )
     # every item has its self row in taken, so `per` holds exactly one
     # row per valid item and the stats join can stream it (broadcasting
     # the item dimension — no second exchange)
     tmap_d = ranked.select(F.col("rnk").alias("free_d"), F.col("t").alias("t_nc_max"))
-    tmap_a = ranked.select((v + 1 - F.col("rnk")).alias("free_a"), F.col("t").alias("t_nc_min"))
+    tmap_a = ranked.select(F.col("rnk").alias("free_a"), F.col("t").alias("t_nc_min"))
     sp = (
-        per.withColumnRenamed("item_a", "item_id")
+        per.select(
+            F.col("item_a").alias("item_id"), "deg", "g1", "g2", "g3", "cmin", "cmax",
+            free_d.alias("free_d"), free_a.alias("free_a"),
+        )
         .join(F.broadcast(ranked), "item_id")
         .join(F.broadcast(tmap_d), "free_d", "left")
         .join(F.broadcast(tmap_a), "free_a", "left")

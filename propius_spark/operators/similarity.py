@@ -37,10 +37,9 @@ from pyspark.sql.window import Window
 from ..plans import materialize
 from .correlation import (
     _corr_gram,
+    _corr_inputs,
     corr_pairs,
-    gram,
     neighbor_stats,
-    valid_item_stats,
 )
 
 
@@ -59,39 +58,30 @@ def get_similar_items(
     never an I×I matrix. Matches propius/similarity.py:133-167 semantics
     including NaN-skip (invalid items are excluded up front).
 
-    Hot-item guard (VERDICT r5 nit 1): the broadcast of the item's
-    context vector is bounded by that item's occurrence count, which at
-    100× scale can exceed broadcast limits for a pathologically hot
-    item. When the vector exceeds `broadcast_max_contexts` rows, fall
-    back to a plain shuffle join on ctx_id — identical semantics, one
-    extra exchange, no driver/executor broadcast OOM. The probe reads
-    the item's `n_ctx` off the persisted stats table (stamped by
-    item_stats in a pass already paid) — never a scan of the cell
-    table.
+    Hot-item guard: the broadcast of the item's context vector is
+    bounded by that item's occurrence count, which at 100× scale can
+    exceed broadcast limits for a pathologically hot item. When the
+    vector exceeds `broadcast_max_contexts` rows, fall back to a plain
+    shuffle join on ctx_id — identical semantics, one extra exchange,
+    no driver/executor broadcast OOM. The probe reads the item's
+    `n_ctx` off the persisted stats table (stamped by item_stats in a
+    pass already paid) — never a scan of the cell table.
 
     Returns (item_b, corr) sorted descending.
     """
-    cells = materialize(cells, compact=False)
-    stats = materialize(valid_item_stats(cells))
+    cells, stats, _ = _corr_inputs(cells)
     me = stats.filter(F.col("item_id") == item_id)
     my_cells = cells.filter(F.col("item_id") == item_id).select(
         "ctx_id", F.col("cnt").alias("cnt_a")
     )
-    # hot-item probe off the tiny persisted stats table (n_ctx is the
-    # item's context count, stamped by item_stats in the pass already
-    # paid) instead of a full count scan of the cell table — at target
-    # scale that scan is a whole extra pass over the big table per
-    # serving call (guide §2.3). The SAME probe row carries the item's
-    # s and den, embedded below as plan literals: the old 1-row
-    # crossJoin(broadcast(me)) paid a separate broadcast-build job per
-    # serving call for two doubles this probe already holds (round 9).
-    # An item absent from stats (invalid: den2 ≤ 0) probes None: the
-    # RESULT is empty either way (`me` is empty), but the strategy must
-    # stay conservative — an omnipresent constant-count item has cells
-    # in every context, so hinting the broadcast on probe-None could
-    # OOM where the shuffle join just runs (ADVICE r8); the literal
-    # fallback (0.0) is likewise unreachable then: `row` keeps the
-    # empty-me crossJoin so its rows vanish exactly as before.
+    # one probe of the small persisted stats table: the item's context
+    # count picks the join strategy, and its s and den ride the plan as
+    # literals (no broadcast-build job for two doubles). An item absent
+    # from stats (invalid: den2 ≤ 0) probes None. Its result is empty
+    # either way (`me` is empty), but the strategy stays conservative:
+    # an omnipresent constant-count item has cells in every context,
+    # so broadcasting its vector could OOM where the shuffle join just
+    # runs.
     probe = me.select("n_ctx", "s", "den").first()
     if probe is not None and probe["n_ctx"] <= broadcast_max_contexts:
         my_cells = F.broadcast(my_cells)
@@ -105,9 +95,9 @@ def get_similar_items(
         dots, "item_id", "left"
     ).fillna(0.0, ["dot"])
     if probe is None:
-        # invalid/absent item: keep the crossJoin against the EMPTY me
-        # so the result is empty by construction (a literal s_a/den_a
-        # would fabricate rows here)
+        # invalid/absent item: crossJoin the EMPTY me so the result is
+        # empty by construction (a literal s_a/den_a would fabricate
+        # rows here)
         row = row.crossJoin(
             F.broadcast(
                 me.select(F.col("s").alias("s_a"), F.col("den").alias("den_a"))
@@ -135,10 +125,7 @@ def get_similar_items(
             (F.avg("corr") + F.lit(threshold_value) * F.stddev_samp("corr")).alias("cut")
         )
         # boundary membership compares 6-dp-ROUNDED corr against the
-        # 6-dp-ROUNDED cut (the repo's _r6 idiom): raw mean+k·σ can
-        # differ between engines in the last ulp, so a raw comparison
-        # makes membership of a pair sitting exactly on the cut
-        # engine-specific (history/BACKLOG.md round-4 item 3; oracle twin rounds
+        # 6-dp-ROUNDED cut (module docstring; the oracle twin rounds
         # identically)
         out = (
             row.crossJoin(F.broadcast(th))
@@ -185,13 +172,10 @@ def similar_items_candidates(
     """
     pairs = corr_pairs(cells)
     if threshold_method == "std_dev":
-        # ONE window pass (round 9, VERDICT r8 item 5): the per-item
-        # cut is avg + k·σ over the item's candidate rows — as window
-        # aggregates over partitionBy(item_a), every row sees its cut
-        # in the same exchange that used to be paid three times over
-        # (persist the pair table, groupBy it for the cuts, join the
-        # cuts back — the agg-side and join-side exchanges never
-        # reuse). The persist disappears with the second consumer.
+        # ONE window pass: the per-item cut is avg + k·σ over the
+        # item's candidate rows — as window aggregates over
+        # partitionBy(item_a), every row sees its cut in one exchange
+        # (a groupBy of the cuts joined back would shuffle twice).
         # Window partials merge in partition-row order rather than the
         # hash aggregate's merge order, so the raw cut can differ in
         # the last ulp — exactly the engine-specific-boundary class
@@ -243,9 +227,8 @@ def similar_items_exact(
     # AQE re-optimizes the whole remaining plan at every query stage,
     # and a deep neighbor-stats subtree under the final joins measured
     # 3-10× slower than the same pipeline with a flat final plan.
-    cells = materialize(cells, compact=False)
-    stats = materialize(valid_item_stats(cells))
-    g = materialize(gram(cells, stats, max_context_degree))
+    cells, stats, g = _corr_inputs(cells, max_context_degree)
+    g = materialize(g)
     ns = neighbor_stats(cells, stats=stats, g=g)
     cuts = materialize(
         ns.select(
@@ -257,12 +240,9 @@ def similar_items_exact(
         )
     )
 
-    # Boundary membership compares 6-dp-ROUNDED corr against the
-    # 6-dp-ROUNDED cut (the repo's _r6 idiom): raw mean+k·σ can differ
-    # between engines in the last ulp, making membership of a pair
-    # sitting exactly on the cut engine-specific (history/BACKLOG.md round-4
-    # item 3; the similar_exact_parts / publish_retrieve oracle twins
-    # round identically).
+    # boundary membership compares 6-dp-ROUNDED corr against the
+    # 6-dp-ROUNDED cut (module docstring; the similar_exact_parts /
+    # publish_retrieve oracle twins round identically)
     cooc = (
         _corr_gram(stats, g)
         .join(F.broadcast(cuts), "item_a")
@@ -276,6 +256,9 @@ def similar_items_exact(
     # the ROUNDED test against a cut in [0, 1e-6) (both round to 0), so
     # the prefilter must keep those items for the superset to be one.
     neg = F.broadcast(cuts.filter(F.col("cut") < F.lit(1e-6)))
+    # only neg's own Gram rows can match the anti-join: the semi-join
+    # drops the rest map-side, so an empty neg shuffles no Gram row
+    neg_g = g.select("item_a", "item_b").join(neg.select("item_a"), "item_a", "left_semi")
     noncooc = (
         neg.join(
             stats.select(F.col("item_id").alias("item_b"), F.col("t").alias("t_b")),
@@ -291,7 +274,7 @@ def similar_items_exact(
             >= F.round(F.col("cut"), 6)
         )
         .filter(F.col("item_a") != F.col("item_b"))
-        .join(g.select("item_a", "item_b"), ["item_a", "item_b"], "left_anti")
+        .join(neg_g, ["item_a", "item_b"], "left_anti")
         .select(
             "item_a",
             "item_b",

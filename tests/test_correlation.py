@@ -207,6 +207,53 @@ def test_gram_context_degree_cap(spark):
         corr_pairs(cells, max_context_degree=0)
 
 
+@pytest.mark.parametrize("cap", [None, 3])
+def test_gram_half_join_matches_dense(spark, cap):
+    """gram joins only item_a < item_b and mirrors each summed row, so
+    its output must equal the off-diagonal nonzeros of a dense NumPy
+    A·Aᵀ in BOTH directions — over a log with a repeated event (cnt 2)
+    and one hot context, with the cap off and binding (cap 3 drops the
+    hot context, counted over the valid items gram keeps). The plan
+    filters the join output on item_a < item_b below the aggregate."""
+    import re
+
+    from propius_spark.operators import gram
+
+    rows = [("hot", it) for it in range(1, 7)] + [
+        ("r1", 1), ("r1", 1), ("r1", 2),
+        ("r2", 2), ("r2", 3),
+        ("r3", 3), ("r3", 4), ("r3", 4),
+        ("r4", 5), ("r4", 1),
+        ("r5", 6), ("r5", 2), ("r5", 4),
+        ("r6", 5),
+    ]
+    cells = build_cells(spark.createDataFrame(rows, "reference_id string, item_id long"))
+    stats = valid_item_stats(cells)
+    df = gram(cells, stats, max_context_degree=cap)
+    got = {(r["item_a"], r["item_b"]): r["dot"] for r in df.collect()}
+
+    dense, items = crosstab_numpy(rows, "distinct")
+    valid = {r["item_id"] for r in stats.collect()}
+    assert valid == set(items), "fixture must keep every item valid"
+    assert dense.max() == 2
+    if cap is not None:
+        dense = dense[:, (dense > 0).sum(axis=0) <= cap]
+        assert dense.shape[1] < len({ref for ref, _ in rows}), "cap must bind"
+    dots = dense @ dense.T
+    expect = {
+        (items[i], items[j]): float(dots[i, j])
+        for i in range(len(items))
+        for j in range(len(items))
+        if i != j and dots[i, j] != 0
+    }
+    assert got == expect
+
+    tree = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    half = [i for i, ln in enumerate(tree) if re.search(r"item_a#\d+L < item_b#\d+L", ln)]
+    partial = [i for i, ln in enumerate(tree) if "partial_sum" in ln]
+    assert half and partial and partial[0] < half[0], "\n".join(tree)
+
+
 def test_candidates_stddev_matches_dense(spark):
     """similar_items_candidates' std_dev branch (round-9 single-window
     rewrite) against a dense NumPy brute force: per item, the cut is

@@ -368,14 +368,14 @@ def test_new_text_ops_plan_shape(spark, sf_dir):
 def test_neighbor_stats_one_item_exchange(spark, sf_dir):
     """neighbor_stats' per-item pass: the taken set (Gram rows carrying
     the sum terms and corr, plus one self row per item) is shuffled
-    ONCE by item_a. Both first-free-rank row_numbers ride that exchange
-    — two Window nodes separated only by an in-partition Sort — and the
-    per-item HashAggregate sits directly above the upper Window, so the
-    sums, the cooc extremes and the free ranks share it. The stats and
-    rank→t joins broadcast. The executed (AQE final) plan must hold
-    exactly one hash exchange; a second shuffle of the pair table (a
-    separate groupBy or join back to the stats) or a side-tagged
-    explode (Generate) fails here."""
+    ONCE by item_a, and no sort: one groupBy yields the sums, the cooc
+    extremes and the taken-rank list the free ranks are read from, and
+    it partial-aggregates below its exchange. The stats and rank→t
+    joins broadcast. The executed (AQE final) plan must hold exactly
+    one hash exchange with a partial aggregate under it; a second
+    shuffle of the pair table, a Window or Sort over it (the
+    row_number form of the free ranks), or a side-tagged explode
+    (Generate) fails here."""
     import re
 
     from propius_spark.operators import gram, neighbor_stats, valid_item_stats
@@ -390,13 +390,38 @@ def test_neighbor_stats_one_item_exchange(spark, sf_dir):
     final = final.split("== Initial Plan ==")[0]
 
     assert final.count("Exchange hashpartitioning") == 1
-    tree = final.splitlines()
-    widx = [i for i, ln in enumerate(tree) if re.search(r"\bWindow \[", ln)]
-    assert len(widx) == 2
-    assert "HashAggregate" in tree[widx[0] - 1]
-    between = tree[widx[0] + 1 : widx[1]]
-    assert len(between) == 1 and "Sort [" in between[0]
+    assert not re.search(r"\b(Window|Sort) \[", final)
     assert "Generate" not in final
+    tree = final.splitlines()
+    ex = next(i for i, ln in enumerate(tree) if "Exchange hashpartitioning" in ln)
+    below = tree[ex + 1]
+    assert "Aggregate(keys=[item_a#" in below and "partial_" in below
+
+
+def test_similar_exact_anti_join_reads_neg_gram_rows_only(spark, sf_dir):
+    """similar_items_exact's non-co-occurring branch anti-joins its
+    candidates against the Gram pairs. Only the Gram rows of items with
+    a cut below 1e-6 (the broadcast `neg` set) can match, so the
+    anti-join's right side sits under a semi-join with those ids: an
+    empty `neg` shuffles no Gram row. Correctness stays pinned by the
+    dense brute-force tests."""
+    import re
+
+    from propius_spark.operators import similar_items_exact
+
+    df = similar_items_exact(build_cells(occurrences_from_lineitem(spark, sf_dir)))
+    tree = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    anti = next(i for i, ln in enumerate(tree) if "LeftAnti" in ln)
+    col = re.search(r"[:+]- ", tree[anti]).end()
+    right = next(i for i in range(anti + 1, len(tree)) if tree[i][col : col + 3] == "+- ")
+    sub = []
+    for ln in tree[right + 1 :]:
+        if len(ln) <= col or ln[col] != " ":
+            break
+        sub.append(ln)
+    semi = next(i for i, ln in enumerate(sub) if "LeftSemi" in ln)
+    assert "BroadcastHashJoin [item_a#" in sub[semi]
+    assert any("< 1.0E-6" in ln for ln in sub[semi + 1 :])
 
 
 @pytest.mark.parametrize("mode", ["candidates", "exact"])
