@@ -38,6 +38,10 @@ Scale design notes (the parts that survive a 1000-executor / 100 TB run):
   computable from one partial-aggregated per-item pass plus two global
   scalars T = Σt_j, U = Σt_j²: no I² materialization. See
   `neighbor_stats`.
+- One item table, one correlated pair table: `valid_item_stats` carries
+  the rank the rank-gap trick reads, and `similar_items_exact` builds and
+  materializes the correlated Gram (`_corr_gram`) once for all its
+  pair-side consumers, so each pair's corr is computed once.
 - All post-aggregate arithmetic is done in double (cast once) so the
   engine and the DuckDB oracle evaluate bit-identical IEEE expressions,
   and so 100 TB-scale values cannot silently wrap 64-bit ints.
@@ -91,10 +95,12 @@ def item_stats(cells: DataFrame) -> DataFrame:
 def valid_item_stats(cells: DataFrame) -> DataFrame:
     """Per-item stats for items with nonzero variance.
 
-    (item_id, s, q, n, den2, den, t) with den2 = n·q − s², den = √den2,
-    t = s/den. Items with den2 ≤ 0 are the reference's NaN rows —
-    excluded here once (see module docstring). The scalar n is attached
-    by a broadcast cross join (1 row), keeping the whole plan lazy.
+    (item_id, s, q, n, den2, den, t, rnk) with den2 = n·q − s²,
+    den = √den2, t = s/den, rnk = row_number by (t desc, item_id asc)
+    (`neighbor_stats`' rank-gap trick). Items with den2 ≤ 0 are the
+    reference's NaN rows — excluded here once (see module docstring).
+    The scalar n is attached by a broadcast cross join (1 row), keeping
+    the whole plan lazy.
     """
     stats = item_stats(cells).crossJoin(F.broadcast(context_count(cells)))
     den2 = F.col("n") * F.col("q") - F.col("s") * F.col("s")
@@ -103,6 +109,12 @@ def valid_item_stats(cells: DataFrame) -> DataFrame:
         .filter(F.col("den2") > 0)
         .withColumn("den", F.sqrt("den2"))
         .withColumn("t", F.col("s") / F.col("den"))
+        .withColumn(
+            "rnk",
+            F.row_number().over(
+                Window.orderBy(F.col("t").desc(), F.col("item_id").asc())
+            ),
+        )
     )
 
 
@@ -152,12 +164,12 @@ def gram(cells: DataFrame, stats: DataFrame, max_context_degree: int | None = No
     return half.select(both.alias("p"), "dot").select("p.item_a", "p.item_b", "dot")
 
 
-def _corr_gram(stats: DataFrame, g: DataFrame, *b_extra: str) -> DataFrame:
+def _corr_gram(stats: DataFrame, g: DataFrame) -> DataFrame:
     """The Gram pairs with their correlation — (item_a, item_b, dot, n,
-    s_a, den_a, t_a, s_b, den_b, t_b, corr) — through two broadcast
-    stats joins (item dimension ≪ pair table). Every stats row carries
-    the context count n, so n rides the a side. `b_extra` names further
-    stats columns to carry on the b side as `<name>_b`."""
+    s_a, den_a, t_a, s_b, den_b, t_b, rnk_b, corr) — through two
+    broadcast stats joins (item dimension ≪ pair table). Every stats
+    row carries the context count n, so n rides the a side.
+    `similar_items_exact` materializes it once for all its consumers."""
     a = stats.select(
         F.col("item_id").alias("item_a"),
         "n",
@@ -165,7 +177,7 @@ def _corr_gram(stats: DataFrame, g: DataFrame, *b_extra: str) -> DataFrame:
     )
     b = stats.select(
         F.col("item_id").alias("item_b"),
-        *[F.col(c).alias(f"{c}_b") for c in ("s", "den", "t", *b_extra)],
+        *[F.col(c).alias(f"{c}_b") for c in ("s", "den", "t", "rnk")],
     )
     corr = (F.col("n") * F.col("dot") - F.col("s_a") * F.col("s_b")) / (
         F.col("den_a") * F.col("den_b")
@@ -203,22 +215,14 @@ def _corr_inputs(
     return cells, stats, g
 
 
-def corr_pairs(
-    cells: DataFrame,
-    max_context_degree: int | None = None,
-    stats: DataFrame | None = None,
-    g: DataFrame | None = None,
-) -> DataFrame:
+def corr_pairs(cells: DataFrame, max_context_degree: int | None = None) -> DataFrame:
     """(item_a, item_b, dot, corr) over co-occurring valid pairs (both
     directions; symmetric). This is the sparse "candidates" view of the
     correlation matrix — pairs with no shared context are not emitted
     (their corr is the separable −t_a·t_b; see `neighbor_stats` /
     `similar_items_exact` for where that matters).
-
-    `stats`/`g` accept precomputed (usually persisted) inputs so a
-    pipeline sharing them across stages computes each subtree once.
     """
-    _, stats, g = _corr_inputs(cells, max_context_degree, stats, g)
+    _, stats, g = _corr_inputs(cells, max_context_degree)
     return _corr_gram(stats, g).select("item_a", "item_b", "dot", "corr")
 
 
@@ -248,44 +252,40 @@ def neighbor_stats(
       max/min t over the item's non-cooc set (all non-cooc corrs are
       −t_i·t_j, and t > 0).
 
-    Rank-gap trick for t_nc (no I² blowup): rank all V valid items by
-    (t desc, id asc); the max non-cooc t is the t at the smallest rank
-    not taken by a co-occurring partner or the item itself, the min
-    non-cooc t the t at the largest such rank.
+    Rank-gap trick for t_nc (no I² blowup): all V valid items are
+    ranked by (t desc, id asc) — the stats table's `rnk`; the max
+    non-cooc t is the t at the smallest rank not taken by a co-occurring
+    partner or the item itself, the min non-cooc t the t at the largest
+    such rank.
 
-    One per-item pass, no sort: the taken set is the Gram rows
-    (carrying dot, den_b, t_b and corr) plus one self row per item with
-    null metrics, and ONE groupBy(item_a) — partial-aggregated before
-    its single exchange — yields the sums, the cooc extremes and the
-    list of taken ranks; null-skipping sums and count(dot) keep the
-    self rows out of the neighbor aggregates. An item's `size` taken
-    ranks are distinct, so [1, size+1] and [V−size, V] each hold a free
-    rank unless size = V: the smallest and largest free ranks are set
-    differences over those windows. When the item co-occurs with every
-    other valid item both differences are empty (rank V+1 maps to no t)
-    and the extremes come out null, as they must.
+    One per-item pass over the correlated Gram, no sort: the taken set
+    is the Gram rows (carrying dot, den_b, t_b and corr) plus one self
+    row per item with null metrics, and ONE groupBy(item_a) —
+    partial-aggregated before its single exchange — yields the sums,
+    the cooc extremes and the list of taken ranks; null-skipping sums
+    and count(dot) keep the self rows out of the neighbor aggregates. An
+    item's `size` taken ranks are distinct, so [1, size+1] and
+    [V−size, V] each hold a free rank unless size = V: the smallest and
+    largest free ranks are set differences over those windows. When the
+    item co-occurs with every other valid item both differences are
+    empty (rank V+1 maps to no t) and the extremes come out null, as
+    they must.
     """
     _, stats, g = _corr_inputs(cells, max_context_degree, stats, g)
+    return _row_stats(stats, _corr_gram(stats, g))
+
+
+def _row_stats(stats: DataFrame, cg: DataFrame) -> DataFrame:
+    """`neighbor_stats`' per-item pass over a correlated Gram `cg`."""
     sc_row = _global_scalars(stats)
     v = F.lit(int(sc_row["v"]))
     big_t, big_u = F.lit(sc_row["big_t"]), F.lit(sc_row["big_u"])
 
-    # materialized: six consumers (both Gram sides, the self rows, the
-    # stats join, both rank→t maps) would each re-sort the item dimension
-    ranked = materialize(
-        stats.withColumn(
-            "rnk",
-            F.row_number().over(
-                Window.orderBy(F.col("t").desc(), F.col("item_id").asc())
-            ),
-        )
-    )
     metrics = ("dot", "den_b", "t_b", "corr")
     taken = (
-        _corr_gram(ranked, g, "rnk")
-        .select("item_a", "rnk_b", *metrics)
+        cg.select("item_a", "rnk_b", *metrics)
         .unionByName(
-            ranked.select(
+            stats.select(
                 F.col("item_id").alias("item_a"),
                 F.col("rnk").alias("rnk_b"),
                 *[F.lit(None).cast("double").alias(c) for c in metrics],
@@ -310,14 +310,14 @@ def neighbor_stats(
     # every item has its self row in taken, so `per` holds exactly one
     # row per valid item and the stats join can stream it (broadcasting
     # the item dimension — no second exchange)
-    tmap_d = ranked.select(F.col("rnk").alias("free_d"), F.col("t").alias("t_nc_max"))
-    tmap_a = ranked.select(F.col("rnk").alias("free_a"), F.col("t").alias("t_nc_min"))
+    tmap_d = stats.select(F.col("rnk").alias("free_d"), F.col("t").alias("t_nc_max"))
+    tmap_a = stats.select(F.col("rnk").alias("free_a"), F.col("t").alias("t_nc_min"))
     sp = (
         per.select(
             F.col("item_a").alias("item_id"), "deg", "g1", "g2", "g3", "cmin", "cmax",
             free_d.alias("free_d"), free_a.alias("free_a"),
         )
-        .join(F.broadcast(ranked), "item_id")
+        .join(F.broadcast(stats), "item_id")
         .join(F.broadcast(tmap_d), "free_d", "left")
         .join(F.broadcast(tmap_a), "free_a", "left")
         .fillna(0.0, ["g1", "g2", "g3"])

@@ -15,15 +15,15 @@ selects exactly the rows that raw scores select at mean + k·σ. The
 engine filters in raw space and computes the stored scaled_score from
 the analytic row extremes.
 
-Boundary-semantics DELTA vs the reference (deliberate, ADVICE r5):
-the reference compares raw float corr against the raw mean + k·σ cut
+Boundary-semantics DELTA vs the reference (deliberate): the
+reference compares raw float corr against the raw mean + k·σ cut
 (propius/similarity.py:164, a bare `>=`); this repo compares the
 6-dp-ROUNDED corr against the 6-dp-ROUNDED cut, on BOTH the engine
 and its DuckDB oracle twin. A pair whose corr sits within ~5e-7 of
 the cut can therefore flip membership relative to the reference. The
 rounding exists because the raw cut differs between engines in the
-last ulp, making raw-boundary membership engine-specific (round-4
-history/BACKLOG.md item 3); parity between this engine and its oracle is exact.
+last ulp, making raw-boundary membership engine-specific; rounding
+absorbs that, so parity between this engine and its oracle is exact.
 A reference-conformance audit should read this as a documented
 contract deviation, not a bug.
 """
@@ -35,12 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..plans import materialize
-from .correlation import (
-    _corr_gram,
-    _corr_inputs,
-    corr_pairs,
-    neighbor_stats,
-)
+from .correlation import _corr_gram, _corr_inputs, _row_stats, corr_pairs
 
 
 def get_similar_items(
@@ -222,16 +217,17 @@ def similar_items_exact(
     (sklearn MinMaxScaler's zero-range behavior, propius/data.py:138).
     """
     # each subtree computes once: cells is consumed by stats + gram,
-    # stats and gram by several branches each (SURVEY.md §4 cache note).
+    # stats and the correlated Gram cg (each pair's corr, computed once)
+    # by several branches each (SURVEY.md §4 cache note).
     # cuts is ALSO materialized so the final union plan is shallow —
     # AQE re-optimizes the whole remaining plan at every query stage,
     # and a deep neighbor-stats subtree under the final joins measured
     # 3-10× slower than the same pipeline with a flat final plan.
-    cells, stats, g = _corr_inputs(cells, max_context_degree)
-    g = materialize(g)
-    ns = neighbor_stats(cells, stats=stats, g=g)
+    _, stats, g = _corr_inputs(cells, max_context_degree)
+    pair_cols = ("item_a", "item_b", "rnk_b", "dot", "den_b", "t_b", "corr")
+    cg = materialize(_corr_gram(stats, g).select(*pair_cols))
     cuts = materialize(
-        ns.select(
+        _row_stats(stats, cg).select(
             F.col("item_id").alias("item_a"),
             (F.col("mean") + F.lit(k_sigma) * F.col("std")).alias("cut"),
             F.col("mn"),
@@ -244,8 +240,7 @@ def similar_items_exact(
     # 6-dp-ROUNDED cut (module docstring; the similar_exact_parts /
     # publish_retrieve oracle twins round identically)
     cooc = (
-        _corr_gram(stats, g)
-        .join(F.broadcast(cuts), "item_a")
+        cg.join(F.broadcast(cuts), "item_a")
         .filter(F.round(F.col("corr"), 6) >= F.round(F.col("cut"), 6))
         .select("item_a", "item_b", "corr", "mn", "mx")
     )
@@ -258,7 +253,7 @@ def similar_items_exact(
     neg = F.broadcast(cuts.filter(F.col("cut") < F.lit(1e-6)))
     # only neg's own Gram rows can match the anti-join: the semi-join
     # drops the rest map-side, so an empty neg shuffles no Gram row
-    neg_g = g.select("item_a", "item_b").join(neg.select("item_a"), "item_a", "left_semi")
+    neg_g = cg.select("item_a", "item_b").join(neg.select("item_a"), "item_a", "left_semi")
     noncooc = (
         neg.join(
             stats.select(F.col("item_id").alias("item_b"), F.col("t").alias("t_b")),

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..operators.cells import build_cells
 from ..schemas import OCCURRENCES, require_columns
 from .writers import start_complete_query
 
@@ -58,19 +59,7 @@ def streaming_cells(occurrences: DataFrame) -> DataFrame:
     """Streaming cell table: groupBy(item, ctx).count() over an
     unbounded occurrence stream — identical logical plan to the batch
     operators/cells.build_cells, maintained by the state store."""
-    require_columns(occurrences, ["item_id", "reference_id"], "streaming_cells")
-    return (
-        # null item/context ids dropped, matching batch build_cells
-        # (see its null-posture comment) — the streaming and batch
-        # cell tables must stay interchangeable
-        occurrences.filter(
-            F.col("item_id").isNotNull() & F.col("reference_id").isNotNull()
-        )
-        .groupBy(F.col("item_id"), F.col("reference_id").alias("ctx_id"))
-        # double cnt, matching batch build_cells (and the oracle's
-        # COUNT(*)::DOUBLE) — see cells.py for the overflow rationale
-        .agg(F.count(F.lit(1)).cast("double").alias("cnt"))
-    )
+    return build_cells(occurrences)
 
 
 def start_cells_query(

@@ -147,13 +147,19 @@ def test_build_cells_drops_null_ids(spark):
 
 def test_zero_variance_items_dropped(spark):
     """An item present in every context with equal counts has zero
-    variance → NaN row in the reference → excluded from valid stats."""
-    rows = [("r1", 1), ("r2", 1), ("r1", 2), ("r2", 3)]
+    variance → NaN row in the reference → excluded from valid stats.
+    The valid items' `rnk` is a permutation of 1..V ordered by
+    (t desc, item_id asc): items 2 and 3 tie at t = 1, item 4 leads at
+    t = 3."""
+    rows = [("r1", 1), ("r2", 1), ("r1", 2), ("r2", 3), ("r1", 4), ("r1", 4), ("r2", 4)]
     df = spark.createDataFrame(rows, "reference_id string, item_id long")
-    stats = valid_item_stats(build_cells(df))
-    got = {r["item_id"] for r in stats.collect()}
+    stats = valid_item_stats(build_cells(df)).collect()
+    got = {r["item_id"] for r in stats}
     assert 1 not in got  # in both contexts, cnt=1 each → den2 = 0
-    assert got == {2, 3}
+    assert got == {2, 3, 4}
+    by_rank = sorted(stats, key=lambda r: r["rnk"])
+    assert [r["rnk"] for r in by_rank] == [1, 2, 3]
+    assert [(r["item_id"], r["t"]) for r in by_rank] == [(4, 3.0), (2, 1.0), (3, 1.0)]
 
 
 def test_corr_pairs_no_valid_items(spark):

@@ -424,6 +424,36 @@ def test_similar_exact_anti_join_reads_neg_gram_rows_only(spark, sf_dir):
     assert any("< 1.0E-6" in ln for ln in sub[semi + 1 :])
 
 
+def test_similar_exact_correlates_each_pair_once(spark, sf_dir, monkeypatch):
+    """similar_items_exact builds one item table and one correlated pair
+    table: exactly four materializes (cells, stats carrying the rank,
+    the correlated Gram, cuts), and every pair-side consumer reads the
+    materialized correlated Gram, so the executed final plan holds no
+    stats join on item_b (the corr expression's b side). A separately
+    materialized ranked item table or a second Gram ⋈ stats → corr pass
+    fails here."""
+    from propius_spark.operators import correlation, similarity
+    from propius_spark.plans import materialize
+
+    calls = []
+
+    def counting(df, *args, **kwargs):
+        calls.append(df.columns)
+        return materialize(df, *args, **kwargs)
+
+    monkeypatch.setattr(correlation, "materialize", counting)
+    monkeypatch.setattr(similarity, "materialize", counting)
+
+    df = similarity.similar_items_exact(
+        build_cells(occurrences_from_lineitem(spark, sf_dir))
+    )
+    assert len(calls) == 4, calls
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    assert "BroadcastHashJoin [item_b" not in final
+
+
 @pytest.mark.parametrize("mode", ["candidates", "exact"])
 def test_bucketed_dup_pairs_plan_shape(spark, sf_dir, mode):
     """Embedding near-dup (round-3 sub-split form): ONE Arrow kernel
