@@ -280,10 +280,8 @@ def q_publish_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
     dictionary = spark.read.parquet(f"{sf_dir}/part.parquet").select(
         F.col("p_partkey").alias("id"), F.col("p_name").alias("title")
     )
-    # one n_buckets for the write AND the salt divisor AND the
-    # read-back pruning filter (ADVICE r8: the literal 4 appeared in
-    # three places — editing one without the others would silently
-    # skew task sizing or break pruning)
+    # one n_buckets for the write AND the read-back pruning filter:
+    # editing one without the other would silently break pruning
     n_buckets = 4
     paths = publish_model(
         occurrences_from_lineitem(spark, sf_dir),
@@ -291,17 +289,6 @@ def q_publish_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
         out_dir,
         k_sigma=2.0,
         n_buckets=n_buckets,
-        # 4 buckets ≪ the cores: salt each bucket across enough write
-        # tasks to use the session's parallelism (files_per_bucket
-        # docstring) — pruning unaffected. Derived from the cluster,
-        # not a constant: the old hard-coded 8 was 32-core-shaped and
-        # made a 4-core run schedule 32 near-empty write tasks
-        # (guide §2: partitioning must be scale-adaptive). Row equality
-        # across salt counts is pinned by
-        # test_publish_salted_write_equivalence.
-        files_per_bucket=max(
-            1, spark.sparkContext.defaultParallelism // n_buckets
-        ),
     )
     # serve-side rounded rank key (store keeps raw doubles) — see
     # q_retrieve_topk_part; the bucket partition filter still prunes

@@ -68,26 +68,25 @@ def publish_model(
     out_dir: str,
     k_sigma: float = 2.0,
     n_buckets: int = 0,
-    files_per_bucket: int = 1,
     min_dim_coverage: float = 0.0,
 ) -> dict[str, str]:
     """End-to-end: occurrences → exact similar_items + correlated_items
     parquet tables under `out_dir`. One distributed job per table — the
     reference's I-iteration loop (propius/data.py:130-149) is gone.
 
+    Steps, in order: (1) probe the dictionary's dim coverage; (2) raise
+    below ``min_dim_coverage``, before any write; (3) write the fact
+    table; (4) write the dim; (5) warn below 50% coverage. A failed
+    fact write leaves no dim.
+
     With ``n_buckets > 0`` the fact table is hive-partitioned by
     ``bucket = item_a_id % n_buckets`` — the role of the reference's
     B-tree index on (item_a_id, item_b_id) (propius/data.py:81-85):
     a point lookup that filters on the bucket touches 1/n_buckets of
     the files (partition pruning), so serving latency is independent
-    of total model size. Size n_buckets so one bucket ≈ one HDFS
-    block (~128 MB) at the target scale — then write parallelism =
-    n_buckets and the default ``files_per_bucket=1`` (one file per
-    bucket, no small-files problem) is right. When n_buckets is SMALL
-    relative to the cluster (a hot store of a few fat buckets), raise
-    ``files_per_bucket``: a hash salt spreads each bucket over that
-    many write tasks, trading file count for encode parallelism —
-    pruning is directory-level, so reads are unaffected.
+    of total model size. The write is one task and one file per
+    bucket; size n_buckets so one bucket ≈ one HDFS block (~128 MB) at
+    the target scale.
 
     ``min_dim_coverage``: loud-failure guard on a silently name-starved
     store (SCALE.md §8a finding 2: the sf1.0 replica's 64-names-per-20k
@@ -102,115 +101,51 @@ def publish_model(
     over the item-cardinality dictionary — noise next to the fact
     write.
     """
+    stats = dictionary.select(
+        F.count(F.lit(1)).alias("rows"),
+        F.count("title").alias("named"),
+        F.count_distinct("title").alias("names"),
+    ).first()
+    dim_coverage = 1.0
+    if stats["rows"]:
+        survivors = stats["names"] + (stats["rows"] - stats["named"])
+        dim_coverage = survivors / stats["rows"]
+    if dim_coverage < min_dim_coverage:
+        raise ValueError(
+            f"publish_model: dim coverage {dim_coverage:.4f} < required "
+            f"{min_dim_coverage} — the min-id-per-key dedup keeps only "
+            f"{stats['names']} of {stats['named']} named dictionary rows "
+            "(duplicate titles); name-filtered serving over this store "
+            "would drop most items' neighbors. Publish aborted before "
+            "any write."
+        )
+
     # the reference's UNIQUE(item_a_id, item_b_id) index holds here BY
     # CONSTRUCTION, no dedup shuffle needed: similar_items_exact's
     # co-occurring branch is keyed by the Gram groupBy (one row per
     # pair), its non-co-occurring branch anti-joins the Gram pairs
     # (disjoint) and emits each (cuts-item × stats-item) pair at most
     # once. Pinned by test_correlation::test_publish_unique_keys.
-    cells = build_cells(occurrences)
-    dim = correlated_items(dictionary)
+    sims = shape_similar_items(
+        similar_items_exact(build_cells(occurrences), k_sigma=k_sigma)
+    )
     sims_path = f"{out_dir}/similar_items"
     dim_path = f"{out_dir}/correlated_items"
-
-    def _probe():
-        # dim-coverage probe (docstring): one agg over the dictionary
-        stats = dictionary.select(
-            F.count(F.lit(1)).alias("rows"),
-            F.count("title").alias("named"),
-            F.count_distinct("title").alias("names"),
-        ).first()
-        dim_coverage = 1.0
-        if stats["rows"]:
-            survivors = stats["names"] + (stats["rows"] - stats["named"])
-            dim_coverage = survivors / stats["rows"]
-        return stats, dim_coverage
-
-    def _write_dim():
-        dim.write.mode("overwrite").parquet(dim_path)
-
-    # the dim side (coverage probe + dim write) shares no lineage with
-    # the fact side, so in lax mode it runs on a driver side thread and
-    # back-fills executors idled by the fact pipeline's stage barriers
-    # (guide §2.6: overlap independent jobs). Strict mode
-    # (min_dim_coverage > 0) stays fully sequential: its contract is
-    # "raise BEFORE writing anything", which forbids starting either
-    # write before the probe returns.
-    side: dict[str, object] = {}
-    if min_dim_coverage > 0:
-        stats, dim_coverage = _probe()
-        if dim_coverage < min_dim_coverage:
-            raise ValueError(
-                f"publish_model: dim coverage {dim_coverage:.4f} < required "
-                f"{min_dim_coverage} — the min-id-per-key dedup keeps only "
-                f"{stats['names']} of {stats['named']} named dictionary rows "
-                "(duplicate titles); name-filtered serving over this store "
-                "would drop most items' neighbors. Publish aborted before "
-                "any write."
-            )
-        thread = None
+    if n_buckets > 0:
+        # repartition by the partition column first: one write task per
+        # bucket, so one file per bucket (not tasks×buckets small files)
+        (
+            sims.withColumn("bucket", F.pmod(F.col("item_a_id"), F.lit(n_buckets)))
+            .repartition(n_buckets, "bucket")
+            .write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(sims_path)
+        )
     else:
-        from pyspark import InheritableThread
+        sims.write.mode("overwrite").parquet(sims_path)
+    correlated_items(dictionary).write.mode("overwrite").parquet(dim_path)
 
-        def _dim_side():
-            try:
-                side["probe"] = _probe()
-                _write_dim()
-            except BaseException as e:  # noqa: BLE001 - re-raised in main
-                side["error"] = e
-
-        thread = InheritableThread(target=_dim_side)
-        thread.start()
-
-    def _write_sims():
-        sims = shape_similar_items(similar_items_exact(cells, k_sigma=k_sigma))
-        if n_buckets > 0:
-            # repartition by the partition column first: files per bucket
-            # = write tasks per bucket (not tasks×buckets small files)
-            fpb = max(1, int(files_per_bucket))
-            bucketed = sims.withColumn(
-                "bucket", F.pmod(F.col("item_a_id"), F.lit(n_buckets))
-            )
-            if fpb > 1:
-                salt = F.pmod(F.xxhash64("item_a_id", "item_b_id"), F.lit(fpb))
-                bucketed = bucketed.repartition(n_buckets * fpb, "bucket", salt)
-            else:
-                bucketed = bucketed.repartition(n_buckets, "bucket")
-            (
-                bucketed.write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(sims_path)
-            )
-        else:
-            sims.write.mode("overwrite").parquet(sims_path)
-
-    # join the dim side even when the sims write raises (ADVICE r8):
-    # propagating with the thread still running would let the
-    # background dim write land next to a failed/stale fact table, and
-    # a side-thread error captured alongside a main-thread failure
-    # would be silently dropped — chain it as the main error's
-    # __cause__ instead so both surface in the traceback. The
-    # sequential (strict/thread-None) path never started a dim write,
-    # matching the old "no dim next to a failed fact" behavior.
-    try:
-        _write_sims()
-    except BaseException as main_err:  # noqa: BLE001 - re-raised below
-        if thread is not None:
-            thread.join()
-            if "error" in side:
-                raise main_err from side["error"]
-        raise
-    if thread is not None:
-        thread.join()
-        if "error" in side:
-            raise side["error"]
-        _, dim_coverage = side["probe"]
-    else:
-        _write_dim()
     if dim_coverage < 0.5:
-        # emitted from the MAIN thread (after the side thread joined)
-        # so warning capture in callers/tests behaves exactly as the
-        # sequential path did
         import warnings
 
         warnings.warn(
@@ -247,7 +182,7 @@ def export_jdbc(spark: SparkSession, paths: dict[str, str], url: str, **options)
             continue
         df = spark.read.parquet(path)
         if table == "similar_items":
-            # strip the internal bucket/salt layout columns: the JDBC
+            # strip the internal bucket layout column: the JDBC
             # table must match the reference's 3-column DDL exactly
             # (a bucketed store otherwise exported a 4-column table)
             df = df.select(*[f.name for f in SIMILAR_ITEMS.fields])

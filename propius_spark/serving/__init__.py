@@ -31,8 +31,8 @@ def register_model_views(
             df = spark.read.parquet(paths[table])
             if table == "similar_items":
                 # the SQL-twin view carries the reference's 3-column
-                # shape; a bucketed store's internal bucket/salt
-                # columns must not leak into `SELECT *`
+                # shape; a bucketed store's internal bucket column
+                # must not leak into `SELECT *`
                 df = df.select(*[f.name for f in SIMILAR_ITEMS.fields])
             df.createOrReplaceTempView(table)
 

@@ -10,7 +10,13 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from bench import _master_cpus, _parse_args, _rollup, _summarize  # noqa: E402
+from bench import (  # noqa: E402
+    _master_cpus,
+    _parse_args,
+    _rollup,
+    _sidecar_name,
+    _summarize,
+)
 
 
 def test_shared_aqe_stage_counts_once():
@@ -96,3 +102,14 @@ def test_malformed_arguments_exit_nonzero(argv):
 def test_master_cpus():
     assert _master_cpus("local[4]") == 4
     assert _master_cpus("local[8,3]") == 8
+
+
+def test_sidecar_is_tracked_only_for_the_full_primary_suite():
+    """Only a full-suite run at SF 0.1 writes the tracked
+    BENCH_full.json; a subset or another scale writes BENCH_local.json."""
+    assert _sidecar_name(None, 0.1) == "BENCH_full.json"
+    assert _sidecar_name([], 0.1) == "BENCH_full.json"  # `--queries ""`
+    assert _sidecar_name(["publish_retrieve"], 0.1) == "BENCH_local.json"
+    assert _sidecar_name(None, 1.0) == "BENCH_local.json"
+    assert _sidecar_name(None, 0.01) == "BENCH_local.json"
+    assert _sidecar_name(None, "custom") == "BENCH_local.json"

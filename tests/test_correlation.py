@@ -310,6 +310,83 @@ def test_candidates_stddev_matches_dense(spark):
     assert got == expect
 
 
+def test_exact_build_matches_single_item_rows(spark):
+    """Two independent exact algorithms for one item's published row
+    must agree on every item: similar_items_exact (Gram + analytic
+    rank-gap row sums) against get_similar_items (the explicit O(V)
+    row, numeric avg/stddev_samp). The seeded log has a hot context,
+    a zero-variance item (13: once in every context), an item that
+    co-occurs with every other (12: in every context, 1-3 times), a
+    rank-1 item absent only from the hot and single-item contexts
+    (15), two planted correlated pairs (7/8, 9/10) that clear the 2σ
+    cut and two single-context items (11, 14) whose row extremes are
+    non-co-occurring corrs. Every corr sits ≥1e-4 from its item's cut
+    (asserted), so set equality is exact. scaled_score is checked
+    against the dense row's extremes, which pins the rank-gap min/max
+    over non-co-occurring neighbors."""
+    from propius_spark.operators.similarity import (
+        get_similar_items,
+        similar_items_exact,
+    )
+
+    rng = np.random.RandomState(18)
+    rows = [("hot", it) for it in (1, 2, 3, 4, 5, 6)] + [("s0", 11), ("s1", 14)]
+    for ref in range(24):
+        for it in rng.choice(10, size=rng.randint(1, 4), replace=True):
+            rows.append((f"r{ref}", int(it) + 1))
+    for ref in range(8):
+        pair = (7, 8) if ref < 4 else (9, 10)
+        rows += [(f"p{ref}", pair[0]), (f"p{ref}", pair[1])]
+    refs = sorted({r for r, _ in rows})
+    busy = [r for r in refs if r not in ("hot", "s0", "s1")]
+    rows += [(r, 12) for r in refs]
+    rows += [(r, 12) for r in busy for _ in range(rng.randint(0, 3))]
+    rows += [(r, 15) for r in busy]
+    rows += [(r, 13) for r in refs]
+    cells = build_cells(
+        spark.createDataFrame(rows, "reference_id string, item_id long")
+    )
+
+    dense, items = crosstab_numpy(rows, "distinct")
+    with np.errstate(invalid="ignore", divide="ignore"):
+        corr = np.corrcoef(dense)
+    valid = [i for i in range(len(items)) if not np.isnan(corr[i]).all()]
+    assert 13 not in [items[i] for i in valid] and len(valid) == 14
+    cooc = dense @ dense.T
+    assert all(cooc[items.index(12), j] > 0 for j in valid)
+    extremes = {}
+    for i in valid:
+        cs = np.array([corr[i, j] for j in valid if j != i])
+        cut = cs.mean() + 2.0 * cs.std(ddof=1)
+        assert np.abs(cs - cut).min() > 1e-4, "fixture too close to a cut"
+        extremes[items[i]] = (cs.min(), cs.max())
+
+    # k_sigma=-10 publishes every neighbor, so every item's scaled
+    # scores pin its row extremes
+    full = similar_items_exact(cells, k_sigma=-10.0).collect()
+    assert len(full) == len(valid) * (len(valid) - 1)
+    for r in full:
+        mn, mx = extremes[r["item_a"]]
+        np.testing.assert_allclose(
+            r["scaled_score"], (r["corr"] - mn) / (mx - mn), atol=1e-9
+        )
+    exact = similar_items_exact(cells, k_sigma=2.0).collect()
+    assert exact, "fixture produced no published rows"
+    for i in valid:
+        it = items[i]
+        got = [r for r in exact if r["item_a"] == it]
+        want = {
+            (r["item_b"], round(r["corr"], 6))
+            for r in get_similar_items(cells, it, "std_dev", 2.0).collect()
+        }
+        assert {(r["item_b"], round(r["corr"], 6)) for r in got} == want, it
+        mn, mx = extremes[it]
+        for r in got:
+            np.testing.assert_allclose(
+                r["scaled_score"], (r["corr"] - mn) / (mx - mn), atol=1e-9
+            )
+
+
 def test_neighbor_stats_match_bruteforce(spark):
     """Analytic mean/std/min/max over the FULL neighbor row (incl.
     non-co-occurring pairs) must equal the brute-force dense result."""
@@ -397,11 +474,11 @@ def test_publish_unique_keys(spark, tmp_path):
     assert total == 12
 
 
-def test_publish_salted_write_equivalence(spark, tmp_path):
-    """files_per_bucket > 1 changes only the FILE LAYOUT: same rows,
-    same schema (no salt column leaks into the store), same bucket
-    directories, ≥1 file per bucket, and parallel-write salting never
-    drops or duplicates a row vs the one-file-per-bucket default."""
+def test_publish_bucketed_write_equivalence(spark, tmp_path):
+    """n_buckets > 0 changes only the FILE LAYOUT: same rows and the
+    same columns apart from `bucket` as the unbucketed store, and each
+    bucket directory holds exactly one parquet file (one write task
+    per bucket)."""
     from pathlib import Path
 
     from propius_spark.operators import publish_model
@@ -412,19 +489,43 @@ def test_publish_salted_write_equivalence(spark, tmp_path):
     dim = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c"), (4, "d")], "id long, title string"
     )
-    p1 = publish_model(occ, dim, str(tmp_path / "m1"), k_sigma=-10.0,
-                       n_buckets=2)
+    p0 = publish_model(occ, dim, str(tmp_path / "m0"), k_sigma=-10.0)
     p2 = publish_model(occ, dim, str(tmp_path / "m2"), k_sigma=-10.0,
-                       n_buckets=2, files_per_bucket=3)
-    a = spark.read.parquet(p1["similar_items"])
-    b = spark.read.parquet(p2["similar_items"])
+                       n_buckets=2)
+    a = spark.read.parquet(p0["similar_items"])
+    b = spark.read.parquet(p2["similar_items"]).drop("bucket")
     assert sorted(a.columns) == sorted(b.columns)
-    rows_a = sorted(map(tuple, a.collect()))
-    rows_b = sorted(map(tuple, b.collect()))
-    assert rows_a == rows_b
+    rows_a = sorted(map(tuple, a.select(*sorted(a.columns)).collect()))
+    rows_b = sorted(map(tuple, b.select(*sorted(a.columns)).collect()))
+    assert rows_a == rows_b and len(rows_a) == 12
     for bucket in (0, 1):
         d = Path(p2["similar_items"]) / f"bucket={bucket}"
-        assert d.is_dir() and list(d.glob("*.parquet"))
+        assert len(list(d.glob("*.parquet"))) == 1
+
+
+def test_publish_failed_fact_write_leaves_no_dim(spark, tmp_path):
+    """The store is published in one sequential path: coverage probe,
+    fact write, then dim write. A fact side that fails (here an
+    occurrence row that raises inside the job) must leave neither
+    table behind — no new dim next to a missing or stale fact."""
+    from propius_spark.operators import publish_model
+
+    occ = spark.createDataFrame(
+        FIXTURE_ROWS, "reference_id string, item_id long"
+    ).withColumn(
+        "item_id",
+        F.when(F.col("item_id") == 3, F.raise_error(F.lit("bad item"))).otherwise(
+            F.col("item_id")
+        ),
+    )
+    healthy = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c"), (4, "d")], "id long, title string"
+    )
+    out = tmp_path / "m"
+    with pytest.raises(Exception, match="bad item"):
+        publish_model(occ, healthy, str(out), k_sigma=-10.0)
+    assert not (out / "correlated_items").exists()
+    assert not (out / "similar_items").exists()
 
 
 def test_publish_dim_coverage_guard(spark, tmp_path):

@@ -57,8 +57,8 @@ def test_export_jdbc_roundtrip_matches_parquet_store(spark, tmp_path):
         assert _sorted_rows(served, cols) == _sorted_rows(stored, cols)
         assert len(_sorted_rows(served, cols)) > 0
         # the exported table carries EXACTLY the reference DDL's
-        # columns — the bucketed store's internal bucket/salt layout
-        # columns must not leak into the JDBC schema
+        # columns — the bucketed store's internal bucket layout
+        # column must not leak into the JDBC schema
         assert sorted(served.columns) == sorted(cols)
 
     # serving query parity: top-k for one item from the JDBC store
