@@ -13,13 +13,15 @@ printed line carries only the contract fields plus parallelism and the
 secondary pass's total + failed-query names, at 1-decimal precision
 (≤ ~1.9 KB at 74 queries); over budget it degrades via `_fit_tail`.
 Everything else goes to the SIDECAR file next to this script:
-3-decimal timings, per-query Spark `jobs`/`stages`/`tasks` (`profile`),
-every pass's raw per-query records (`raw`), per-pass totals, the
-secondary pass, `plans.compaction_stats`, host CPU/disk canaries and
-failures. The SIDECAR is the tracked ``BENCH_full.json`` only for a
-full-suite run (no ``--queries``) at the primary SF 0.1; every other
-run writes the untracked ``BENCH_local.json``. Per-query progress goes
-to stderr.
+3-decimal timings, each query's `profile` (jobs, tasks, `cpu_s`,
+`shuffle_mb`, `spill_mb`, `gc_s`, `driver_gap_s`, `input_records`:
+`perfbench.tracing.rollup` over the query's span, counting only the
+stages that ran inside it), every pass's raw per-query records
+(`raw`), per-pass totals, the secondary pass,
+`plans.compaction_stats`, host CPU/disk canaries and failures. The
+SIDECAR is the tracked ``BENCH_full.json`` only for a full-suite run
+(no ``--queries``) at the primary SF 0.1; every other run writes the
+untracked ``BENCH_local.json``. Per-query progress goes to stderr.
 
 Flags:
   --queries a,b,...  time only these (default: all); an unknown name
@@ -56,6 +58,9 @@ import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
+
+from perfbench.tracing import Tracer, rollup  # noqa: E402
+
 
 def _fit_tail(compact: dict, budget: int = 1900) -> str:
     """Serialize the compact summary within the driver's stdout-tail
@@ -183,35 +188,15 @@ def _master_cpus(master: str) -> int:
     return int(master[master.index("[") + 1 :].split(",")[0].rstrip("]"))
 
 
-def _rollup(
-    job_stages: dict[int, list[int] | None], stage_tasks: dict[int, int | None]
-) -> dict[str, int]:
-    """Jobs, stages and tasks one query ran. `job_stages` maps each job
-    id of the query's job group to its stage ids, `stage_tasks` maps a
-    stage id to its completed-task count; None marks a job or stage the
-    status tracker no longer holds, and 0 a stage the job listed but
-    SKIPPED (its shuffle output already existed). Both are skipped (the
-    job still counts). AQE lists a reused stage under every job that
-    reads it, so a stage id counts once (ADVICE r8: counting per (job,
-    stage) pair inflated the very counts this profile exists to
-    attribute). Pure function, unit-tested without Spark
-    (tests/test_bench_profile.py)."""
-    tasks: dict[int, int] = {}
-    for sids in job_stages.values():
-        for sid in sids or ():
-            if stage_tasks.get(sid):
-                tasks[sid] = stage_tasks[sid]
-    return {"jobs": len(job_stages), "stages": len(tasks), "tasks": sum(tasks.values())}
-
-
 def _summarize(records: list[dict]) -> dict:
     """One variant's result from its per-pass query records
-    ({"pass", "query", "sec", jobs/stages/tasks, and "error" when
-    `sec` is None}). A query's time is the min over the passes it
-    SUCCEEDED in (a query that failed one pass still reports its good
-    pass; failed-everywhere queries appear only under `failures`), and
-    its profile is that fastest pass's. `runs` is each pass's total.
-    Pure function, unit-tested without Spark."""
+    ({"variant", "pass", "query", "sec", the `_time_query` profile, and
+    "error" when `sec` is None}). A query's time is the min over the
+    passes it SUCCEEDED in (a query that failed one pass still reports
+    its good pass; failed-everywhere queries appear only under
+    `failures`), and its profile is that fastest pass's record minus
+    the bookkeeping keys. `runs` is each pass's total. Pure function,
+    unit-tested without Spark."""
     best: dict[str, dict] = {}
     runs = dict.fromkeys(sorted({r["pass"] for r in records}), 0.0)
     failures: dict[str, str] = {}
@@ -223,12 +208,13 @@ def _summarize(records: list[dict]) -> dict:
         if r["query"] not in best or r["sec"] < best[r["query"]]["sec"]:
             best[r["query"]] = r
     names = sorted(best)
+    skip = ("variant", "pass", "query", "sec", "error")
     out = {
         "value": round(sum(best[q]["sec"] for q in names), 3),
         "queries": {q: best[q]["sec"] for q in names},
         "runs": [round(t, 3) for t in runs.values()],
         "profile": {
-            q: {k: best[q][k] for k in ("jobs", "stages", "tasks")} for q in names
+            q: {k: v for k, v in best[q].items() if k not in skip} for q in names
         },
     }
     if failures:
@@ -259,43 +245,33 @@ def main(argv: list[str] | None = None) -> None:
     print(line, flush=True)
 
 
-def _time_query(spark, fn, sf_dir: str, group: str) -> dict:
-    """Run one query under its own job group and return its record:
-    wall `sec` (None plus `error` on failure) and its jobs/stages/tasks
-    read from the status tracker before its blocks are released."""
+def _time_query(spark, tracer, fn, sf_dir: str, name: str) -> dict:
+    """Run one query inside `tracer.span(name)` and return its record:
+    the span's wall `sec` (None plus `error` on failure) and its
+    perfbench rollup (jobs, tasks, CPU, shuffle, spill, GC,
+    `driver_gap_s`, input records), counting only the stages that ran
+    inside the span."""
     from propius_spark.session import clear_materialized
 
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    t0 = time.perf_counter()
+    error = None
     try:
-        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        rec: dict = {"sec": round(time.perf_counter() - t0, 3)}
+        with tracer.span(name):
+            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
     except Exception as e:  # noqa: BLE001 - record, keep measuring
         # one flaky query must not discard a whole completed pass:
         # record the failure, keep the rest of the suite
-        rec = {"sec": None, "error": f"{type(e).__name__}: {e}"[:300]}
-    # the status store is fed by the listener bus; drain it so the
-    # query's last jobs and stages are visible
-    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    tracker = sc.statusTracker()
-    job_stages = {
-        j: getattr(tracker.getJobInfo(j), "stageIds", None)
-        for j in tracker.getJobIdsForGroup(group)
-    }
-    stage_tasks = {
-        s: getattr(tracker.getStageInfo(s), "numCompletedTasks", None)
-        for sids in job_stages.values()
-        for s in sids or ()
-    }
-    rec.update(_rollup(job_stages, stage_tasks))
+        error = f"{type(e).__name__}: {e}"[:300]
+    prof = rollup([tracer.spans[-1]], tracer.jobs, tracer.stages)[name]
+    wall = prof.pop("wall_s")
+    rec: dict = {"sec": None, "error": error} if error else {"sec": round(wall, 3)}
+    rec.update((k, round(v, 3)) for k, v in prof.items())
     # release materialized intermediates so one pipeline's blocks don't
     # skew the next query's timing, and nudge the JVM to collect them
     # now — long multi-query sessions otherwise hit multi-second GC
     # pauses inside later queries (measured 3-4× inflation on queries
     # that run in ~3 s isolated)
     clear_materialized(spark)
-    sc._jvm.System.gc()
+    spark.sparkContext._jvm.System.gc()
     return rec
 
 
@@ -345,6 +321,7 @@ def _run(spark, qs: dict, sf_dir: str, args: argparse.Namespace) -> str:
     except Exception:
         pass
 
+    tracer = Tracer(spark)
     records: list[dict] = []
 
     def run_suite(d: str, pass_no: int, variant: str, confs: dict[str, str]) -> None:
@@ -353,7 +330,7 @@ def _run(spark, qs: dict, sf_dir: str, args: argparse.Namespace) -> str:
             for k, v in confs.items():
                 spark.conf.set(k, v)
             for name, fn in qs.items():
-                rec = _time_query(spark, fn, d, f"bench-{len(records)}-{name}")
+                rec = _time_query(spark, tracer, fn, d, name)
                 records.append(
                     {"variant": variant, "pass": pass_no, "query": name, **rec}
                 )

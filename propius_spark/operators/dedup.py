@@ -45,7 +45,7 @@ from pyspark.sql.window import Window
 
 from ..functions.text import tokens
 from ..plans import fan_out as _fan_out
-from ..plans import materialize, persist_big
+from ..plans import bounded_rank, materialize, persist_big
 
 # h_i(x) = (A[i]·x + B[i]) mod P — fixed public parameters so engine
 # and oracle agree. P = 2³¹ − 1 (Mersenne prime); products stay < 2⁶³.
@@ -162,31 +162,36 @@ def shingles(
     return out.distinct() if unique else out
 
 
-def shingle_ids(sh: DataFrame, id_mode: str = "xxhash") -> DataFrame:
-    """(doc_id, sid long). 'dict': dense_rank over the distinct
-    shingle strings (oracle-comparable; global sort over the shingle
-    *dictionary*, which is ≪ corpus — `bounded_rank`-guarded, since
-    the lexicographic rank the oracle replays cannot be partitioned
-    without changing the ids). 'xxhash': stateless 64-bit hash
-    (production scale path, no sort, no dictionary)."""
+def _coded(df: DataFrame, col: str, id_col: str, id_mode: str, caller: str) -> DataFrame:
+    """``df`` with string column ``col`` replaced by the long id
+    ``id_col``. 'xxhash': stateless 64-bit hash reduced into [0, P) so
+    minhash's a·id + b stays < 2⁶³ under ANSI overflow checking
+    (collision rate ~2⁻³¹, standard for minhash shingle ids; the
+    production scale path: no sort, no dictionary). 'dict': dense_rank
+    over the distinct values (oracle-comparable; a global sort over the
+    *dictionary*, which is ≪ corpus, `bounded_rank`-guarded under
+    ``caller``'s name, since the lexicographic rank the oracle replays
+    cannot be partitioned without changing the ids). Any other mode
+    raises: a typo must not silently run the single-task sort."""
+    rest = [c for c in df.columns if c != col]
     if id_mode == "xxhash":
-        # reduce into [0, P) so minhash's a·sid + b stays < 2⁶³ under
-        # ANSI overflow checking (collision rate ~2⁻³¹, standard for
-        # minhash shingle ids)
-        return sh.select(
-            "doc_id", F.pmod(F.xxhash64("shingle"), F.lit(MINHASH_PRIME)).alias("sid")
-        )
-    from ..plans import bounded_rank
-
-    dict_df = sh.select("shingle").distinct().select(
-        "shingle",
+        return df.select(*rest, F.pmod(F.xxhash64(col), F.lit(MINHASH_PRIME)).alias(id_col))
+    if id_mode != "dict":
+        raise ValueError(f"{caller}: id_mode must be 'xxhash' or 'dict', got {id_mode!r}")
+    dict_df = df.select(col).distinct().select(
+        col,
         bounded_rank(
-            F.dense_rank().over(Window.orderBy("shingle")).cast("long"),
+            F.dense_rank().over(Window.orderBy(col)).cast("long"),
             DICT_RANK_MAX,
-            "shingle_ids(id_mode='dict')",
-        ).alias("sid"),
+            f"{caller}(id_mode='dict')",
+        ).alias(id_col),
     )
-    return sh.join(dict_df, "shingle").select("doc_id", "sid")
+    return df.join(dict_df, col).select(*rest, id_col)
+
+
+def shingle_ids(sh: DataFrame, id_mode: str = "xxhash") -> DataFrame:
+    """(doc_id, sid long), coded by ``_coded`` ('xxhash' or 'dict')."""
+    return _coded(sh, "shingle", "sid", id_mode, "shingle_ids")
 
 
 def jaccard_pairs(
@@ -635,22 +640,7 @@ def simhash(
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    if id_mode == "xxhash":
-        coded = toks.select(
-            "doc_id", "cnt", (F.pmod(F.xxhash64("tok"), F.lit(MINHASH_PRIME))).alias("tid")
-        )
-    else:
-        from ..plans import bounded_rank
-
-        d = toks.select("tok").distinct().select(
-            "tok",
-            bounded_rank(
-                F.dense_rank().over(Window.orderBy("tok")).cast("long"),
-                DICT_RANK_MAX,
-                "simhash(id_mode='dict')",
-            ).alias("tid"),
-        )
-        coded = toks.join(d, "tok").select("doc_id", "cnt", "tid")
+    coded = _coded(toks, "tok", "tid", id_mode, "simhash")
     # TWO hash lanes, 16 live bits each: a single (a·tid+b) mod 2³¹−1
     # value is always < 2³¹, so its bit 31 is structurally 0 and a
     # 32-lane extraction from one value would leave the top lane dead

@@ -30,12 +30,19 @@ contract deviation, not a bug.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..plans import materialize
 from .correlation import _corr_gram, _corr_inputs, _row_stats, corr_pairs
+
+
+def _clears(corr: Column | str = "corr") -> Column:
+    """The boundary membership test of the module docstring: the
+    6-dp-ROUNDED corr against the 6-dp-ROUNDED ``cut`` column, as the
+    oracle twins round."""
+    return F.round(corr, 6) >= F.round("cut", 6)
 
 
 def get_similar_items(
@@ -119,12 +126,9 @@ def get_similar_items(
         th = row.agg(
             (F.avg("corr") + F.lit(threshold_value) * F.stddev_samp("corr")).alias("cut")
         )
-        # boundary membership compares 6-dp-ROUNDED corr against the
-        # 6-dp-ROUNDED cut (module docstring; the oracle twin rounds
-        # identically)
         out = (
             row.crossJoin(F.broadcast(th))
-            .filter(F.round(F.col("corr"), 6) >= F.round(F.col("cut"), 6))
+            .filter(_clears())
             .drop("cut")
         )
     else:  # absolute threshold (any non-"std_dev" method, per the reference)
@@ -184,7 +188,7 @@ def similar_items_candidates(
         ).over(w)
         return (
             pairs.withColumn("cut", cut)
-            .filter(F.round(F.col("corr"), 6) >= F.round(F.col("cut"), 6))
+            .filter(_clears())
             .select("item_a", "item_b", "corr")
         )
     return pairs.filter(F.col("corr") >= F.lit(threshold_value)).select(
@@ -236,12 +240,9 @@ def similar_items_exact(
         )
     )
 
-    # boundary membership compares 6-dp-ROUNDED corr against the
-    # 6-dp-ROUNDED cut (module docstring; the similar_exact_parts /
-    # publish_retrieve oracle twins round identically)
     cooc = (
         cg.join(F.broadcast(cuts), "item_a")
-        .filter(F.round(F.col("corr"), 6) >= F.round(F.col("cut"), 6))
+        .filter(_clears())
         .select("item_a", "item_b", "corr", "mn", "mx")
     )
 
@@ -264,10 +265,7 @@ def similar_items_exact(
         )
         # exact membership on the rounded form, matching the cooc
         # branch's test and the oracle bit-for-bit
-        .filter(
-            F.round(-F.col("t_a_full") * F.col("t_b"), 6)
-            >= F.round(F.col("cut"), 6)
-        )
+        .filter(_clears(-F.col("t_a_full") * F.col("t_b")))
         .filter(F.col("item_a") != F.col("item_b"))
         .join(neg_g, ["item_a", "item_b"], "left_anti")
         .select(

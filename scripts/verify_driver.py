@@ -6,11 +6,15 @@ oracle_sql() twin via DuckDB. Round 1 lost 7 queries to exactly this
 difference, so this script is the regression net: run it before every
 round commit.
 
-Usage: python scripts/verify_driver.py [query ...]   (default: all)
+Usage: python scripts/verify_driver.py [--json OUT] [query ...]
+(default: all queries). ``--json OUT`` also writes a machine-readable
+per-query record. A missing OUT, an OUT that is a query name, or an
+unknown query name exits 2 before Spark starts.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import traceback
@@ -46,6 +50,22 @@ from gate_compare import compare  # noqa: E402  (one shared definition)
 
 
 def main() -> int:
+    import __spark_entry__ as entrymod
+
+    qs = entrymod.queries()
+    parser = argparse.ArgumentParser(description="Full-suite oracle gate.")
+    # --json OUT: the full-suite oracle pass kept per round
+    # (FULLGATE_r{N}.json), so queries rotated past the driver's 50-row
+    # gate window still carry round-stamped correctness evidence
+    parser.add_argument("--json", metavar="OUT", help="write per-query records here")
+    parser.add_argument("queries", nargs="*", metavar="query", help="default: all")
+    args = parser.parse_intermixed_args()
+    if args.json in qs:  # forgot the path; don't eat a query
+        parser.error(f"--json needs an output path, got query name {args.json!r}")
+    unknown = sorted(set(args.queries) - set(qs))
+    if unknown:
+        parser.error(f"unknown queries {unknown}")
+
     from pyspark.sql import SparkSession
 
     # deliberately vanilla: the ONLY confs the driver is known to set
@@ -58,40 +78,14 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    import __spark_entry__ as entrymod
-
     con = duckdb.connect()
     for t in TABLES:
         p = f"{SF_DIR}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    args = sys.argv[1:]
-    # --json <path>: write a machine-readable per-query record — the
-    # full-suite oracle pass kept per round (FULLGATE_r{N}.json) so
-    # queries rotated past the driver's 50-row gate window still carry
-    # round-stamped correctness evidence (ADVICE r6)
-    json_path = None
-    if "--json" in args:
-        i = args.index("--json")
-        # a trailing --json (no path) must error loudly, not IndexError;
-        # a following flag-looking token means the path was forgotten
-        # and would silently consume a query name as the output file
-        if (
-            i + 1 >= len(args)
-            or args[i + 1].startswith("-")
-            or args[i + 1] in qs  # forgot the path; don't eat a query
-        ):
-            print(
-                "usage: verify_driver.py [--json OUT.json] [query ...]",
-                file=sys.stderr,
-            )
-            return 2
-        json_path = args[i + 1]
-        args = args[:i] + args[i + 2 :]
-    names = args or list(qs.keys())
+    names = args.queries or list(qs.keys())
     n_fail = 0
     record: dict[str, dict] = {}
     for name in names:
@@ -126,10 +120,10 @@ def main() -> int:
                 "detail": traceback.format_exc()[-600:],
             }
     print(f"\n{len(names) - n_fail}/{len(names)} green")
-    if json_path:
+    if args.json:
         import json
 
-        Path(json_path).write_text(
+        Path(args.json).write_text(
             json.dumps(
                 {
                     "sf_dir": SF_DIR,

@@ -1,5 +1,7 @@
-"""bench.py's per-query profile rollup, result summary and argument
-parsing, unit-tested without Spark like tests/test_bench_tail.py."""
+"""bench.py's per-query profile, result summary and argument parsing.
+The profile is perfbench's rollup, whose stage-counting cases are
+pinned here without Spark like tests/test_bench_tail.py; one test runs
+`_time_query` against the session fixture."""
 
 from __future__ import annotations
 
@@ -13,37 +15,59 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from bench import (  # noqa: E402
     _master_cpus,
     _parse_args,
-    _rollup,
     _sidecar_name,
     _summarize,
+    _time_query,
 )
+from perfbench.tracing import Tracer, rollup  # noqa: E402
+
+SPAN = {"name": "q", "group": "g", "start_ms": 0.0, "end_ms": 1000.0}
+
+
+def _stage(tasks, submit_ms=100.0):
+    return {
+        "submit_ms": submit_ms, "complete_ms": 900.0, "tasks": tasks,
+        "run_ms": 0, "cpu_ns": 0, "shuffle_write_bytes": 0,
+        "spill_bytes": 0, "gc_ms": 0, "input_records": 0,
+    }
+
+
+def _jobs_tasks(job_stages, stages):
+    jobs = [{"group": "g", "job_id": j, "stage_ids": s} for j, s in job_stages.items()]
+    got = rollup([SPAN], jobs, stages)["q"]
+    return got["jobs"], got["tasks"]
 
 
 def test_shared_aqe_stage_counts_once():
     """AQE lists a reused stage under every job that reads it; counted
     per (job, stage) pair, stage 2 would add 5 tasks twice."""
-    got = _rollup({10: [1, 2], 11: [2, 3]}, {1: 4, 2: 5, 3: 6})
-    assert got == {"jobs": 2, "stages": 3, "tasks": 15}
+    stages = {1: _stage(4), 2: _stage(5), 3: _stage(6)}
+    assert _jobs_tasks({10: [1, 2], 11: [2, 3]}, stages) == (2, 15)
 
 
 def test_missing_job_or_stage_info_is_skipped():
-    """A job or stage the status tracker no longer holds adds no stages
-    or tasks; the job id itself still counts."""
-    got = _rollup({10: [1, 2], 11: None}, {1: 4, 2: None})
-    assert got == {"jobs": 2, "stages": 1, "tasks": 4}
-    assert _rollup({}, {}) == {"jobs": 0, "stages": 0, "tasks": 0}
+    """A stage the status store no longer holds adds no tasks; the job
+    that lists it still counts."""
+    assert _jobs_tasks({10: [1, 2], 11: [3]}, {1: _stage(4)}) == (2, 4)
+    assert _jobs_tasks({}, {}) == (0, 0)
 
 
 def test_skipped_stage_adds_nothing():
     """A job lists the stages it skipped (their shuffle output already
-    existed); a listed stage with 0 completed tasks never ran, so it
-    adds neither a stage nor tasks."""
-    got = _rollup({10: [1, 2], 11: [1, 3]}, {1: 0, 2: 4, 3: 6})
-    assert got == {"jobs": 2, "stages": 2, "tasks": 10}
+    existed): one never submitted, or submitted before the span, did
+    not run inside it and adds no tasks."""
+    stages = {1: _stage(3, submit_ms=None), 2: _stage(4), 3: _stage(6), 4: _stage(7, -5.0)}
+    assert _jobs_tasks({10: [1, 2], 11: [1, 3, 4]}, stages) == (2, 10)
+
+
+PROFILE = {
+    "jobs": 1, "tasks": 3, "cpu_s": 0.5, "shuffle_mb": 1.25, "spill_mb": 0.0,
+    "gc_s": 0.01, "driver_gap_s": 0.2, "input_records": 40,
+}
 
 
 def _rec(p, q, sec, jobs=1):
-    r = {"pass": p, "query": q, "sec": sec, "jobs": jobs, "stages": 2, "tasks": 3}
+    r = {"variant": "base", "pass": p, "query": q, "sec": sec, **PROFILE, "jobs": jobs}
     if sec is None:
         r["error"] = "Boom: x"
     return r
@@ -61,8 +85,30 @@ def test_min_over_successful_passes_with_fastest_profile():
     assert got["queries"] == {"a": 1.5, "b": 3.0}
     assert got["value"] == 4.5
     assert got["runs"] == [2.0, 4.5]
-    assert got["profile"]["a"] == {"jobs": 6, "stages": 2, "tasks": 3}
+    assert got["profile"]["a"] == {**PROFILE, "jobs": 6}
     assert got["failures"] == {"b": "Boom: x", "c": "Boom: x"}
+
+
+def test_time_query_profiles_through_the_tracer(spark):
+    """A query's record is its span's wall time plus the perfbench
+    rollup; a failed query keeps its error and the jobs it ran, and no
+    job group outlives the query."""
+    from pyspark.sql import functions as F  # noqa: N812
+
+    tracer = Tracer(spark)
+    ok = _time_query(spark, tracer, lambda s, _: s.range(1000).repartition(2), "", "ok")
+    assert ok["sec"] > 0 and "error" not in ok
+    assert ok["jobs"] >= 1 and ok["tasks"] >= 2
+    assert ok["shuffle_mb"] > 0 and ok["driver_gap_s"] >= 0
+
+    def boom(s, _):
+        return s.range(10).select(F.raise_error(F.lit("boom")))
+
+    bad = _time_query(spark, tracer, boom, "", "bad")
+    assert bad["sec"] is None
+    assert "Exception: " in bad["error"] and "boom" in bad["error"]
+    assert bad["jobs"] >= 1
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
 
 
 def test_no_arguments_is_the_full_two_pass_base_run():

@@ -463,3 +463,28 @@ def test_dict_rank_guard_raises_past_bound(spark, monkeypatch):
         simhash(docs, id_mode="dict").collect()
     # xxhash mode has no dictionary and never consults the bound
     assert shingle_ids(shingles(docs, k=3), id_mode="xxhash").count() > 0
+
+
+def test_unknown_id_mode_raises_at_build_time(spark):
+    """Only 'xxhash' and 'dict' code ids: a typo'd mode must raise
+    before any action rather than silently run dict mode's single-task
+    sort with different ids."""
+    import pytest
+
+    from propius_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        shingle_ids,
+        shingles,
+        simhash,
+        simhash_pairs,
+    )
+
+    docs = spark.createDataFrame([(1, "alpha beta gamma delta")], "doc_id long, text string")
+    for build in (
+        lambda: shingle_ids(shingles(docs, k=3), id_mode="xxHash"),
+        lambda: simhash(docs, id_mode="xxHash"),
+        lambda: minhash_lsh_pairs(docs, id_mode="xxHash"),
+        lambda: simhash_pairs(docs, id_mode="xxHash"),
+    ):
+        with pytest.raises(ValueError, match="id_mode must be 'xxhash' or 'dict'"):
+            build()
