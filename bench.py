@@ -16,7 +16,8 @@ Everything else goes to the SIDECAR file next to this script:
 3-decimal timings, each query's `profile` (jobs, tasks, `cpu_s`,
 `shuffle_mb`, `spill_mb`, `gc_s`, `driver_gap_s`, `input_records`:
 `perfbench.tracing.rollup` over the query's span, counting only the
-stages that ran inside it), every pass's raw per-query records
+stages that ran inside it; plus `compiles`, the generated classes
+Spark compiled during the span), every pass's raw per-query records
 (`raw`), per-pass totals, the secondary pass,
 `plans.compaction_stats`, host CPU/disk canaries and failures. The
 SIDECAR is the tracked ``BENCH_full.json`` only for a full-suite run
@@ -60,6 +61,29 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from perfbench.tracing import Tracer, rollup  # noqa: E402
+
+
+class _Tracer(Tracer):
+    """perfbench's Tracer, plus stages the status store has dropped.
+    Past `spark.ui.retainedStages` (1000) the store evicts skipped
+    stages first, so a job of the span just ended can list a stage it
+    no longer holds. `Tracer._stage` raises on it, and since `_collect`
+    then never moves past that job, so does every later span: a full
+    suite run lost 64 of its 74 second-pass queries and the whole
+    secondary pass. A dropped stage is kept as never submitted, which
+    `rollup` counts as not run."""
+
+    def _stage(self, sid: int) -> dict:
+        from py4j.protocol import Py4JJavaError
+
+        try:
+            return super()._stage(sid)
+        except Py4JJavaError as e:
+            if "NoSuchElementException" not in str(e.java_exception):
+                raise
+            return {"submit_ms": None, "complete_ms": None, "tasks": 0, "run_ms": 0,
+                    "cpu_ns": 0, "shuffle_write_bytes": 0, "spill_bytes": 0,
+                    "gc_ms": 0, "input_records": 0}
 
 
 def _fit_tail(compact: dict, budget: int = 1900) -> str:
@@ -250,9 +274,13 @@ def _time_query(spark, tracer, fn, sf_dir: str, name: str) -> dict:
     the span's wall `sec` (None plus `error` on failure) and its
     perfbench rollup (jobs, tasks, CPU, shuffle, spill, GC,
     `driver_gap_s`, input records), counting only the stages that ran
-    inside the span."""
+    inside the span, plus `compiles`: the generated classes Spark
+    compiled during the span (its codegen cache missed), driver and
+    executors alike in this single-JVM session."""
     from propius_spark.session import clear_materialized
 
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    compiled = compiles().getCount()
     error = None
     try:
         with tracer.span(name):
@@ -265,6 +293,7 @@ def _time_query(spark, tracer, fn, sf_dir: str, name: str) -> dict:
     wall = prof.pop("wall_s")
     rec: dict = {"sec": None, "error": error} if error else {"sec": round(wall, 3)}
     rec.update((k, round(v, 3)) for k, v in prof.items())
+    rec["compiles"] = compiles().getCount() - compiled
     # release materialized intermediates so one pipeline's blocks don't
     # skew the next query's timing, and nudge the JVM to collect them
     # now — long multi-query sessions otherwise hit multi-second GC
@@ -321,7 +350,7 @@ def _run(spark, qs: dict, sf_dir: str, args: argparse.Namespace) -> str:
     except Exception:
         pass
 
-    tracer = Tracer(spark)
+    tracer = _Tracer(spark)
     records: list[dict] = []
 
     def run_suite(d: str, pass_no: int, variant: str, confs: dict[str, str]) -> None:

@@ -5,6 +5,14 @@ Local-mode defaults mirror what we'd set on a real cluster: AQE on
 operators/correlation.py), shuffle partitions sized to cores instead of
 the 200 default, Arrow on for the few pandas-UDF paths, UTC session TZ
 so timestamps hash identically against the DuckDB oracle.
+
+The generated-code cache (`spark.sql.codegen.cache.maxEntries`) is
+sized above one exact build's working set, so a repeated build reuses
+its compiled classes instead of recompiling them (measured numbers at
+the conf line). The cache belongs to the JVM, not to a session, so it
+is a static conf: the size takes effect only when `get_spark` creates
+the JVM's first session, and a running session keeps the cache it
+started with.
 """
 
 from __future__ import annotations
@@ -78,6 +86,11 @@ def driver_memory() -> str:
 
 
 def get_spark(app_name: str = "propius_spark", cpus: int | None = None) -> SparkSession:
+    """The engine's local session (see the module docstring). Static
+    confs (the codegen cache size, the driver heap) apply only when
+    this call creates the JVM's first session; otherwise getOrCreate
+    returns the running session with the static confs it started
+    with."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     # partitions default to cores (right for the gate/bench SFs), but
@@ -107,6 +120,17 @@ def get_spark(app_name: str = "propius_spark", cpus: int | None = None) -> Spark
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
+        # no `[Stage N:>…]` carriage-return lines on stderr, where they
+        # glue themselves onto bench.py's per-query records
+        .config("spark.ui.showConsoleProgress", "false")
+        # one exact build generates ~110 distinct classes against the
+        # 100-entry default; it walks them in the same order every
+        # time, so the LRU cache missed cyclically and every warm
+        # publish_model recompiled 80 classes (~0.7 s of compile time
+        # plus interpreted runs until the JIT warmed up again). At 2000
+        # a repeat build compiles 0 classes
+        # (tests/test_plans.py::test_repeat_exact_build_compiles_no_code)
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .getOrCreate()
     )
     # PROPIUS_CHECKPOINT_DIR flips plans.materialize into durable

@@ -6,6 +6,7 @@ pinned here without Spark like tests/test_bench_tail.py; one test runs
 from __future__ import annotations
 
 import sys
+import time
 from pathlib import Path
 
 import pytest
@@ -18,6 +19,7 @@ from bench import (  # noqa: E402
     _sidecar_name,
     _summarize,
     _time_query,
+    _Tracer,
 )
 from perfbench.tracing import Tracer, rollup  # noqa: E402
 
@@ -62,7 +64,7 @@ def test_skipped_stage_adds_nothing():
 
 PROFILE = {
     "jobs": 1, "tasks": 3, "cpu_s": 0.5, "shuffle_mb": 1.25, "spill_mb": 0.0,
-    "gc_s": 0.01, "driver_gap_s": 0.2, "input_records": 40,
+    "gc_s": 0.01, "driver_gap_s": 0.2, "input_records": 40, "compiles": 2,
 }
 
 
@@ -91,8 +93,8 @@ def test_min_over_successful_passes_with_fastest_profile():
 
 def test_time_query_profiles_through_the_tracer(spark):
     """A query's record is its span's wall time plus the perfbench
-    rollup; a failed query keeps its error and the jobs it ran, and no
-    job group outlives the query."""
+    rollup and its codegen compile count; a failed query keeps its
+    error and the jobs it ran, and no job group outlives the query."""
     from pyspark.sql import functions as F  # noqa: N812
 
     tracer = Tracer(spark)
@@ -100,6 +102,16 @@ def test_time_query_profiles_through_the_tracer(spark):
     assert ok["sec"] > 0 and "error" not in ok
     assert ok["jobs"] >= 1 and ok["tasks"] >= 2
     assert ok["shuffle_mb"] > 0 and ok["driver_gap_s"] >= 0
+
+    # a fresh literal is new generated code; the same query again hits
+    # the codegen cache
+    fresh = time.time_ns()
+
+    def literal(s, _):
+        return s.range(1000).select((F.col("id") + F.lit(fresh)).alias("v")).repartition(2)
+
+    assert _time_query(spark, tracer, literal, "", "fresh")["compiles"] > 0
+    assert _time_query(spark, tracer, literal, "", "again")["compiles"] == 0
 
     def boom(s, _):
         return s.range(10).select(F.raise_error(F.lit("boom")))
@@ -109,6 +121,17 @@ def test_time_query_profiles_through_the_tracer(spark):
     assert "Exception: " in bad["error"] and "boom" in bad["error"]
     assert bad["jobs"] >= 1
     assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+
+
+def test_stage_the_store_dropped_counts_as_not_run(spark):
+    """Past `spark.ui.retainedStages` the status store evicts skipped
+    stages that a recent job still lists. perfbench's Tracer raises on
+    such a stage; bench's keeps it as never submitted."""
+    dropped = 2**31 - 1
+    with pytest.raises(Exception, match="NoSuchElementException"):
+        Tracer(spark)._stage(dropped)
+    stage = _Tracer(spark)._stage(dropped)
+    assert stage["submit_ms"] is None and stage["tasks"] == 0
 
 
 def test_no_arguments_is_the_full_two_pass_base_run():

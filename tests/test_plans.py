@@ -454,6 +454,27 @@ def test_similar_exact_correlates_each_pair_once(spark, sf_dir, monkeypatch):
     assert "BroadcastHashJoin [item_b" not in final
 
 
+def test_repeat_exact_build_compiles_no_code(spark, tmp_path):
+    """A repeat exact build reuses every generated class. One bucketed
+    publish_model generates about 110 classes, more than Spark's
+    100-entry default codegen cache holds, and walks them in the same
+    order each time, so under the default the LRU cache misses
+    cyclically and the second build recompiles most of them; get_spark
+    sizes the cache above that working set. (similar_items_exact alone
+    generates ~85 classes, which the default cache already holds.)"""
+    import random
+
+    rng = random.Random(1)
+    rows = [(f"r{rng.randrange(300)}", int(rng.paretovariate(1.05)) % 60) for _ in range(3000)]
+    occ = spark.createDataFrame(rows, "reference_id string, item_id long")
+    dim = spark.createDataFrame([(i, f"t{i}") for i in range(60)], "id long, title string")
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    publish_model(occ, dim, str(tmp_path / "m0"), n_buckets=4)
+    before = compiles().getCount()
+    publish_model(occ, dim, str(tmp_path / "m1"), n_buckets=4)
+    assert compiles().getCount() - before == 0
+
+
 @pytest.mark.parametrize("mode", ["candidates", "exact"])
 def test_bucketed_dup_pairs_plan_shape(spark, sf_dir, mode):
     """Embedding near-dup (round-3 sub-split form): ONE Arrow kernel
