@@ -33,15 +33,14 @@ Scale design notes (the parts that survive a 1000-executor / 100 TB run):
 - Pairs that share no context still have nonzero correlation
   corr_ij = −s_i·s_j/(den_i·den_j) = −t_i·t_j with t = s/den. Because
   that term is *separable*, per-item statistics over ALL V−1 neighbors
-  (mean, std — and min/max via a rank-gap trick whose free ranks are set
-  differences over each item's taken-rank list, with no sort) are
-  computable from one partial-aggregated per-item pass plus two global
-  scalars T = Σt_j, U = Σt_j²: no I² materialization. See
-  `neighbor_stats`.
+  (mean, std from sums of the co-occurring corr and t; max from the
+  bottom rank's t; min from a sort-free rank-gap trick) come from one
+  partial-aggregated per-item pass plus two global scalars T = Σt_j,
+  U = Σt_j²: no I² materialization. See `neighbor_stats`.
 - One item table, one correlated pair table: `valid_item_stats` carries
-  the rank the rank-gap trick reads, and `similar_items_exact` builds and
-  materializes the correlated Gram (`_corr_gram`) once for all its
-  pair-side consumers, so each pair's corr is computed once.
+  the rank the per-item pass reads, and `similar_items_exact` builds and
+  materializes the correlated Gram (`_corr_gram`, the only pair-side
+  Pearson formula) once for all its consumers.
 - All post-aggregate arithmetic is done in double (cast once) so the
   engine and the DuckDB oracle evaluate bit-identical IEEE expressions,
   and so 100 TB-scale values cannot silently wrap 64-bit ints.
@@ -97,7 +96,7 @@ def valid_item_stats(cells: DataFrame) -> DataFrame:
 
     (item_id, s, q, n, den2, den, t, rnk) with den2 = n·q − s²,
     den = √den2, t = s/den, rnk = row_number by (t desc, item_id asc)
-    (`neighbor_stats`' rank-gap trick). Items with den2 ≤ 0 are the
+    (`neighbor_stats`' row extremes). Items with den2 ≤ 0 are the
     reference's NaN rows — excluded here once (see module docstring).
     The scalar n is attached by a broadcast cross join (1 row), keeping
     the whole plan lazy.
@@ -166,14 +165,14 @@ def gram(cells: DataFrame, stats: DataFrame, max_context_degree: int | None = No
 
 def _corr_gram(stats: DataFrame, g: DataFrame) -> DataFrame:
     """The Gram pairs with their correlation — (item_a, item_b, dot, n,
-    s_a, den_a, t_a, s_b, den_b, t_b, rnk_b, corr) — through two
-    broadcast stats joins (item dimension ≪ pair table). Every stats
-    row carries the context count n, so n rides the a side.
-    `similar_items_exact` materializes it once for all its consumers."""
+    s_a, den_a, s_b, den_b, t_b, rnk_b, corr) — through two broadcast
+    stats joins (item dimension ≪ pair table). Every stats row carries
+    the context count n, so n rides the a side. `similar_items_exact`
+    materializes its (item_a, item_b, rnk_b, t_b, corr) once."""
     a = stats.select(
         F.col("item_id").alias("item_a"),
         "n",
-        *[F.col(c).alias(f"{c}_a") for c in ("s", "den", "t")],
+        *[F.col(c).alias(f"{c}_a") for c in ("s", "den")],
     )
     b = stats.select(
         F.col("item_id").alias("item_b"),
@@ -243,45 +242,47 @@ def neighbor_stats(
     skipped), and mn/mx are the row extremes backing min-max scaling
     (propius/data.py:135-138).
 
-    Derivation (module docstring notation; t = s/den):
-      corr_ij = (n·d_ij − s_i·s_j)/(den_i·den_j); d_ij = 0 when no shared ctx
-      Σ_j corr_ij  = (n·G1_i − s_i·(T − t_i)) / den_i          (G1 = Σ_cooc d/den_b)
-      Σ_j corr_ij² = (n²·G2_i − 2n·s_i·G3_i + s_i²·(U − t_i²)) / den_i²
-                     (G2 = Σ_cooc d²/den_b², G3 = Σ_cooc d·t_b/den_b)
-      min/max: combine cooc extremes with −t_i·t_nc, where t_nc is the
-      max/min t over the item's non-cooc set (all non-cooc corrs are
-      −t_i·t_j, and t > 0).
+    Derivation (module docstring notation; t = s/den, T = Σt, U = Σt²
+    over all valid items): corr_ij = n·d_ij/(den_i·den_j) − t_i·t_j with
+    d_ij = 0 for a non-co-occurring pair, so each moment is a
+    co-occurring sum plus a separable remainder:
+      Σ_j corr_ij  = Σ_cooc corr − t_i·(T − t_i − Σ_cooc t_b)
+      Σ_j corr_ij² = Σ_cooc corr² + t_i²·(U − t_i² − Σ_cooc t_b²)
+    and Pearson itself is written only in `_corr_gram`.
 
-    Rank-gap trick for t_nc (no I² blowup): all V valid items are
-    ranked by (t desc, id asc) — the stats table's `rnk`; the max
-    non-cooc t is the t at the smallest rank not taken by a co-occurring
-    partner or the item itself, the min non-cooc t the t at the largest
-    such rank.
+    Row max: counts are positive, so a co-occurring corr_ij (d_ij > 0)
+    is strictly above −t_i·t_j. With t_lo the smallest t over the valid
+    items other than i, either that item co-occurs with i and cmax_i
+    beats every non-co-occurring corr (all ≤ −t_i·t_lo), or −t_i·t_lo
+    is one of them; so mx_i = max(cmax_i, −t_i·t_lo). Items are ranked
+    by (t desc, id asc) — the stats table's `rnk` — so t_lo is the t at
+    rank V, or at rank V−1 for the rank-V item itself.
+
+    Row min: that argument does not mirror, so mn_i = min(cmin_i,
+    −t_i·t_hi) with t_hi the t at the smallest rank not taken by a
+    co-occurring partner or i itself. An item's `size` taken ranks are
+    distinct, so [1, size+1] holds a free rank unless size = V; then
+    rank V+1 maps to no t and mn is cmin alone, as it must be.
 
     One per-item pass over the correlated Gram, no sort: the taken set
-    is the Gram rows (carrying dot, den_b, t_b and corr) plus one self
-    row per item with null metrics, and ONE groupBy(item_a) —
-    partial-aggregated before its single exchange — yields the sums,
-    the cooc extremes and the list of taken ranks; null-skipping sums
-    and count(dot) keep the self rows out of the neighbor aggregates. An
-    item's `size` taken ranks are distinct, so [1, size+1] and
-    [V−size, V] each hold a free rank unless size = V: the smallest and
-    largest free ranks are set differences over those windows. When the
-    item co-occurs with every other valid item both differences are
-    empty (rank V+1 maps to no t) and the extremes come out null, as
-    they must.
+    is the Gram rows (rnk_b, t_b, corr) plus one self row per item with
+    null metrics, and ONE groupBy(item_a) — partial-aggregated before
+    its single exchange — yields the sums, the cooc extremes and the
+    taken ranks; null-skipping sums and count(corr) keep the self rows
+    out of the neighbor aggregates.
     """
     _, stats, g = _corr_inputs(cells, max_context_degree, stats, g)
     return _row_stats(stats, _corr_gram(stats, g))
 
 
 def _row_stats(stats: DataFrame, cg: DataFrame) -> DataFrame:
-    """`neighbor_stats`' per-item pass over a correlated Gram `cg`."""
+    """`neighbor_stats`' per-item pass over a correlated Gram `cg`; it
+    reads only cg's item_a, rnk_b, t_b and corr."""
     sc_row = _global_scalars(stats)
     v = F.lit(int(sc_row["v"]))
     big_t, big_u = F.lit(sc_row["big_t"]), F.lit(sc_row["big_u"])
 
-    metrics = ("dot", "den_b", "t_b", "corr")
+    metrics = ("t_b", "corr")
     taken = (
         cg.select("item_a", "rnk_b", *metrics)
         .unionByName(
@@ -292,43 +293,38 @@ def _row_stats(stats: DataFrame, cg: DataFrame) -> DataFrame:
             )
         )
     )
-    dot, den_b = F.col("dot"), F.col("den_b")
+    corr, t_b = F.col("corr"), F.col("t_b")
     per = taken.groupBy("item_a").agg(
-        F.count("dot").alias("deg"),
-        F.sum(dot / den_b).alias("g1"),
-        F.sum(dot * dot / (den_b * den_b)).alias("g2"),
-        F.sum(dot * F.col("t_b") / den_b).alias("g3"),
+        F.count("corr").alias("deg"),
+        F.sum(corr).alias("c1"),
+        F.sum(corr * corr).alias("c2"),
+        F.sum(t_b).alias("tb1"),
+        F.sum(t_b * t_b).alias("tb2"),
         F.min("corr").alias("cmin"),
         F.max("corr").alias("cmax"),
         F.collect_list("rnk_b").alias("ranks"),
     )
-    size = F.size("ranks")
-    free_d = F.array_min(F.array_except(F.sequence(F.lit(1), size + 1), F.col("ranks")))
-    free_a = F.array_max(
-        F.array_except(F.sequence(F.greatest(F.lit(1), v - size), v), F.col("ranks"))
-    )
+    free_d = F.array_min(F.array_except(F.sequence(F.lit(1), F.size("ranks") + 1), "ranks"))
     # every item has its self row in taken, so `per` holds exactly one
     # row per valid item and the stats join can stream it (broadcasting
     # the item dimension — no second exchange)
     tmap_d = stats.select(F.col("rnk").alias("free_d"), F.col("t").alias("t_nc_max"))
-    tmap_a = stats.select(F.col("rnk").alias("free_a"), F.col("t").alias("t_nc_min"))
+    tmap_a = stats.select(F.col("rnk").alias("free_a"), F.col("t").alias("t_lo"))
     sp = (
         per.select(
-            F.col("item_a").alias("item_id"), "deg", "g1", "g2", "g3", "cmin", "cmax",
-            free_d.alias("free_d"), free_a.alias("free_a"),
+            F.col("item_a").alias("item_id"), "deg", "c1", "c2", "tb1", "tb2",
+            "cmin", "cmax", free_d.alias("free_d"),
         )
         .join(F.broadcast(stats), "item_id")
+        .withColumn("free_a", F.when(F.col("rnk") == v, v - 1).otherwise(v))
         .join(F.broadcast(tmap_d), "free_d", "left")
         .join(F.broadcast(tmap_a), "free_a", "left")
-        .fillna(0.0, ["g1", "g2", "g3"])
+        .fillna(0.0, ["c1", "c2", "tb1", "tb2"])
     )
+    t = F.col("t")
     m = F.lit(float(sc_row["v"])) - 1
-    sum1 = (F.col("n") * F.col("g1") - F.col("s") * (big_t - F.col("t"))) / F.col("den")
-    sum2 = (
-        F.col("n") * F.col("n") * F.col("g2")
-        - 2 * F.col("n") * F.col("s") * F.col("g3")
-        + F.col("s") * F.col("s") * (big_u - F.col("t") * F.col("t"))
-    ) / F.col("den2")
+    sum1 = F.col("c1") - t * (big_t - t - F.col("tb1"))
+    sum2 = F.col("c2") + t * t * (big_u - t * t - F.col("tb2"))
     mean = sum1 / m
     var = (sum2 - m * mean * mean) / (m - 1)
     return (
@@ -336,11 +332,7 @@ def _row_stats(stats: DataFrame, cg: DataFrame) -> DataFrame:
         .withColumn("m", m)
         .withColumn("mean", mean)
         .withColumn("std", F.when(m >= 2, F.sqrt(F.greatest(var, F.lit(0.0)))))
-        .withColumn(
-            "mn", F.least(F.col("cmin"), -F.col("t") * F.col("t_nc_max"))
-        )
-        .withColumn(
-            "mx", F.greatest(F.col("cmax"), -F.col("t") * F.col("t_nc_min"))
-        )
+        .withColumn("mn", F.least(F.col("cmin"), -t * F.col("t_nc_max")))
+        .withColumn("mx", F.greatest(F.col("cmax"), -t * F.col("t_lo")))
         .select("item_id", "s", "den", "t", "n", "m", "deg", "mean", "std", "mn", "mx")
     )

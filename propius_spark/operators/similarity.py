@@ -38,6 +38,11 @@ from ..plans import materialize
 from .correlation import _corr_gram, _corr_inputs, _row_stats, corr_pairs
 
 
+# get_similar_items broadcasts the item's context vector only up to
+# this many contexts, and shuffle-joins it past that
+BROADCAST_MAX_CONTEXTS = 2_000_000
+
+
 def _clears(corr: Column | str = "corr") -> Column:
     """The boundary membership test of the module docstring: the
     6-dp-ROUNDED corr against the 6-dp-ROUNDED ``cut`` column, as the
@@ -50,7 +55,6 @@ def get_similar_items(
     item_id: int,
     threshold_method: str = "std_dev",
     threshold_value: float = 2.0,
-    broadcast_max_contexts: int = 2_000_000,
 ) -> DataFrame:
     """Similar items for ONE item — exact over all valid neighbors.
 
@@ -63,7 +67,7 @@ def get_similar_items(
     Hot-item guard: the broadcast of the item's context vector is
     bounded by that item's occurrence count, which at 100× scale can
     exceed broadcast limits for a pathologically hot item. When the
-    vector exceeds `broadcast_max_contexts` rows, fall back to a plain
+    vector exceeds `BROADCAST_MAX_CONTEXTS` rows, fall back to a plain
     shuffle join on ctx_id — identical semantics, one extra exchange,
     no driver/executor broadcast OOM. The probe reads the item's
     `n_ctx` off the persisted stats table (stamped by item_stats in a
@@ -85,7 +89,7 @@ def get_similar_items(
     # so broadcasting its vector could OOM where the shuffle join just
     # runs.
     probe = me.select("n_ctx", "s", "den").first()
-    if probe is not None and probe["n_ctx"] <= broadcast_max_contexts:
+    if probe is not None and probe["n_ctx"] <= BROADCAST_MAX_CONTEXTS:
         my_cells = F.broadcast(my_cells)
     dots = (
         cells.join(my_cells, "ctx_id")
@@ -228,7 +232,7 @@ def similar_items_exact(
     # and a deep neighbor-stats subtree under the final joins measured
     # 3-10× slower than the same pipeline with a flat final plan.
     _, stats, g = _corr_inputs(cells, max_context_degree)
-    pair_cols = ("item_a", "item_b", "rnk_b", "dot", "den_b", "t_b", "corr")
+    pair_cols = ("item_a", "item_b", "rnk_b", "t_b", "corr")
     cg = materialize(_corr_gram(stats, g).select(*pair_cols))
     cuts = materialize(
         _row_stats(stats, cg).select(

@@ -313,7 +313,7 @@ def test_candidates_stddev_matches_dense(spark):
 def test_exact_build_matches_single_item_rows(spark):
     """Two independent exact algorithms for one item's published row
     must agree on every item: similar_items_exact (Gram + analytic
-    rank-gap row sums) against get_similar_items (the explicit O(V)
+    per-item row sums) against get_similar_items (the explicit O(V)
     row, numeric avg/stddev_samp). The seeded log has a hot context,
     a zero-variance item (13: once in every context), an item that
     co-occurs with every other (12: in every context, 1-3 times), a
@@ -648,14 +648,15 @@ def test_encode_contexts_replay_drops_null_refs(spark):
     assert out == {1: 0, 3: 0}
 
 
-def test_get_similar_items_hot_item_shuffle_fallback(spark):
+def test_get_similar_items_hot_item_shuffle_fallback(spark, monkeypatch):
     """VERDICT r5 nit 1: when the target item's context vector exceeds
-    broadcast_max_contexts, get_similar_items must fall back to a plain
+    BROADCAST_MAX_CONTEXTS, get_similar_items must fall back to a plain
     shuffle join with IDENTICAL results — a synthetic hot item whose
     vector is 'too big' at a threshold of 1 exercises the fallback, and
     the default threshold gives the broadcast plan to compare against."""
     from pyspark.sql import functions as F
 
+    from propius_spark.operators import similarity
     from propius_spark.operators.cells import build_cells
     from propius_spark.operators.similarity import get_similar_items
 
@@ -675,9 +676,8 @@ def test_get_similar_items_hot_item_shuffle_fallback(spark):
         return sorted((r.item_b, round(r.corr, 9)) for r in df.collect())
 
     broadcasted = get_similar_items(cells, 1, "absolute", -2.0)
-    shuffled = get_similar_items(
-        cells, 1, "absolute", -2.0, broadcast_max_contexts=1
-    )
+    monkeypatch.setattr(similarity, "BROADCAST_MAX_CONTEXTS", 1)
+    shuffled = get_similar_items(cells, 1, "absolute", -2.0)
     got = canon(shuffled)
     assert canon(broadcasted) == got
     assert len(got) > 0

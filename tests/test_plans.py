@@ -431,7 +431,9 @@ def test_similar_exact_correlates_each_pair_once(spark, sf_dir, monkeypatch):
     materialized correlated Gram, so the executed final plan holds no
     stats join on item_b (the corr expression's b side). A separately
     materialized ranked item table or a second Gram ⋈ stats → corr pass
-    fails here."""
+    fails here. The correlated Gram carries only what its consumers
+    read: the per-item pass sums corr directly, so no dot or den_b
+    column rides the pair table."""
     from propius_spark.operators import correlation, similarity
     from propius_spark.plans import materialize
 
@@ -448,6 +450,7 @@ def test_similar_exact_correlates_each_pair_once(spark, sf_dir, monkeypatch):
         build_cells(occurrences_from_lineitem(spark, sf_dir))
     )
     assert len(calls) == 4, calls
+    assert calls[2] == ["item_a", "item_b", "rnk_b", "t_b", "corr"], calls
     df.collect()
     final = df._jdf.queryExecution().executedPlan().toString()
     final = final.split("== Initial Plan ==")[0]

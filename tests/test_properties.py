@@ -205,14 +205,17 @@ tied_rows = st.lists(
 # equal-t tie between items 1 and 2 with a non-cooc item 4 on its own
 # context; two isolated single-neighbor items (V=2, both extremes =
 # the other's corr); two valid items that co-occur (no non-cooc
-# neighbor: both rank-gap extremes are null)
+# neighbor: the rank-gap min is null, the max is the cooc corr); the
+# bottom-ranked item (2, strictly smaller t) co-occurring with nobody,
+# so its row max is −t·t of rank V−1, not of its own rank V
 @example(rows=[(0, 1), (1, 1), (0, 2), (1, 2), (0, 3), (2, 4)])
 @example(rows=[(0, 1), (0, 1), (1, 2), (1, 2)])
 @example(rows=[(0, 1), (0, 1), (1, 1), (0, 2), (1, 2), (1, 2)])
+@example(rows=[(0, 1), (1, 1), (2, 2)])
 @settings(**SETTINGS)
 def test_neighbor_extremes_match_dense_bruteforce(spark, rows):
     """neighbor_stats' row extremes (cooc min/max combined with the
-    rank-gap trick over the non-co-occurring set) ≡ the dense
+    non-co-occurring min/max read off the t ranks) ≡ the dense
     definition on every random table: per valid item a, mn/mx are
     exactly min/max of corr(a, b) over ALL V−1 valid b ≠ a, and deg is
     the number of valid b ≠ a with dot(a, b) > 0. The tied strategy

@@ -370,3 +370,88 @@ def test_hot_context_aqe_skew_split_plus_cap(spark):
     no_hot = gram(thin.filter(F.col("ctx_id") != 0), stats)
     assert capped.exceptAll(no_hot).isEmpty()
     assert no_hot.exceptAll(capped).isEmpty()
+
+
+def test_exact_build_matches_single_item_rows_at_sf1(spark, tmp_path):
+    """Three exact algorithms agree on one item's published row at the
+    sf1.0 scale the correlation family is timed at, where no full
+    oracle runs (the DuckDB `similar_exact_parts` oracle forms all V²
+    pairs): similar_items_exact (correlated Gram + analytic per-item
+    sums), get_similar_items (the explicit O(V) row with numeric
+    avg/stddev_samp) and a DuckDB single-item SQL in the
+    `publish_retrieve` oracle's shape. Six items are taken in
+    xxhash64(item_id) order from the valid items of the sf1.0 replica
+    that scripts/make_scale_data.py builds; each item's (item_b,
+    6-dp corr) set must be equal on all three."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    import duckdb
+
+    from propius_spark.operators import build_cells, similarity
+    from propius_spark.operators.correlation import valid_item_stats
+    from propius_spark.sources import occurrences_from_lineitem
+
+    repo = Path(__file__).resolve().parent.parent
+    sf_dir = tmp_path / "sf1.0"
+    subprocess.run(
+        [sys.executable, str(repo / "scripts" / "make_scale_data.py"), str(sf_dir)],
+        check=True,
+    )
+    cells = build_cells(occurrences_from_lineitem(spark, str(sf_dir)))
+    sample = [
+        r.item_id
+        for r in valid_item_stats(cells)
+        .orderBy(F.xxhash64("item_id"), "item_id")
+        .select("item_id")
+        .limit(6)
+        .collect()
+    ]
+    assert len(sample) == 6
+
+    def canon(rows):
+        return {(r[0], round(r[1], 6)) for r in rows}
+
+    exact = (
+        similarity.similar_items_exact(cells, k_sigma=2.0)
+        .filter(F.col("item_a").isin(sample))
+        .select("item_a", "item_b", "corr")
+        .collect()
+    )
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{sf_dir}/lineitem.parquet'")
+    sql = """
+        WITH cells AS (SELECT l_partkey AS item, l_orderkey AS ref,
+                              COUNT(*)::DOUBLE AS cnt
+                       FROM lineitem
+                       WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL
+                       GROUP BY 1, 2),
+        nn AS (SELECT COUNT(DISTINCT ref)::DOUBLE AS n FROM cells),
+        st AS (SELECT item, SUM(cnt) AS s, SUM(cnt*cnt) AS q FROM cells GROUP BY 1),
+        vs AS (SELECT item, s, sqrt(n.n*q - s*s) AS den
+               FROM st, nn n WHERE n.n*q - s*s > 0),
+        dots AS (SELECT b.item AS item_b, SUM(a.cnt*b.cnt) AS dot
+                 FROM cells a JOIN cells b ON a.ref = b.ref AND a.item <> b.item
+                 WHERE a.item = $item GROUP BY 1),
+        pairs AS (SELECT a.item AS item_a, b.item AS item_b,
+                         (n.n*COALESCE(d.dot, 0) - a.s*b.s)/(a.den*b.den) AS corr
+                  FROM vs a JOIN vs b ON a.item <> b.item
+                  LEFT JOIN dots d ON d.item_b = b.item, nn n
+                  WHERE a.item = $item),
+        w AS (SELECT item_b, corr,
+                     AVG(corr) OVER (PARTITION BY item_a) AS mean_,
+                     STDDEV_SAMP(corr) OVER (PARTITION BY item_a) AS std_
+              FROM pairs)
+        SELECT item_b, corr FROM w
+        WHERE ROUND(corr, 6) >= ROUND(mean_ + 2.0*std_, 6)
+    """
+    for it in sample:
+        got = canon((r.item_b, r.corr) for r in exact if r.item_a == it)
+        single = canon(
+            similarity.get_similar_items(cells, it, "std_dev", 2.0).collect()
+        )
+        oracle = canon(con.execute(sql, {"item": it}).fetchall())
+        assert got == single == oracle, (it, len(got), len(single), len(oracle))
+    con.close()
+    assert exact, "sample published no rows"
