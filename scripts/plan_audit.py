@@ -1,5 +1,5 @@
-"""Suite-wide physical-plan audit: scan / exchange / Python-eval
-counts for every declared query (the round-3 practice recorded in
+"""Suite-wide physical-plan audit: scan / exchange / Python-eval /
+lambda counts for every declared query (the round-3 practice recorded in
 .claude/skills/verify/SKILL.md, as a runnable artifact).
 
 For each `queries()` entry, builds the DataFrame at $PROPIUS_ORACLE_SF_DIR
@@ -14,6 +14,10 @@ in the formatted physical plan:
   python    ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas /
             BatchEvalPython nodes — Python-worker stages; parity paths
             must stay at 0 (pinned by tests/test_plans.py)
+  lambda    `lambdafunction(` occurrences in the numbered nodes'
+            detail blocks, each node number read once — higher-order
+            functions (transform, filter, aggregate, …) are evaluated
+            element by element outside whole-stage codegen
 
 Prints one line per query plus a trailing JSON summary; `--dump DIR`
 also writes each query's formatted plan to DIR/<query>.txt (the
@@ -94,15 +98,19 @@ def main() -> int:
             # tree, once as its `(n) Name` detail header — so count the
             # headers only
             heads = "\n".join(re.findall(r"^\(\d+\) .*$", plan, re.M))
+            # detail blocks keyed by node number, so a node is read once
+            blocks = dict(re.findall(r"^\((\d+)\) (.*?)(?=^\(\d+\) |\Z)", plan, re.M | re.S))
             counts = {
                 "scans": len(re.findall(r"Scan parquet", heads)),
                 "exch": len(re.findall(r"\bExchange\b", heads)),
                 "python": len(PY_NODES.findall(heads)),
+                "lambda": sum(b.count("lambdafunction(") for b in blocks.values()),
             }
             out[name] = counts
             print(
                 f"{name:32s} scans={counts['scans']:2d} "
-                f"exch={counts['exch']:2d} python={counts['python']}"
+                f"exch={counts['exch']:2d} python={counts['python']} "
+                f"lambda={counts['lambda']}"
             )
         except Exception as e:  # noqa: BLE001 — audit keeps going
             failed[name] = f"{type(e).__name__}: {e}"

@@ -85,6 +85,45 @@ def test_jaccard_pairs_hand_computed(spark):
     assert abs(r["jaccard"] - 1 / 3) < 1e-12
 
 
+def test_jaccard_pairs_edge_corpus_matches_string_shingles(spark):
+    """Token-tuple ids at k=3 over the boundary cases: exactly 3 tokens,
+    2 tokens, null text, whitespace-only text and repeating windows.
+    Short, null and blank docs get no shingle and so no pair; repeats
+    count once (set semantics)."""
+    df = _docs(
+        spark,
+        [
+            (1, "a b c"),  # {abc}
+            (2, "a b"),  # fewer than k tokens
+            (3, None),
+            (4, " \t\n "),
+            (5, "a b a b a b"),  # {aba, bab}
+            (6, "a b a b x"),  # {aba, bab, abx}
+            (7, "x a b c"),  # {xab, abc}
+            (8, "b a b"),  # {bab}
+        ],
+    )
+    got = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in jaccard_pairs(df, k=3, threshold=0.0).collect()
+    }
+    want = {(1, 7): 1 / 2, (5, 6): 2 / 3, (5, 8): 1 / 2, (6, 8): 1 / 3}
+    assert got.keys() == want.keys()
+    for pair, j in want.items():
+        assert abs(got[pair] - j) < 1e-12, pair
+    # the same pairs from the shingle strings, as distinct sets
+    sets: dict[int, set[str]] = {}
+    for r in shingles(df, k=3).collect():
+        sets.setdefault(r["doc_id"], set()).add(r["shingle"])
+    ref = {
+        (a, b): len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+        for a in sets
+        for b in sets
+        if a < b and sets[a] & sets[b]
+    }
+    assert ref == want
+
+
 def test_minhash_signature_shape_and_identity(spark):
     df = _docs(spark, [(1, "a b c d e"), (2, "a b c d e"), (3, "p q r s t")])
     sig = minhash_signatures(shingle_ids(shingles(df, k=3)), num_perm=8)

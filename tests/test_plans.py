@@ -568,6 +568,38 @@ def test_lsh_buckets_map_side(spark, sf_dir):
     assert "ReadSchema: struct<vec_id:bigint,embedding:array<float>>" in plan
 
 
+def test_kgram_window_tokenizes_once_after_fan_out(spark, sf_dir):
+    """shingles and jaccard_pairs read one k-gram window: the documents
+    are tokenized once (one `split(`, in a Project, never a Filter),
+    above the fan_out Exchange, and no per-position lambda builds the
+    shingles. jaccard_pairs hashes token tuples and builds no shingle
+    string. A `size(tokens) >= k` filter is what Catalyst pushes below
+    the exchange, tokenizing every doc a second time in the single task
+    that reads the file."""
+    import re
+
+    from propius_spark.operators import jaccard_pairs, shingles
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    for name, df in (("shingles", shingles(docs, 3)), ("jaccard", jaccard_pairs(docs))):
+        plan = _plan(df)
+        # detail blocks by node number (a persisted subtree is
+        # reprinted in the tree under each consumer, detailed once)
+        blocks = {
+            int(n): b
+            for n, b in re.findall(r"^\((\d+)\) (.*?)(?=^\(\d+\) |\Z)", plan, re.M | re.S)
+        }
+        tok = [n for n, b in blocks.items() if "split(" in b]
+        assert len(tok) == 1 and blocks[tok[0]].count("split(") == 1, (name, tok)
+        assert not blocks[tok[0]].startswith("Filter"), name
+        fan = [n for n, b in blocks.items() if "REPARTITION_BY_NUM" in b]
+        # nodes are numbered children first: the tokenizing node sits
+        # above the one fan_out exchange
+        assert len(fan) == 1 and tok[0] > fan[0], (name, tok, fan)
+        assert "transform(" not in plan, name
+    assert "concat_ws" not in plan
+
+
 def test_pipeline_prepare_two_scans_no_text_shuffle(spark, sf_dir):
     """The composed prepare pipeline's plan contract: exactly two
     corpus scans (stats fused into one, chunking in the other — the
