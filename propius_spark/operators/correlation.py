@@ -37,10 +37,12 @@ Scale design notes (the parts that survive a 1000-executor / 100 TB run):
   bottom rank's t; min from a sort-free rank-gap trick) come from one
   partial-aggregated per-item pass plus two global scalars T = Σt_j,
   U = Σt_j²: no I² materialization. See `neighbor_stats`.
-- One item table, one correlated pair table: `valid_item_stats` carries
-  the rank the per-item pass reads, and `similar_items_exact` builds and
-  materializes the correlated Gram (`_corr_gram`, the only pair-side
-  Pearson formula) once for all its consumers.
+- One item table, one Pearson: `valid_item_stats` carries the rank the
+  per-item pass reads, and `_corr_gram` is the engine's only Pearson
+  formula. Its four callers are `corr_pairs`, `neighbor_stats`,
+  `similar_items_exact` (which materializes the correlated Gram once
+  for all its consumers) and `get_similar_items` (a Gram table with
+  one item_a).
 - All post-aggregate arithmetic is done in double (cast once) so the
   engine and the DuckDB oracle evaluate bit-identical IEEE expressions,
   and so 100 TB-scale values cannot silently wrap 64-bit ints.
@@ -167,8 +169,15 @@ def _corr_gram(stats: DataFrame, g: DataFrame) -> DataFrame:
     """The Gram pairs with their correlation — (item_a, item_b, dot, n,
     s_a, den_a, s_b, den_b, t_b, rnk_b, corr) — through two broadcast
     stats joins (item dimension ≪ pair table). Every stats row carries
-    the context count n, so n rides the a side. `similar_items_exact`
-    materializes its (item_a, item_b, rnk_b, t_b, corr) once."""
+    the context count n, so n rides the a side. A pair whose item_a or
+    item_b has no stats row (an invalid item) drops out of the inner
+    joins.
+
+    The engine's only Pearson, with four callers: `corr_pairs`,
+    `neighbor_stats`, `similar_items_exact` (which materializes its
+    (item_a, item_b, rnk_b, t_b, corr) once) and `get_similar_items`
+    (one item_a against every other valid item, dot 0.0 where the
+    pair shares no context)."""
     a = stats.select(
         F.col("item_id").alias("item_a"),
         "n",

@@ -56,13 +56,16 @@ def get_similar_items(
     threshold_method: str = "std_dev",
     threshold_value: float = 2.0,
 ) -> DataFrame:
-    """Similar items for ONE item — exact over all valid neighbors.
+    """Similar items for ONE item — exact over all valid neighbors: the
+    one-item case of `_corr_gram`.
 
-    O(V) work for one item: the full correlation row is one broadcast
-    join of the item's context vector against every other item's stats,
-    with d=0 (no shared context) pairs falling out of a left join —
-    never an I×I matrix. Matches propius/similarity.py:133-167 semantics
-    including NaN-skip (invalid items are excluded up front).
+    O(V) work for one item: the row is a Gram table with the single
+    item_a = `item_id` against every other valid item, its dot from one
+    broadcast join of the item's context vector (0.0 where the two
+    share no context) — never an I×I matrix — scored by `_corr_gram`,
+    the engine's only Pearson. Matches propius/similarity.py:133-167
+    semantics including NaN-skip: an invalid or absent item has no
+    stats row, so `_corr_gram`'s a-side join leaves the row empty.
 
     Hot-item guard: the broadcast of the item's context vector is
     bounded by that item's occurrence count, which at 100× scale can
@@ -76,50 +79,29 @@ def get_similar_items(
     Returns (item_b, corr) sorted descending.
     """
     cells, stats, _ = _corr_inputs(cells)
-    me = stats.filter(F.col("item_id") == item_id)
     my_cells = cells.filter(F.col("item_id") == item_id).select(
         "ctx_id", F.col("cnt").alias("cnt_a")
     )
-    # one probe of the small persisted stats table: the item's context
-    # count picks the join strategy, and its s and den ride the plan as
-    # literals (no broadcast-build job for two doubles). An item absent
-    # from stats (invalid: den2 ≤ 0) probes None. Its result is empty
-    # either way (`me` is empty), but the strategy stays conservative:
-    # an omnipresent constant-count item has cells in every context,
-    # so broadcasting its vector could OOM where the shuffle join just
-    # runs.
-    probe = me.select("n_ctx", "s", "den").first()
+    # an item absent from stats (invalid: den2 ≤ 0) probes None and
+    # keeps the shuffle join: an omnipresent constant-count item has
+    # cells in every context, so broadcasting its vector could OOM
+    probe = stats.filter(F.col("item_id") == item_id).select("n_ctx").first()
     if probe is not None and probe["n_ctx"] <= BROADCAST_MAX_CONTEXTS:
         my_cells = F.broadcast(my_cells)
-    dots = (
-        cells.join(my_cells, "ctx_id")
+    # each valid item adds a 0.0 product, so a pair with no shared
+    # context sums to dot 0.0 in the same aggregate (no outer join);
+    # co-occurring invalid items drop out in `_corr_gram`'s b-side join
+    prods = cells.join(my_cells, "ctx_id").select(
+        "item_id", (F.col("cnt") * F.col("cnt_a")).alias("p")
+    )
+    g = (
+        prods.unionByName(stats.select("item_id", F.lit(0.0).alias("p")))
         .filter(F.col("item_id") != item_id)
-        .groupBy("item_id")
-        .agg(F.sum(F.col("cnt") * F.col("cnt_a")).cast("double").alias("dot"))
+        .groupBy(F.col("item_id").alias("item_b"))
+        .agg(F.sum("p").cast("double").alias("dot"))
+        .withColumn("item_a", F.lit(item_id))
     )
-    row = stats.filter(F.col("item_id") != item_id).join(
-        dots, "item_id", "left"
-    ).fillna(0.0, ["dot"])
-    if probe is None:
-        # invalid/absent item: crossJoin the EMPTY me so the result is
-        # empty by construction (a literal s_a/den_a would fabricate
-        # rows here)
-        row = row.crossJoin(
-            F.broadcast(
-                me.select(F.col("s").alias("s_a"), F.col("den").alias("den_a"))
-            )
-        )
-    else:
-        row = row.withColumn("s_a", F.lit(float(probe["s"]))).withColumn(
-            "den_a", F.lit(float(probe["den"]))
-        )
-    row = row.select(
-        F.col("item_id").alias("item_b"),
-        (
-            (F.col("n") * F.col("dot") - F.col("s_a") * F.col("s"))
-            / (F.col("den_a") * F.col("den"))
-        ).alias("corr"),
-    )
+    row = _corr_gram(stats, g).select("item_b", "corr")
     if threshold_method == "std_dev":
         # row is consumed twice here (the cut aggregate and the
         # filtered output) and is item-cardinality — materialize it so

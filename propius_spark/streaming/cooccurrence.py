@@ -13,8 +13,10 @@ Scale notes (100 TB target):
   store partitioned by grouping key — the same hash partitioning the
   batch build uses, so state is evenly spread unless contexts are
   globally hot (the same skew the batch Gram join mitigates via AQE).
-- `availableNow` trigger processes a backlog as bounded micro-batches
-  (catch-up reprocessing); continuous micro-batches serve live tailing.
+- Every runner uses the `availableNow` trigger: it processes the
+  backlog as bounded micro-batches and then stops, so
+  `awaitTermination` returns. Tailing new files is a re-run over the
+  same checkpoint, which reads only the files it has not seen.
 - Correlation over the maintained cells stays a *batch* job on each
   trigger (foreachBatch) — all-pairs Pearson is not incrementally
   maintainable without O(I²) state, so the engine recomputes pairs from
@@ -66,7 +68,6 @@ def start_cells_query(
     cells: DataFrame,
     checkpoint_dir: str,
     query_name: str = "propius_cells",
-    available_now: bool = True,
     sink_path: str | None = None,
 ) -> StreamingQuery:
     """Run the streaming cell aggregation (complete mode — the
@@ -111,9 +112,9 @@ def start_cells_query(
                 )
 
         return start_complete_query(
-            cells, checkpoint_dir, query_name, available_now, foreach_batch=_dump
+            cells, checkpoint_dir, query_name, foreach_batch=_dump
         )
-    return start_complete_query(cells, checkpoint_dir, query_name, available_now)
+    return start_complete_query(cells, checkpoint_dir, query_name)
 
 
 def start_model_refresh(
@@ -121,10 +122,9 @@ def start_model_refresh(
     out_dir: str,
     checkpoint_dir: str,
     k_sigma: float = 2.0,
-    available_now: bool = True,
     query_name: str = "propius_model_refresh",
 ) -> StreamingQuery:
-    """Continuous model publication: stream → published store.
+    """Incremental model publication: stream → published store.
 
     The streaming cell aggregate (complete mode — the full model state
     each trigger) feeds foreachBatch, which recomputes the EXACT
@@ -170,7 +170,7 @@ def start_model_refresh(
             release_materialized_since(spark, before)
 
     return start_complete_query(
-        cells, checkpoint_dir, query_name, available_now, foreach_batch=_refresh
+        cells, checkpoint_dir, query_name, foreach_batch=_refresh
     )
 
 

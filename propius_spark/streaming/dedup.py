@@ -71,7 +71,6 @@ def start_dedup_query(
     deduped: DataFrame,
     checkpoint_dir: str,
     query_name: str = "propius_dedup",
-    available_now: bool = True,
     sink_path: str | None = None,
 ):
     """Run the ingest-dedup stream: every surviving first-arrival is
@@ -81,5 +80,5 @@ def start_dedup_query(
     from .writers import start_append_query
 
     return start_append_query(
-        deduped, checkpoint_dir, query_name, available_now, sink_path
+        deduped, checkpoint_dir, query_name, sink_path
     )

@@ -142,7 +142,6 @@ def start_sessions_query(
     sessions: DataFrame,
     checkpoint_dir: str,
     query_name: str = "propius_sessions",
-    available_now: bool = True,
     sink_path: str | None = None,
 ) -> StreamingQuery:
     """Run the closed-session stream: each closed session is final, so
@@ -152,5 +151,5 @@ def start_sessions_query(
     from .writers import start_append_query
 
     return start_append_query(
-        sessions, checkpoint_dir, query_name, available_now, sink_path
+        sessions, checkpoint_dir, query_name, sink_path
     )

@@ -16,7 +16,6 @@ def start_append_query(
     df: DataFrame,
     checkpoint_dir: str,
     query_name: str,
-    available_now: bool = True,
     sink_path: str | None = None,
 ) -> StreamingQuery:
     """Append-mode runner: every emitted row is final.
@@ -32,16 +31,13 @@ def start_append_query(
         writer = writer.format("parquet").option("path", sink_path)
     else:
         writer = writer.format("memory")
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def start_complete_query(
     df: DataFrame,
     checkpoint_dir: str,
     query_name: str,
-    available_now: bool = True,
     foreach_batch=None,
 ) -> StreamingQuery:
     """Complete-mode runner (the aggregate IS the whole state each
@@ -59,6 +55,4 @@ def start_complete_query(
     writer = writer.queryName(query_name).option(
         "checkpointLocation", checkpoint_dir
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()

@@ -162,6 +162,21 @@ def test_zero_variance_items_dropped(spark):
     assert [(r["item_id"], r["t"]) for r in by_rank] == [(4, 3.0), (2, 1.0), (3, 1.0)]
 
 
+def test_get_similar_items_invalid_or_absent_item_is_empty(spark):
+    """A zero-variance item (the reference's NaN row) and an id absent
+    from the log have no stats row, so `_corr_gram`'s a-side join
+    leaves their row empty under both threshold methods — no branch
+    special-cases them. A valid item of the same log is not empty."""
+    from propius_spark.operators.similarity import get_similar_items
+
+    rows = [("r1", 1), ("r2", 1), ("r1", 2), ("r2", 3), ("r1", 4), ("r1", 4), ("r2", 4)]
+    cells = build_cells(spark.createDataFrame(rows, "reference_id string, item_id long"))
+    for method, value in (("std_dev", 2.0), ("absolute", -2.0)):
+        assert get_similar_items(cells, 1, method, value).collect() == [], method
+        assert get_similar_items(cells, 77, method, value).collect() == [], method
+    assert {r.item_b for r in get_similar_items(cells, 2, "absolute", -2.0).collect()} == {3, 4}
+
+
 def test_corr_pairs_no_valid_items(spark):
     """Degenerate corpus where EVERY item has zero variance (each item
     in both contexts with cnt=1 → den2 = 0): valid stats is EMPTY.

@@ -57,6 +57,34 @@ def _events_df(spark):
     return spark.createDataFrame(EVENTS, "user_id long, ts timestamp")
 
 
+def _stream_landed_batches(spark, tmp_path, batches, watermark, query_name):
+    """Land each batch of (user, minute) events as one file, run the
+    session stream (gap 30m) one file per micro-batch, and return the
+    emitted (user, start_us, end_us, n) tuples sorted."""
+    from propius_spark.streaming import sessionize_stream, start_sessions_query
+
+    land = str(tmp_path / "events")
+    for rows in batches:
+        spark.createDataFrame(
+            [(u, _min(m)) for u, m in rows], "user_id long, ts timestamp"
+        ).coalesce(1).write.mode("append").parquet(land)
+    stream = (
+        spark.readStream.schema("user_id long, ts timestamp")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(land)
+    )
+    q = start_sessions_query(
+        sessionize_stream(stream, gap_minutes=30, watermark=watermark),
+        str(tmp_path / "ck"),
+        query_name=query_name,
+    )
+    q.awaitTermination()
+    return sorted(
+        (r.user_id, r.session_start_us, r.session_end_us, r.n_events)
+        for r in spark.table(query_name).collect()
+    )
+
+
 def test_sessionize_batch_hand_computed(spark):
     got = {
         (r.user_id, r.session_start_us, r.session_end_us, r.n_events)
@@ -143,37 +171,14 @@ def test_sessionize_stream_late_events_merge_and_never_close_early(spark, tmp_pa
     user 2 at 110' opens a separate older island without touching the
     open [160'] session. Batch 3: a flush event at 300' pushes the
     watermark to 240', finalizing everything except the flush itself."""
-    from propius_spark.streaming import sessionize_stream, start_sessions_query
-
-    land = str(tmp_path / "events")
-    ckpt = str(tmp_path / "ckpt")
-
-    def _write(rows):
-        spark.createDataFrame(
-            [(u, _min(m)) for u, m in rows], "user_id long, ts timestamp"
-        ).coalesce(1).write.mode("append").parquet(land)
-
-    _write([(1, 100), (1, 160), (2, 160)])
-    _write([(1, 130), (2, 110)])
-    _write([(9, 300)])
-
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(land)
+    emitted = _stream_landed_batches(
+        spark,
+        tmp_path,
+        [[(1, 100), (1, 160), (2, 160)], [(1, 130), (2, 110)], [(9, 300)]],
+        "60 minutes",
+        "t_sessions_late",
     )
-    q = start_sessions_query(
-        sessionize_stream(stream, gap_minutes=30, watermark="60 minutes"),
-        ckpt,
-        query_name="t_sessions_late",
-    )
-    q.awaitTermination()
-
-    emitted = {
-        (r.user_id, r.session_start_us, r.session_end_us, r.n_events)
-        for r in spark.table("t_sessions_late").collect()
-    }
-    assert emitted == {
+    assert set(emitted) == {
         (1, _us(100), _us(160), 3),
         (2, _us(110), _us(110), 1),
         (2, _us(160), _us(160), 1),
@@ -263,42 +268,42 @@ def test_sessionize_stream_boundary_island_closes_exactly_once(spark, tmp_path):
     watermark is exactly 130' = 100'+30'; batch 2 data at 135' makes
     u1's close_sessions run AT the boundary; batch 3's 130' event
     (== watermark) is dropped by the engine; batch 4 flushes."""
-    from propius_spark.streaming import sessionize_stream, start_sessions_query
-
-    land = str(tmp_path / "events")
-
-    def _write(rows):
-        spark.createDataFrame(
-            [(u, _min(m)) for u, m in rows], "user_id long, ts timestamp"
-        ).coalesce(1).write.mode("append").parquet(land)
-
-    _write([(1, 100), (9, 140)])
-    _write([(1, 135)])
-    _write([(1, 130)])  # == watermark: dropped before the operator
-    _write([(9, 300)])
-
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(land)
-    )
-    q = start_sessions_query(
-        sessionize_stream(stream, gap_minutes=30, watermark="10 minutes"),
-        str(tmp_path / "ck"),
-        query_name="t_sessions_boundary",
-    )
-    q.awaitTermination()
-    emitted = sorted(
-        (r.user_id, r.session_start_us, r.session_end_us, r.n_events)
-        for r in spark.table("t_sessions_boundary").collect()
-        if r.user_id == 1
+    emitted = _stream_landed_batches(
+        spark,
+        tmp_path,
+        # 130' == watermark: dropped before the operator
+        [[(1, 100), (9, 140)], [(1, 135)], [(1, 130)], [(9, 300)]],
+        "10 minutes",
+        "t_sessions_boundary",
     )
     # [100'] and [135'] are separate sessions (135-100 > gap; the 130'
     # bridge was watermark-dropped), each emitted exactly once
-    assert emitted == [
+    assert [e for e in emitted if e[0] == 1] == [
         (1, _us(100), _us(100), 1),
         (1, _us(135), _us(135), 1),
     ]
+
+
+def test_sessionize_stream_emitted_sessions_stay_final(spark, tmp_path):
+    """An emitted session is final: no later event may open a second
+    session of the same user within `gap` of it. gap=30m,
+    watermark=10m: batch 1 (u1@100', u9@150') moves the watermark to
+    140', batch 2 (u9@151') fires u1's timeout (100' + 30' < 141') and
+    emits [100'], batch 3's u1@125' sits below the watermark and is
+    dropped, batch 4 flushes. A session-window operator that keeps the
+    125' event emits it as a second u1 session 25' after the first."""
+    emitted = _stream_landed_batches(
+        spark,
+        tmp_path,
+        # 125' is below the watermark: dropped
+        [[(1, 100), (9, 150)], [(9, 151)], [(1, 125)], [(9, 400)]],
+        "10 minutes",
+        "t_sessions_final",
+    )
+    assert [e for e in emitted if e[0] == 1] == [(1, _us(100), _us(100), 1)]
+    for prev, nxt in zip(emitted, emitted[1:]):
+        if prev[0] == nxt[0]:
+            assert nxt[1] - prev[2] > 30 * US, (prev, nxt)
 
 
 def test_sessionize_excludes_null_timestamps(spark):
