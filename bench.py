@@ -17,7 +17,8 @@ Everything else goes to the SIDECAR file next to this script:
 `shuffle_mb`, `spill_mb`, `gc_s`, `driver_gap_s`, `input_records`:
 `perfbench.tracing.rollup` over the query's span, counting only the
 stages that ran inside it; plus `compiles`, the generated classes
-Spark compiled during the span), every pass's raw per-query records
+Spark compiled during the span, and `py_cpu_s`, the Python process's
+CPU over the span), every pass's raw per-query records
 (`raw`), per-pass totals, the secondary pass,
 `plans.compaction_stats`, host CPU/disk canaries and failures. The
 SIDECAR is the tracked ``BENCH_full.json`` only for a full-suite run
@@ -276,11 +277,13 @@ def _time_query(spark, tracer, fn, sf_dir: str, name: str) -> dict:
     `driver_gap_s`, input records), counting only the stages that ran
     inside the span, plus `compiles`: the generated classes Spark
     compiled during the span (its codegen cache missed), driver and
-    executors alike in this single-JVM session."""
+    executors alike in this single-JVM session; and `py_cpu_s`: the
+    driver's Python-process CPU (user + system) over the span."""
     from propius_spark.session import clear_materialized
 
     compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     compiled = compiles().getCount()
+    py0 = os.times()
     error = None
     try:
         with tracer.span(name):
@@ -289,11 +292,13 @@ def _time_query(spark, tracer, fn, sf_dir: str, name: str) -> dict:
         # one flaky query must not discard a whole completed pass:
         # record the failure, keep the rest of the suite
         error = f"{type(e).__name__}: {e}"[:300]
+    py1 = os.times()
     prof = rollup([tracer.spans[-1]], tracer.jobs, tracer.stages)[name]
     wall = prof.pop("wall_s")
     rec: dict = {"sec": None, "error": error} if error else {"sec": round(wall, 3)}
     rec.update((k, round(v, 3)) for k, v in prof.items())
     rec["compiles"] = compiles().getCount() - compiled
+    rec["py_cpu_s"] = round(py1.user + py1.system - py0.user - py0.system, 3)
     # release materialized intermediates so one pipeline's blocks don't
     # skew the next query's timing, and nudge the JVM to collect them
     # now — long multi-query sessions otherwise hit multi-second GC

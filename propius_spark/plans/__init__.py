@@ -7,6 +7,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from propius_spark.session import persistent_rdd_ids
+
 # target checkpoint-block size for materialize's compaction pass
 _CHECKPOINT_BLOCK_MB = 128
 
@@ -14,8 +16,10 @@ _CHECKPOINT_BLOCK_MB = 128
 # read this to prove the path engaged; tests pin the gate-SF no-op).
 # no_block_info counts calls where NO size measurement was possible
 # (neither stored blocks nor checkpoint files) — distinct from
-# "skipped" (measured, under the engage margin) so durable-mode scale
-# records can tell "never eligible" from "couldn't measure".
+# "skipped" so durable-mode scale records can tell "never eligible"
+# from "couldn't measure". "skipped" counts both calls measured under
+# the engage margin and calls decided by the partition count alone
+# (at most 2× defaultParallelism), which make no sizing read.
 compaction_stats = {"engaged": 0, "skipped": 0, "no_block_info": 0}
 
 
@@ -116,6 +120,13 @@ def materialize(df: DataFrame, compact: bool = True) -> DataFrame:
     ``True`` (default) = the size heuristic decides; ``False`` = never
     compact (the cells posture).
 
+    Sizing order: ``compact=False`` checkpoints and returns. Otherwise
+    the call snapshots the persistent-RDD ids (and lists the durable
+    checkpoint dir) before it checkpoints; a result of at most twice
+    ``defaultParallelism`` partitions, which can never compact (the
+    target is at least ``defaultParallelism``), returns as skipped
+    before the sizing read (~24 ms of driver CPU).
+
     Sizing is mode-aware: localCheckpoint mode measures the stored
     blocks (block-manager RDDInfo); reliable-checkpoint mode measures
     the checkpoint FILES just written under ``sc.getCheckpointDir()``
@@ -129,21 +140,27 @@ def materialize(df: DataFrame, compact: bool = True) -> DataFrame:
     spark = df.sparkSession
     sc = spark.sparkContext
     reliable = sc.getCheckpointDir() is not None
-    before = {int(k) for k in sc._jsc.getPersistentRDDs().keys()}
-    # the FS listing is only needed when this call may compact — the
-    # compact=False cells sites must not pay a checkpoint-dir list on
-    # every call in durable mode
-    before_dirs = _checkpoint_rdd_dirs(sc) if (reliable and compact) else None
-    first = _checkpoint_once(df, sc)
     if not compact:
-        return first
+        return _checkpoint_once(df, reliable)
+    before = persistent_rdd_ids(spark)
+    # the FS listing must precede the checkpoint it diffs against
+    before_dirs = _checkpoint_rdd_dirs(sc) if reliable else None
+    first = _checkpoint_once(df, reliable)
     # safe here: `first` is LogicalRDD-backed (no shuffles to finalize,
     # nothing recomputes — the AQE hazard in fan_out's docstring is
     # about un-executed upstream exchanges)
     nparts = first.rdd.getNumPartitions()
-    new_ids = {
-        int(k) for k in sc._jsc.getPersistentRDDs().keys()
-    } - before
+    # floor at defaultParallelism: compaction exists to cut block-store
+    # ROUNDS (blocks ≫ cores), never to cut a small table below
+    # one-block-per-core — downstream map stages over the checkpoint
+    # keep their parallelism, and at the gate SFs (32 shuffle
+    # partitions, 32 cores) the 2× engage margin is then never met, so
+    # gate plans are bit-identical to the pre-compaction behavior
+    floor = sc.defaultParallelism
+    if nparts <= 2 * floor:
+        compaction_stats["skipped"] += 1
+        return first
+    new_ids = persistent_rdd_ids(spark) - before
     if reliable:
         stored = _checkpoint_fs_bytes(sc, before_dirs)
     else:
@@ -153,20 +170,12 @@ def materialize(df: DataFrame, compact: bool = True) -> DataFrame:
         # "skipped" so scale-run records can tell the modes apart
         compaction_stats["no_block_info"] += 1
         return first
-    # floor at defaultParallelism: compaction exists to cut block-store
-    # ROUNDS (blocks ≫ cores), never to cut a small table below
-    # one-block-per-core — downstream map stages over the checkpoint
-    # keep their parallelism, and at the gate SFs (32 shuffle
-    # partitions, 32 cores) the 2× engage margin is then never met, so
-    # gate plans are bit-identical to the pre-compaction behavior
-    n_target = max(
-        sc.defaultParallelism, math.ceil(stored / (_CHECKPOINT_BLOCK_MB << 20))
-    )
+    n_target = max(floor, math.ceil(stored / (_CHECKPOINT_BLOCK_MB << 20)))
     if nparts <= 2 * n_target:
         compaction_stats["skipped"] += 1
         return first
     compaction_stats["engaged"] += 1
-    compacted = _checkpoint_once(first.coalesce(n_target), sc)
+    compacted = _checkpoint_once(first.coalesce(n_target), reliable)
     # release the fine-grained blocks — `first` is internal to this
     # call and never escapes, so dropping its (lineage-truncated,
     # unrecomputable) blocks is safe. In reliable mode there are no
@@ -175,20 +184,19 @@ def materialize(df: DataFrame, compact: bool = True) -> DataFrame:
     # (cleanCheckpoints=true, module docstring) — never deleted by
     # hand here.
     jmap = sc._jsc.getPersistentRDDs()
-    for k in list(jmap.keys()):
-        if int(k) in new_ids:
-            jmap[k].unpersist()
+    for k in new_ids:
+        jmap[k].unpersist()
     return compacted
 
 
-def _checkpoint_once(df: DataFrame, sc) -> DataFrame:
+def _checkpoint_once(df: DataFrame, reliable: bool) -> DataFrame:
     """One eager checkpoint: reliable ``checkpoint()`` when a
     checkpoint dir is configured (persist-wrapped — eager checkpoint
     runs one job to compute and a SECOND to write the files, and
     unpersisted the second job recomputes every partition from
     scratch, per Spark's own RDD.checkpoint docs), else
     ``localCheckpoint()``."""
-    if sc.getCheckpointDir() is not None:
+    if reliable:
         df.persist()
         try:
             return df.checkpoint(eager=True)

@@ -13,6 +13,19 @@ the conf line). The cache belongs to the JVM, not to a session, so it
 is a static conf: the size takes effect only when `get_spark` creates
 the JVM's first session, and a running session keeps the cache it
 started with.
+
+PySpark's Python call-site capture
+(`spark.python.sql.dataFrameDebugging.enabled`) is off: with it on,
+every `F.*`/Column/DataFrame call adds Py4J round trips (numbers at
+the conf line). It drops only the Python call site from the DataFrame
+context of analysis errors, which no test reads. Like the codegen
+cache it can come too late: PySpark reads the flag once, at the
+process's first DataFrame API call, so it holds only if that call ran
+on a session built here.
+
+The persistence helpers read `getPersistentRDDs()` through one Java
+array: a Py4J iterator ends in a NoSuchElementException, which
+PySpark's exception hook converts at ~18 ms of CPU per id snapshot.
 """
 
 from __future__ import annotations
@@ -22,6 +35,11 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _rdd_ids(jmap) -> set[int]:
+    """A `getPersistentRDDs()` map's keys (module docstring)."""
+    return {int(k) for k in jmap.keySet().toArray()}
+
+
 def clear_materialized(spark: SparkSession) -> int:
     """Unpersist every persistent RDD (the engine's materialized
     intermediate tables, see plans.materialize).
@@ -29,22 +47,18 @@ def clear_materialized(spark: SparkSession) -> int:
     the same session (measured 8.8 s → 127 s on an unrelated query at
     sf0.1); call this between logically-separate pipeline runs.
     Returns the number of RDDs released."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    rdds = list(jmap.values())
-    for rdd in rdds:
-        rdd.unpersist()
+    released = release_materialized_since(spark, set())
     # DataFrame-level caches (plans.persist_big) live in the
     # CacheManager, not getPersistentRDDs — clear those too
     spark.catalog.clearCache()
-    return len(rdds)
+    return released
 
 
 def persistent_rdd_ids(spark: SparkSession) -> set[int]:
     """Snapshot the ids of currently-persisted RDDs — pair with
     `release_materialized_since` to scope a release to one pipeline's
     own intermediates."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    return {int(k) for k in jmap.keys()}
+    return _rdd_ids(spark.sparkContext._jsc.getPersistentRDDs())
 
 
 def release_materialized_since(spark: SparkSession, before: set[int]) -> int:
@@ -69,12 +83,10 @@ def release_materialized_since(spark: SparkSession, before: set[int]) -> int:
     release windows or track and unpersist their own DataFrame
     handles explicitly instead of using this diff."""
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    released = 0
-    for k in list(jmap.keys()):
-        if int(k) not in before:
-            jmap[k].unpersist()
-            released += 1
-    return released
+    new_ids = _rdd_ids(jmap) - before
+    for k in new_ids:
+        jmap[k].unpersist()
+    return len(new_ids)
 
 
 def driver_memory() -> str:
@@ -131,6 +143,13 @@ def get_spark(app_name: str = "propius_spark", cpus: int | None = None) -> Spark
         # a repeat build compiles 0 classes
         # (tests/test_plans.py::test_repeat_exact_build_compiles_no_code)
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # no Python call-site capture (module docstring): F.col took
+        # 13 Py4J commands and 1.15 ms of CPU with it, 3 and 0.35 ms
+        # without. With this, the array reads above and
+        # plans.materialize's early return, a warm perfbench op sends
+        # a third of the commands it sent (build_skewed 4477 → 1486,
+        # dedup_chains 3973 → 1205)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .getOrCreate()
     )
     # PROPIUS_CHECKPOINT_DIR flips plans.materialize into durable

@@ -319,6 +319,63 @@ def test_materialize_compaction_durable_mode_matches_local(spark, tmp_path):
     clear_materialized(spark)
 
 
+def test_persistence_helpers_bridge_traffic(spark, monkeypatch):
+    """Py4J commands per call stay bounded: call-site capture is off
+    (`F.col` sends 3 commands, 13 with it on), persistent-RDD ids are
+    read through one Java array (a Py4J iterator ends in a
+    NoSuchElementException that PySpark converts with dozens more
+    commands), and `materialize` makes no sizing read when the
+    partition count alone rules compaction out."""
+    import py4j.clientserver
+    import py4j.protocol
+    import pyspark.errors.exceptions.captured as captured
+
+    from propius_spark.plans import materialize
+    from propius_spark.session import (
+        clear_materialized,
+        persistent_rdd_ids,
+        release_materialized_since,
+    )
+
+    sent, converted = [0], [0]
+    send = py4j.clientserver.ClientServerConnection.send_command
+    convert = captured.convert_exception
+
+    def counting_send(self, command):
+        # leave out py4j's deletes of garbage-collected Java handles:
+        # they free objects made earlier, whenever Python's GC runs
+        if not command.startswith(py4j.protocol.MEMORY_COMMAND_NAME):
+            sent[0] += 1
+        return send(self, command)
+
+    def counting_convert(e):
+        converted[0] += 1
+        return convert(e)
+
+    monkeypatch.setattr(
+        py4j.clientserver.ClientServerConnection, "send_command", counting_send
+    )
+    monkeypatch.setattr(captured, "convert_exception", counting_convert)
+
+    def commands(fn, *args, **kwargs) -> int:
+        n = sent[0]
+        fn(*args, **kwargs)
+        return sent[0] - n
+
+    clear_materialized(spark)
+    tiny = spark.range(100).groupBy((F.col("id") % 3).alias("k")).count()
+    before = persistent_rdd_ids(spark)
+    for compact in (True, False):
+        n = commands(materialize, tiny, compact=compact)
+        assert n <= 40, (compact, n)
+    assert release_materialized_since(spark, before) == 2
+    materialize(tiny, compact=False)
+    assert commands(clear_materialized, spark) <= 10
+    assert not persistent_rdd_ids(spark)
+    assert commands(F.col, "x") <= 3
+    assert converted[0] == 0
+
+
 def test_new_text_ops_plan_shape(spark, sf_dir):
     """Round-2 text/mixing ops keep their scale posture: decontaminate
     broadcasts the benchmark side (no corpus-side shuffle join);
